@@ -18,19 +18,23 @@ materialized round and is referenced by no returned plan.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 
 def release(df: DataFrame | None) -> None:
     """Best-effort immediate unpersist of a localCheckpoint'ed frame's
-    blocks. No-op (never raises) when ``df`` is None, not a checkpoint,
-    or the JVM handle is unavailable — the worst case is the old
-    behavior (blocks linger until GC + ContextCleaner)."""
-    if df is None:
+    blocks. No-op when ``df`` is None, not a checkpoint, or the JVM
+    handle is unavailable (no ``_jdf``, as on a Spark Connect frame, or a
+    py4j error from a stopped context or gateway) — the worst case is the
+    old behavior (blocks linger until GC + ContextCleaner). Any other
+    error propagates."""
+    jdf = getattr(df, "_jdf", None)
+    if jdf is None:
         return
     try:
-        analyzed = df._jdf.queryExecution().analyzed()
+        analyzed = jdf.queryExecution().analyzed()
         if analyzed.getClass().getSimpleName() == "LogicalRDD":
             analyzed.rdd().unpersist(False)
-    except Exception:
+    except Py4JError:
         pass

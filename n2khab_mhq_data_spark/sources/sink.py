@@ -14,23 +14,40 @@ sidecar, so level order survives a write/read cycle.
 Scale design (SURVEY.md §7.4.5): a global ``orderBy`` + single file is
 inherently serial at the last step. We keep writes parallel by
 range-partitioning on the sort keys (``repartitionByRange`` + per-partition
-sort), writing N part files that are *globally* ordered by construction,
-then concatenating sequentially on the driver — an O(bytes) streamed merge,
-no re-sort. The content hash (md5 over the ordered TSV bytes) is identical
-regardless of N. ``write_csv2`` (S9) shares the same machinery — no
-``coalesce(1)`` anywhere."""
+sort, partition count left to AQE), writing part files that are *globally*
+ordered by construction, then concatenating sequentially on the driver — an
+O(bytes) streamed merge, no re-sort. The content hash (md5 over the ordered
+TSV bytes) is identical regardless of the part-file count. ``write_csv2``
+(S9) shares the same machinery — no ``coalesce(1)`` anywhere.
+
+Single pass: the input plan runs once, in the write itself. ``write_vc``'s
+total-order check is a ``count(1)`` window over the sort keys on the
+range-sorted frame — range partitioning already clusters equal keys, so
+the window adds no exchange and no sort — and a ``raise_error`` filter
+fails the write task that meets a duplicate key. No action runs before
+the write (no count, no ``df.rdd`` partition probe). Floating sort keys
+are the one exception to the shared shuffle: Catalyst normalizes NaN and
+-0.0 in window keys, so for them the check runs first and the range sort
+reshuffles the checked rows — still one run of the input plan."""
 
 from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 from datetime import date
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from n2khab_mhq_data_spark.catalog import TableSpec
+
+# raise_error message of the total-order check, mapped back to ValueError
+_NOT_TOTAL = "write_vc: duplicate sort keys"
 
 _SPARK_TO_YML = {
     T.IntegerType(): "integer",
@@ -94,42 +111,90 @@ def _merge_parts(
 ) -> str:
     """Write the range-partitioned frame as ``sep``-separated part files
     and stream-concatenate them (filename order == global order) into one
-    ``root/name.ext``; returns the md5 of the merged bytes."""
+    ``root/name.ext``; returns the md5 of the merged bytes. The part-file
+    directory is removed whether or not the write succeeds, and a failed
+    Spark write leaves a previously published ``name.ext`` untouched."""
     tmp = os.path.join(root, f"_tmp_{name}")
-    # Embedded quotes are DOUBLED (R qmethod="double" / RFC 4180), not
-    # Spark's default backslash-escape; an empty non-NULL string keeps
-    # Spark's quoted "" form — unambiguous against the unquoted NA null
-    # marker, and read_vc/read_csv2 (escape='"') round-trip both
-    # losslessly.
-    ordered.write.mode("overwrite").option("sep", sep).option(
-        "escape", '"'
-    ).option(
-        "header", False
-    ).csv(tmp)
-    out_path = os.path.join(root, f"{name}.{ext}")
-    md5 = hashlib.md5()
-    with open(out_path, "wb") as out:
-        out.write(header.encode())
-        md5.update(header.encode())
-        parts = sorted(p for p in os.listdir(tmp) if p.startswith("part-"))
-        for p in parts:
-            with open(os.path.join(tmp, p), "rb") as fh:
-                while chunk := fh.read(1 << 20):
-                    out.write(chunk)
-                    md5.update(chunk)
-    for p in os.listdir(tmp):
-        os.remove(os.path.join(tmp, p))
-    os.rmdir(tmp)
+    try:
+        # Embedded quotes are DOUBLED (R qmethod="double" / RFC 4180), not
+        # Spark's default backslash-escape; an empty non-NULL string keeps
+        # Spark's quoted "" form — unambiguous against the unquoted NA null
+        # marker, and read_vc/read_csv2 (escape='"') round-trip both
+        # losslessly.
+        ordered.write.mode("overwrite").option("sep", sep).option(
+            "escape", '"'
+        ).option(
+            "header", False
+        ).csv(tmp)
+        out_path = os.path.join(root, f"{name}.{ext}")
+        md5 = hashlib.md5()
+        with open(out_path, "wb") as out:
+            out.write(header.encode())
+            md5.update(header.encode())
+            parts = sorted(p for p in os.listdir(tmp) if p.startswith("part-"))
+            for p in parts:
+                with open(os.path.join(tmp, p), "rb") as fh:
+                    while chunk := fh.read(1 << 20):
+                        out.write(chunk)
+                        md5.update(chunk)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     return md5.hexdigest()
 
 
 def _range_ordered(
     df: DataFrame, sorting: list[str], partitions: int | None
 ) -> DataFrame:
-    n = partitions or max(df.rdd.getNumPartitions() // 4, 1)
-    return df.repartitionByRange(
-        n, *[F.col(c) for c in sorting]
-    ).sortWithinPartitions(*sorting)
+    keys = [F.col(c) for c in sorting]
+    # without an explicit count AQE sizes the range shuffle; the part-file
+    # count never changes the merged bytes or their hash
+    ranged = (
+        df.repartitionByRange(partitions, *keys)
+        if partitions
+        else df.repartitionByRange(*keys)
+    )
+    return ranged.sortWithinPartitions(*sorting)
+
+
+def _floating(dt: T.DataType) -> bool:
+    if isinstance(dt, T.StructType):
+        return any(_floating(f.dataType) for f in dt.fields)
+    if isinstance(dt, T.ArrayType):
+        return _floating(dt.elementType)
+    return isinstance(dt, (T.FloatType, T.DoubleType))
+
+
+def _total_order_checked(
+    df: DataFrame, sorting: list[str], partitions: int | None
+) -> DataFrame:
+    """``_range_ordered`` plus a check that fails the write task meeting a
+    duplicate key: a count over the sort keys and a filter that raises on
+    a count above one. It must stay a filter — a projected flag column
+    that a later select drops would be pruned away, and the check with
+    it. Duplicates follow groupBy semantics: NULLs are equal, and so are
+    NaNs and -0.0/0.0."""
+    n = F.count(F.lit(1)).over(Window.partitionBy(*sorting))
+
+    def check(frame: DataFrame) -> DataFrame:
+        return (
+            frame.withColumn("__vc_n", n)
+            .filter(
+                F.when(
+                    F.col("__vc_n") > 1, F.raise_error(F.lit(_NOT_TOTAL))
+                ).otherwise(True)
+            )
+            .drop("__vc_n")
+        )
+
+    if any(_floating(df.schema[c].dataType) for c in sorting):
+        # Catalyst normalizes NaN and -0.0 in floating window keys, and
+        # the range partitioning on the raw keys no longer satisfies the
+        # normalized clustering: an added hash exchange would undo the
+        # range order. Check first, then range-sort the checked rows.
+        return _range_ordered(check(df), sorting, partitions)
+    # range partitioning on the keys already clusters equal keys and the
+    # per-partition sort orders them: the window adds no exchange or sort
+    return check(_range_ordered(df, sorting, partitions))
 
 
 def write_vc(
@@ -185,20 +250,20 @@ def write_vc(
     # it: with duplicate sort keys the tie order follows the incoming
     # partition layout, so a rerun could emit different bytes and a
     # different data_hash — the exact failure this sink exists to
-    # prevent. One count-distinct aggregate, same fail-fast posture as
-    # the factor-domain check.
-    dup = (
-        df.groupBy(*sorting).count().filter(F.col("count") > 1).limit(1)
-    )
-    if dup.count() > 0:
+    # prevent. The check rides along in the write (no separate action),
+    # same fail-fast posture as the factor-domain check.
+    ordered = _total_order_checked(df, sorting, partitions).select(out_cols)
+    header = "\t".join(f.name for f in schema.fields) + "\n"
+    try:
+        data_hash = _merge_parts(ordered, root, name, header, "\t", "tsv")
+    except (PySparkException, Py4JJavaError) as e:
+        if _NOT_TOTAL not in str(e):
+            raise
         raise ValueError(
             f"write_vc({name!r}): sorting {sorting} is not a total order"
             " — duplicate sort keys would make the TSV bytes and"
             " data_hash nondeterministic across reruns"
-        )
-    ordered = _range_ordered(df, sorting, partitions).select(out_cols)
-    header = "\t".join(f.name for f in schema.fields) + "\n"
-    data_hash = _merge_parts(ordered, root, name, header, "\t", "tsv")
+        ) from e
 
     col_meta: dict[str, object] = {}
     for f in schema.fields:

@@ -4,7 +4,8 @@ helper used by the iterative loops (connected components, k-core, BFS).
 The contract under test:
   - release() on a localCheckpoint'ed frame frees its storage blocks
     immediately (no waiting on GC + ContextCleaner);
-  - release() is a safe no-op on None and on non-checkpoint plans;
+  - release() is a safe no-op on None, on non-checkpoint plans and when
+    the JVM handle is unavailable, and lets any other error propagate;
   - a plan that unions SURVIVING checkpoints still computes correctly
     after a superseded sibling was released (the exact shape the BFS
     ring union relies on).
@@ -83,3 +84,32 @@ def test_surviving_checkpoints_unaffected(spark):
     assert sorted(r.id for r in out.collect()) == list(range(10))
     release(ring0)
     release(ring1)
+
+
+class _FakeFrame:
+    """Stands in for a DataFrame whose JVM handle raises ``exc``."""
+
+    def __init__(self, exc: Exception):
+        self._exc = exc
+
+    @property
+    def _jdf(self):
+        return self
+
+    def queryExecution(self):
+        raise self._exc
+
+
+def test_release_noop_when_jvm_handle_unavailable():
+    from py4j.protocol import Py4JError, Py4JNetworkError
+
+    release(object())  # no _jdf at all (e.g. a Spark Connect frame)
+    release(_FakeFrame(Py4JError("gateway gone")))
+    release(_FakeFrame(Py4JNetworkError("connection refused")))
+
+
+def test_release_propagates_unexpected_errors():
+    import pytest
+
+    with pytest.raises(RuntimeError, match="boom"):
+        release(_FakeFrame(RuntimeError("boom")))

@@ -264,6 +264,14 @@ def test_write_vc_factor_round_trip(spark, tmp_path):
     assert rows == {(1, "bad"), (2, "good"), (3, None), (4, "good")}
 
 
+def _published(root) -> dict:
+    """Bytes of each file published in ``root``; fails when a write left
+    its part-file directory behind."""
+    files = {p.name: p.read_bytes() for p in root.iterdir() if p.is_file()}
+    assert not list(root.glob("_tmp_*")), "sink left its part files behind"
+    return files
+
+
 def test_write_vc_factor_out_of_domain_fails(spark, tmp_path):
     import pytest
 
@@ -272,9 +280,14 @@ def test_write_vc_factor_out_of_domain_fails(spark, tmp_path):
         [ColumnSpec("s", "factor", levels=("a", "b"))],
         sorting=("s",),
     )
+    ok = spark.createDataFrame([("a",), ("b",)], "s string")
+    write_vc(ok, "t", str(tmp_path), ["s"], spec=spec)
+    before = _published(tmp_path)
     df = spark.createDataFrame([("a",), ("z",)], "s string")
     with pytest.raises(Exception, match="factor level not in spec"):
         write_vc(df, "t", str(tmp_path), ["s"], spec=spec)
+    # the failed write cleans up and leaves the published table as it was
+    assert _published(tmp_path) == before
 
 
 def test_write_vc_factor_yaml_unsafe_label_fails(spark, tmp_path):
@@ -326,11 +339,105 @@ def test_write_vc_duplicate_sort_keys_fail(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "a"), (1, "b"), (2, "c")], "k int, v string"
     )
-    with pytest.raises(ValueError, match="not a total order"):
-        write_vc(df, "t", str(tmp_path), ["k"])
-    # the same rows ARE writable under a genuinely total order
+    # the rows ARE writable under a genuinely total order
     out = write_vc(df, "t", str(tmp_path), ["k", "v"])
     assert out["data_hash"]
+    before = _published(tmp_path)
+    with pytest.raises(ValueError, match="not a total order"):
+        write_vc(df, "t", str(tmp_path), ["k"])
+    # the failed write cleans up and leaves the published table as it was
+    assert _published(tmp_path) == before
+
+
+def test_write_vc_total_order_check_matches_group_by(spark, tmp_path):
+    """The in-write check rejects exactly what a groupBy on the sort keys
+    calls a duplicate: NULL keys are equal, and so are NaNs and
+    -0.0/0.0. Distinct floating keys still write in Spark's sort order
+    (NULL first, NaN last)."""
+    import pytest
+
+    nan = float("nan")
+    cases = [
+        ([(None, 1), (None, 2)], "k int, v int", ["k"]),
+        ([(nan, 1), (nan, 2)], "k double, v int", ["k"]),
+        ([(-0.0, 1), (0.0, 2)], "k double, v int", ["k"]),
+        ([(1, -0.0), (1, 0.0)], "a int, k double", ["a", "k"]),
+        ([(None, 1), (0, 2)], "k int, v int", ["k"]),
+        ([(nan, 1), (None, 2), (-0.0, 3), (-1.5, 4)], "k double, v int",
+         ["k"]),
+    ]
+    for i, (rows, schema, keys) in enumerate(cases):
+        df = spark.createDataFrame(rows, schema)
+        dup = df.groupBy(*keys).count().filter(F.col("count") > 1).count()
+        if dup:
+            with pytest.raises(ValueError, match="not a total order"):
+                write_vc(df, f"t{i}", str(tmp_path), keys)
+        else:
+            write_vc(df, f"t{i}", str(tmp_path), keys)
+    assert not list(tmp_path.glob("_tmp_*"))
+    lines = (tmp_path / "t5.tsv").read_text().splitlines()
+    assert [ln.split("\t")[1] for ln in lines[1:]] == ["2", "4", "3", "1"]
+
+
+def test_write_vc_floating_keys_stay_sorted(spark, tmp_path):
+    """Catalyst normalizes NaN and -0.0 in floating window keys, which the
+    range partitioning on the raw keys does not satisfy; the TSV must
+    still come out globally sorted across several part files."""
+    df = spark.range(2000).select(
+        ((F.col("id") * 7919) % 2000 / 7.0 - 100).alias("x"), F.col("id")
+    )
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "false")  # keep every shuffle partition apart
+    try:
+        write_vc(df, "f", str(tmp_path), ["x"])
+    finally:
+        spark.conf.set(conf, prev)
+    lines = (tmp_path / "f.tsv").read_text().splitlines()[1:]
+    xs = [float(ln.split("\t")[0]) for ln in lines]
+    assert len(xs) == 2000 and xs == sorted(xs)
+
+
+def test_write_vc_total_order_check_adds_no_job(spark, tmp_path):
+    """The total-order check rides in the write plan: publishing a frame
+    whose input has its own shuffles (groupBy + orderBy) launches exactly
+    as many Spark jobs as the bare range-sorted write does."""
+    from n2khab_mhq_data_spark.sources.sink import _range_ordered
+
+    sc = spark.sparkContext
+
+    def frame():
+        # a fresh plan per call: a reused one could skip stages whose
+        # shuffle output an earlier action already left behind
+        return (
+            spark.range(500)
+            .select(
+                (F.col("id") % 50).alias("k"), (F.col("id") % 7).alias("j")
+            )
+            .groupBy("k", "j")
+            .count()
+            .orderBy("k")
+        )
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    bare = jobs(
+        "sink-bare",
+        lambda: _range_ordered(frame(), ["k", "j"], None)
+        .write.format("noop").mode("overwrite").save(),
+    )
+    checked = jobs(
+        "sink-write-vc",
+        lambda: write_vc(frame(), "t", str(tmp_path), ["k", "j"]),
+    )
+    assert bare > 0
+    assert checked == bare
 
 
 def test_write_csv2_parallel_deterministic(spark, tmp_path):
