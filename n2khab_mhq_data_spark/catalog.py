@@ -225,64 +225,141 @@ def _nanos_cols(path: str) -> list[str]:
         return []
 
 
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one synthetic table. Parquet scan => Catalyst gets column
-    pruning + predicate pushdown for free; never cache here.
+def parquet_fingerprint(sf_dir: str, table: str) -> tuple:
+    """(path, mtime_ns, size) tuple over a source table's parquet
+    file(s) — the ONE memo-invalidation key recipe (the schema memo in
+    load(), the build-step memos in plans/ and the names of the
+    fingerprinted scratch stores); regenerated data at the same sf_dir
+    must invalidate every one. Tolerates a file vanishing between glob
+    and stat (TOCTOU) by skipping it — the changed listing itself
+    already invalidates the key."""
+    import glob
+    import os
+
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    files = sorted(glob.glob(os.path.join(path, "*"))) or [path]
+    out = []
+    for f in files:
+        try:
+            st = os.stat(f)
+        except FileNotFoundError:
+            continue
+        out.append((f, int(st.st_mtime_ns), st.st_size))
+    return tuple(out)
+
+
+# Session confs that change the schema Spark infers from a parquet
+# footer (nanos as long, binary as string, INT96/NTZ timestamp typing,
+# column-name case, schema merging across part files).
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# (parquet_fingerprint, inference confs) -> (raw inferred schema, nanos
+# columns). Plain StructTypes, no Spark handles, so entries outlive the
+# session that inferred them and need no eviction.
+_SCHEMAS: dict[tuple, tuple[T.StructType, list[str]]] = {}
+
+
+def _schema_key(spark: SparkSession, sf_dir: str, name: str) -> tuple:
+    return (
+        parquet_fingerprint(sf_dir, name),
+        tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+    )
+
+
+def _read_parquet(
+    spark: SparkSession, path: str
+) -> tuple[DataFrame, list[str]]:
+    """First read of a table: infer its schema (one Spark job) and find
+    its nanos columns.
 
     TIMESTAMP(NANOS) columns (the driver writes events.parquet this
     way) are rejected by vanilla Spark (PARQUET_TYPE_ILLEGAL). We read
-    nanos as long (legacy conf) and rebuild a microsecond timestamp
-    with integer division — ``ts div 1000``, not ``/1000.0``, because
-    nano-epoch values (~1.7e18) overflow double's 53-bit mantissa and
-    would corrupt the microseconds.
+    nanos as long (legacy conf); load() rebuilds a microsecond timestamp
+    from each.
 
     The legacy conf is session-wide and must STAY set while the
     returned scan executes, so it cannot be save/restored around the
     read. To keep that from silently turning some OTHER table's nanos
-    column into a bare bigint later in the session, load() detects
-    nanos columns per table from the parquet FOOTER (driver-side
-    pyarrow peek) and rebuilds every one — the conf leak is then
-    harmless by construction for anything read through this catalog."""
-    path = f"{sf_dir}/{name}.parquet"
+    column into a bare bigint later in the session, nanos columns are
+    detected per table from the parquet FOOTER (driver-side pyarrow
+    peek) and every one is rebuilt — the conf leak is then harmless by
+    construction for anything read through this catalog."""
     nanos = _nanos_cols(path)
     if nanos:
         # Proactive, not try/except: the lazy schema merge would otherwise
         # fail a whole Spark job before we could retry with the conf set.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
-        df = spark.read.parquet(path)
+        return spark.read.parquet(path), nanos
     except Exception as e:
         # retry with the legacy conf ONLY for the nanos-timestamp
         # rejection it exists for — a bare retry would swallow the real
         # error (missing/corrupt file)
         if "PARQUET_TYPE_ILLEGAL" not in str(e):
             raise
-        # footer peek missed (unreadable footer); the conf must stay
-        # set: the returned DataFrame's SCAN reads it at execution
-        # time, not just at schema resolution
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        # re-peek the footer now that we KNOW a nanos column exists —
-        # the proactive peek can miss (e.g. first part file unreadable
-        # by pyarrow) while other footers are fine; only if every
-        # footer stays unreadable fall back to the 'ts' heuristic
-        nanos = _nanos_cols(path)
-        if not nanos:
-            nanos = [c for c, t in df.dtypes if t == "bigint" and c == "ts"]
-    dtypes = dict(df.dtypes)
+    # footer peek missed (unreadable footer); the conf must stay set: the
+    # returned DataFrame's SCAN reads it at execution time, not just at
+    # schema resolution
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(path)
+    # re-peek the footer now that we KNOW a nanos column exists — the
+    # proactive peek can miss (e.g. first part file unreadable by
+    # pyarrow) while other footers are fine; only if every footer stays
+    # unreadable fall back to the 'ts' heuristic
+    nanos = _nanos_cols(path) or [
+        c for c, t in df.dtypes if t == "bigint" and c == "ts"
+    ]
+    return df, nanos
+
+
+def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one synthetic table. Parquet scan => Catalyst gets column
+    pruning + predicate pushdown for free; never cache here.
+
+    The first load of a table infers its schema, which costs one Spark
+    job (see _read_parquet for the nanos-timestamp handling); later
+    loads reuse that raw inferred schema through
+    ``spark.read.schema(...)``, which launches no job. The memo key is
+    the table's parquet_fingerprint plus the session's values of the
+    confs that change parquet inference (_INFERENCE_CONFS), so rewritten
+    data, or a session whose confs differ, infers again. A hit implies
+    the session already has the confs the schema was inferred under,
+    the nanos-as-long conf included.
+
+    Every nanos-as-long column is rebuilt as a microsecond timestamp
+    with integer division — ``ts div 1000``, not ``/1000.0``, because
+    nano-epoch values (~1.7e18) overflow double's 53-bit mantissa and
+    would corrupt the microseconds."""
+    path = f"{sf_dir}/{name}.parquet"
+    hit = _SCHEMAS.get(_schema_key(spark, sf_dir, name))
+    if hit is not None:
+        schema, nanos = hit
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df, nanos = _read_parquet(spark, path)
+        schema = df.schema
+        # keyed AFTER the read: it may have set the nanos-as-long conf
+        _SCHEMAS[_schema_key(spark, sf_dir, name)] = (schema, nanos)
+    dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
     for c in nanos:
         if dtypes.get(c) == "bigint":
             df = df.withColumn(
                 c, F.timestamp_micros(F.expr(f"{c} div 1000"))
             )
-    if name == "events":
-        if dict(df.dtypes).get("ts") == "timestamp_ntz":
-            # driver may write plain TIMESTAMP(MICROS) without UTC
-            # adjustment, which Spark 4 infers as TIMESTAMP_NTZ; session
-            # timezone is pinned to UTC so this cast is value-preserving
-            # and keeps downstream session_window/unix_millis plans typed
-            # as they expect
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    if name == "events" and dtypes.get("ts") == "timestamp_ntz":
+        # driver may write plain TIMESTAMP(MICROS) without UTC
+        # adjustment, which Spark 4 infers as TIMESTAMP_NTZ; session
+        # timezone is pinned to UTC so this cast is value-preserving
+        # and keeps downstream session_window/unix_millis plans typed
+        # as they expect
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

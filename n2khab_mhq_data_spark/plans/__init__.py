@@ -15,28 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
 
-def parquet_fingerprint(sf_dir: str, table: str) -> tuple:
-    """(path, mtime_ns, size) tuple over a source table's parquet
-    file(s) — the ONE memo-invalidation key recipe (was inlined as
-    _docs/_embeddings/_li/_lsvi fingerprints; regenerated data at the
-    same sf_dir must invalidate every build-step memo). Tolerates a file
-    vanishing between glob and stat (TOCTOU) by skipping it — the
-    changed listing itself already invalidates the key."""
-    import glob
-    import os
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    files = sorted(glob.glob(os.path.join(path, "*"))) or [path]
-    out = []
-    for f in files:
-        try:
-            st = os.stat(f)
-        except FileNotFoundError:
-            continue
-        out.append((f, int(st.st_mtime_ns), st.st_size))
-    return tuple(out)
-
-
 def evict_dead_sessions(memo: dict, spark: SparkSession) -> None:
     """Drop every memo entry owned by ANOTHER SparkSession — a cached
     localCheckpoint dies with its SparkContext, so entries from dead

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from n2khab_mhq_data_spark.catalog import load
+from n2khab_mhq_data_spark.catalog import load, parquet_fingerprint
 from n2khab_mhq_data_spark.operators.ckpt import release
 from n2khab_mhq_data_spark.operators.graph import (
     cooccurrence_edges,
@@ -63,8 +63,6 @@ _COPURCHASE_EDGES: dict[tuple, DataFrame] = {}
 
 
 def _li_fingerprint(sf_dir: str) -> tuple:
-    from n2khab_mhq_data_spark.plans import parquet_fingerprint
-
     return parquet_fingerprint(sf_dir, "lineitem")
 
 

@@ -9,7 +9,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from n2khab_mhq_data_spark.catalog import load, local_dim
+from n2khab_mhq_data_spark.catalog import (
+    load,
+    local_dim,
+    parquet_fingerprint,
+)
 from n2khab_mhq_data_spark.functions.parsing import parse_measurement
 from n2khab_mhq_data_spark.functions.scalars import eps_round
 from n2khab_mhq_data_spark.kernels.cover import (
@@ -480,8 +484,6 @@ _LSVI_LEVELS: dict[tuple, dict[str, DataFrame]] = {}
 
 
 def _lsvi_fingerprint(sf_dir: str) -> tuple:
-    from n2khab_mhq_data_spark.plans import parquet_fingerprint
-
     return parquet_fingerprint(sf_dir, "orders") + parquet_fingerprint(
         sf_dir, "lineitem"
     )

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from n2khab_mhq_data_spark.catalog import load
+from n2khab_mhq_data_spark.catalog import load, parquet_fingerprint
 from n2khab_mhq_data_spark.llmdata.dedup import (
     exact_dedup,
     minhash_dedup_pairs,
@@ -2947,8 +2947,6 @@ _NEAR_PAIRS: dict[tuple, DataFrame] = {}
 
 
 def _docs_fingerprint(sf_dir: str) -> tuple:
-    from n2khab_mhq_data_spark.plans import parquet_fingerprint
-
     return parquet_fingerprint(sf_dir, "documents")
 
 
@@ -3054,8 +3052,6 @@ def memo_warm(sf_dir: str) -> dict[str, bool]:
 
 
 def _embeddings_fingerprint(sf_dir: str) -> tuple:
-    from n2khab_mhq_data_spark.plans import parquet_fingerprint
-
     return parquet_fingerprint(sf_dir, "embeddings")
 
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from n2khab_mhq_data_spark.catalog import load
+from n2khab_mhq_data_spark.catalog import load, parquet_fingerprint
 from n2khab_mhq_data_spark.llmdata.pipeline import (
     hash_split,
     pack_sequences,
@@ -367,24 +367,13 @@ def pipeline_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _table_fingerprint(sf_dir: str, table: str) -> str:
-    """md5 prefix over (path, mtime_ns, size) of a source table's parquet
-    file(s) — the shared cache key of every fingerprinted scratch store
-    (was inlined six times; regenerated source data invalidates)."""
+    """md5 prefix of the table's parquet_fingerprint — the name suffix of
+    every fingerprinted scratch store (regenerated source data
+    invalidates)."""
     import hashlib
-    import os
 
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    files = (
-        sorted(os.path.join(p, f) for f in os.listdir(p))
-        if os.path.isdir(p)
-        else [p]
-    )
-    return hashlib.md5(
-        ";".join(
-            f"{f}:{os.stat(f).st_mtime_ns}:{os.stat(f).st_size}"
-            for f in files
-        ).encode()
-    ).hexdigest()[:16]
+    fp = repr(parquet_fingerprint(sf_dir, table))
+    return hashlib.md5(fp.encode()).hexdigest()[:16]
 
 
 def _scratch_build(path: str, build, require: str | None = None) -> str:

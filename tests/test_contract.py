@@ -1,5 +1,6 @@
 """Driver-contract smoke tests: entry() returns rows, every registered query
-runs at sf0.001, every oracle key matches a query key."""
+runs at sf0.001, every oracle key matches a query key, the docs state the
+registry's size."""
 
 from __future__ import annotations
 
@@ -26,6 +27,23 @@ def test_every_query_runs(spark, sf_dir):
         df = fn(spark, sf_dir)
         # schema resolves and the plan executes
         assert df.limit(5).count() >= 0, name
+
+
+def test_doc_query_counts_match_registry():
+    """README.md and COVERAGE.md state the registry size in prose; they
+    must not drift from the registry itself."""
+    import re
+    from pathlib import Path
+
+    root = Path(entrymod.__file__).resolve().parent
+    n = len(entrymod.queries())
+    for doc, pattern in (
+        ("README.md", r"(\d+) named queries"),
+        ("COVERAGE.md", r"runs all \*\*(\d+) queries"),
+    ):
+        stated = re.findall(pattern, (root / doc).read_text())
+        assert stated, f"{doc}: no query count matching {pattern!r}"
+        assert set(map(int, stated)) == {n}, (doc, stated, n)
 
 
 def test_catalog_load_handles_nanos_timestamp(spark, tmp_path):
@@ -57,10 +75,14 @@ def test_catalog_load_handles_nanos_timestamp(spark, tmp_path):
     )
     pq.write_table(table, str(sf / "events.parquet"))
 
-    df = load(spark, str(sf), "events")
-    assert dict(df.dtypes)["ts"].startswith("timestamp")
-    got = {r.event_id: r.ts for r in df.collect()}
-    assert got[1] == t0  # microsecond precision survives exactly
+    # the second load reuses the memoized schema: same dtypes, same
+    # exact microseconds
+    first = load(spark, str(sf), "events")
+    for df in (first, load(spark, str(sf), "events")):
+        assert df.dtypes == first.dtypes
+        assert dict(df.dtypes)["ts"].startswith("timestamp")
+        got = {r.event_id: r.ts for r in df.collect()}
+        assert got[1] == t0  # microsecond precision survives exactly
 
 
 def test_catalog_load_handles_tz_aware_nanos(spark, tmp_path):
@@ -93,14 +115,16 @@ def test_catalog_load_handles_tz_aware_nanos(spark, tmp_path):
     )
     pq.write_table(table, str(sf / "events.parquet"))
 
-    df = load(spark, str(sf), "events")
-    dt = dict(df.dtypes)
-    assert dt["ts"].startswith("timestamp"), dt
-    assert dt["seen_at"].startswith("timestamp"), dt
-    assert dt["user_id"] == "bigint"  # genuine bigint untouched
-    row = df.collect()[0]
-    assert row.ts == t0.replace(tzinfo=None)
-    assert row.seen_at == t1.replace(tzinfo=None)
+    first = load(spark, str(sf), "events")
+    for df in (first, load(spark, str(sf), "events")):  # cold, memoized
+        assert df.dtypes == first.dtypes
+        dt = dict(df.dtypes)
+        assert dt["ts"].startswith("timestamp"), dt
+        assert dt["seen_at"].startswith("timestamp"), dt
+        assert dt["user_id"] == "bigint"  # genuine bigint untouched
+        row = df.collect()[0]
+        assert row.ts == t0.replace(tzinfo=None)
+        assert row.seen_at == t1.replace(tzinfo=None)
 
 
 def test_cluster_conf_profile():
