@@ -76,40 +76,15 @@ SF1_EXTRA = [
 
 
 def _prebuild_memos(spark, sf_dir: str) -> dict[str, float]:
-    """Build each shared memo (deterministic build-step intermediates)
-    and return {step: seconds}. Queries then all run memo-warm."""
-    from n2khab_mhq_data_spark.plans import graph, llm
+    """Build each registered shared intermediate (``plans.SHARED``) and
+    return {name: seconds}. Queries then all run against warm values."""
+    from n2khab_mhq_data_spark.plans import SHARED
 
     steps = {}
-    t0 = time.time()
-    llm._near_pairs(spark, sf_dir).count()
-    steps["near_pairs"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    llm._components(spark, sf_dir).count()
-    steps["components"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    llm._bigram_lm(spark, sf_dir).count()
-    steps["bigram_lm"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    from n2khab_mhq_data_spark.plans import pipeline as pl
-
-    tf, dl = pl._bm25_index(spark, sf_dir)
-    tf.count()
-    steps["bm25_index"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    llm._bpe_merges(spark, sf_dir)
-    steps["bpe_merges"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    llm._kmeans_cents(spark, sf_dir)
-    steps["kmeans_cents"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    graph._copurchase_edges(spark, sf_dir).count()
-    steps["copurchase_edges"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    from n2khab_mhq_data_spark.plans import kernels as kn
-
-    kn._lsvi_levels(spark, sf_dir)["lsvi_globaal"].count()
-    steps["lsvi_levels"] = round(time.time() - t0, 3)
+    for name, get in SHARED.items():
+        t0 = time.time()
+        get(spark, sf_dir)
+        steps[name] = round(time.time() - t0, 3)
     return steps
 
 
@@ -170,8 +145,8 @@ def main() -> None:
 
     cal_timeline = [cal_probe()]
 
-    # Pre-build the shared build-step memos (near-dup pair table, BPE
-    # merge table, IVF centroids) ONCE, timed as declared build steps.
+    # Pre-build the shared intermediates (near-dup pair table, BPE
+    # merge table, IVF centroids, ...) ONCE, timed as declared build steps.
     # This makes every per-query timing order-INdependent — all memo
     # consumers run warm, none of them hides the build cost in its own
     # number, and the build cost is its own line instead of vanishing
@@ -222,8 +197,8 @@ def main() -> None:
 
     # Optional sf1.0 tier: re-time the top-N most expensive queries at
     # 10x data (one warmed run each — regression detection, not a
-    # median-of-3 microbenchmark). Skipped when the scratch tier hasn't
-    # been generated or is explicitly disabled.
+    # median-of-3 microbenchmark). Skipped when explicitly disabled;
+    # reported as "absent" when the scratch tier hasn't been generated.
     sf1: dict | None = None
     run_sf1 = os.environ.get("SPARK_GRAFT_BENCH_SF1", "1") != "0"
     if (
@@ -320,6 +295,8 @@ def main() -> None:
     }
     if sf1 is not None:
         out["sf1"] = sf1
+    elif not os.path.isdir(SF1_DIR):
+        out["sf1"] = "absent"  # say so: a missing tier must not pass silently
     # r12 (VERDICT r11 item 5 — de-noise the driver comparison): with
     # only the 10 slowest on stdout, consecutive rounds overlapped on
     # ~4 query names and the per-query PERF diff was mostly churn.

@@ -117,10 +117,6 @@ def register(spec: TableSpec) -> TableSpec:
     return spec
 
 
-def get_spec(name: str) -> TableSpec:
-    return _REGISTRY[name]
-
-
 def specs() -> dict[str, TableSpec]:
     return dict(_REGISTRY)
 
@@ -228,7 +224,7 @@ def _nanos_cols(path: str) -> list[str]:
 def parquet_fingerprint(sf_dir: str, table: str) -> tuple:
     """(path, mtime_ns, size) tuple over a source table's parquet
     file(s) — the ONE memo-invalidation key recipe (the schema memo in
-    load(), the build-step memos in plans/ and the names of the
+    load(), the ``plans.shared`` build steps and the names of the
     fingerprinted scratch stores); regenerated data at the same sf_dir
     must invalidate every one. Tolerates a file vanishing between glob
     and stat (TOCTOU) by skipping it — the changed listing itself
@@ -361,10 +357,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # as they expect
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TESTDATA_TABLES}
 
 
 def local_dim(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:

@@ -22,8 +22,3 @@ def eps_round(col: Column, d: int, eps: float = EPS) -> Column:
     """Round with a deterministic away-from-zero epsilon shift (see module
     docstring). Use for every *computed* float the oracle compares."""
     return F.round(col + F.signum(col) * eps, d)
-
-
-def eps_round_sql(expr: str, d: int, eps: float = EPS) -> str:
-    """The DuckDB spelling of :func:`eps_round` for oracle strings."""
-    return f"round(({expr}) + sign({expr}) * {eps!r}, {d})"

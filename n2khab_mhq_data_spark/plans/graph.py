@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from n2khab_mhq_data_spark.catalog import load, parquet_fingerprint
+from n2khab_mhq_data_spark.catalog import load
 from n2khab_mhq_data_spark.operators.ckpt import release
 from n2khab_mhq_data_spark.operators.graph import (
     cooccurrence_edges,
@@ -24,7 +24,7 @@ from n2khab_mhq_data_spark.operators.graph import (
     triangle_stats,
 )
 from n2khab_mhq_data_spark.operators.linkage import sorted_neighborhood_pairs
-from n2khab_mhq_data_spark.plans import query
+from n2khab_mhq_data_spark.plans import query, shared
 
 # shared oracle CTE: the support-pruned co-purchase graph — part pairs
 # sharing at least 2 orders (canonical a < b). Support >= 2 is the
@@ -49,42 +49,24 @@ _DEGREE_SQL = """
 """
 
 
-# co-purchase edge-list memo — the same lifecycle argument as the
-# near-dup pair memo (plans/llm.py::_near_pairs): the support-pruned
-# (a, b, support) edge list at min_support=2 is the shared intermediate
-# FIVE graph queries consume (degree histogram, triangles, pagerank,
-# link prediction, lift), and a real pipeline materializes the edge
-# list once, not per consumer. localCheckpoint'ed (the pruned list is
-# orders of magnitude smaller than lineitem), keyed by the lineitem
-# parquet fingerprint so regenerated data invalidates; entries from
-# dead sessions are evicted wholesale. bench.py times the build as a
-# declared build step so per-query numbers stay order-independent.
-_COPURCHASE_EDGES: dict[tuple, DataFrame] = {}
-
-
-def _li_fingerprint(sf_dir: str) -> tuple:
-    return parquet_fingerprint(sf_dir, "lineitem")
-
-
+# co-purchase edge list — the same lifecycle argument as the near-dup
+# pair table (plans/llm.py::_near_pairs): the support-pruned (a, b,
+# support) edge list at min_support=2 is the shared intermediate FIVE
+# graph queries consume (degree histogram, triangles, pagerank, link
+# prediction, lift), and a real pipeline materializes the edge list
+# once, not per consumer. localCheckpoint'ed (the pruned list is orders
+# of magnitude smaller than lineitem).
+@shared("copurchase_edges", "lineitem")
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The memoized (a, b, support) co-purchase edge list; consumers
-    that need plain edges select ("a", "b") — identical to the unkept
-    path."""
-    from n2khab_mhq_data_spark.plans import evict_dead_sessions
-
-    evict_dead_sessions(_COPURCHASE_EDGES, spark)
-    key = (sf_dir, _li_fingerprint(sf_dir))
-    df = _COPURCHASE_EDGES.get(key)
-    if df is None:
-        li = load(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
-        )
-        df = cooccurrence_edges(
-            li, "l_orderkey", "l_partkey", min_support=2,
-            keep_support=True,
-        ).localCheckpoint()
-        _COPURCHASE_EDGES[key] = df
-    return df
+    """The (a, b, support) co-purchase edge list; consumers that need
+    plain edges select ("a", "b") — identical to the unkept path."""
+    li = load(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    )
+    return cooccurrence_edges(
+        li, "l_orderkey", "l_partkey", min_support=2,
+        keep_support=True,
+    ).localCheckpoint()
 
 
 @query(

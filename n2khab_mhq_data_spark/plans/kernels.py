@@ -9,11 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from n2khab_mhq_data_spark.catalog import (
-    load,
-    local_dim,
-    parquet_fingerprint,
-)
+from n2khab_mhq_data_spark.catalog import load, local_dim
 from n2khab_mhq_data_spark.functions.parsing import parse_measurement
 from n2khab_mhq_data_spark.functions.scalars import eps_round
 from n2khab_mhq_data_spark.kernels.cover import (
@@ -31,7 +27,7 @@ from n2khab_mhq_data_spark.kernels.lsvi import (
 from n2khab_mhq_data_spark.kernels.tariff import compute_volume, tariff_dim
 from n2khab_mhq_data_spark.operators.merge import incremental_merge
 from n2khab_mhq_data_spark.operators.relational import membership_flag
-from n2khab_mhq_data_spark.plans import query
+from n2khab_mhq_data_spark.plans import query, shared
 
 # SQL literal of kernels.cover.COVER_SCALE_ROWS, kept in sync by tests
 _COVER_DIM_SQL = """
@@ -467,47 +463,28 @@ _LSVI_MEASUREMENTS_SQL = _LSVI_PREFIX_SQL + """, detail AS (
 """
 
 
-# completed-LSVI memo — the same lifecycle argument as llm.py's
-# near-pairs/components memos: the strict-null completed detail and its
+# completed-LSVI intermediate: the strict-null completed detail and its
 # three roll-ups are the shared intermediate of FIVE k7_* consumers
 # (detail, indicator, criterium, globaal, crosstab), and a real
 # assessment pipeline evaluates the rule engine once per campaign, not
 # per report. r6's strict-null completion added a rules-side left join
 # per evaluation, which doubled detail/globaal when each query rebuilt
 # the levels independently (r6 VERDICT item 3). localCheckpoint'ed
-# (plot-grain — far smaller than lineitem), keyed by the orders+lineitem
-# parquet fingerprint so regenerated data invalidates it, dead-session
-# entries evicted wholesale. Determinism: the rule engine is exact
-# relational algebra, so checkpointed rows are bit-identical to a
-# recompute; bench.py times the build as a declared step.
-_LSVI_LEVELS: dict[tuple, dict[str, DataFrame]] = {}
-
-
-def _lsvi_fingerprint(sf_dir: str) -> tuple:
-    return parquet_fingerprint(sf_dir, "orders") + parquet_fingerprint(
-        sf_dir, "lineitem"
-    )
-
-
-def _lsvi_levels(spark: SparkSession, sf_dir: str):
-    from n2khab_mhq_data_spark.plans import evict_dead_sessions
-
-    evict_dead_sessions(_LSVI_LEVELS, spark)
-    key = (sf_dir, _lsvi_fingerprint(sf_dir))
-    got = _LSVI_LEVELS.get(key)
-    if got is None:
-        # checkpoint the completed DETAIL first, then derive the three
-        # roll-ups FROM the checkpointed detail — checkpointing each
-        # level's raw lineage independently would re-run the whole rule
-        # evaluation four times
-        detail = _lsvi_detail_build(spark, sf_dir).localCheckpoint()
-        got = {"lsvi_detail": detail} | {
-            name: df.localCheckpoint()
-            for name, df in aggregate_levels(detail).items()
-            if name != "lsvi_detail"
-        }
-        _LSVI_LEVELS[key] = got
-    return got
+# (plot-grain — far smaller than lineitem). Determinism: the rule engine
+# is exact relational algebra, so checkpointed rows are bit-identical to
+# a recompute.
+@shared("lsvi_levels", "orders", "lineitem")
+def _lsvi_levels(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    # checkpoint the completed DETAIL first, then derive the three
+    # roll-ups FROM the checkpointed detail — checkpointing each level's
+    # raw lineage independently would re-run the whole rule evaluation
+    # four times
+    detail = _lsvi_detail_build(spark, sf_dir).localCheckpoint()
+    return {"lsvi_detail": detail} | {
+        name: df.localCheckpoint()
+        for name, df in aggregate_levels(detail).items()
+        if name != "lsvi_detail"
+    }
 
 
 def _lsvi_detail_build(spark: SparkSession, sf_dir: str) -> DataFrame:

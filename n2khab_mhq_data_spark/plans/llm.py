@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from n2khab_mhq_data_spark.catalog import load, parquet_fingerprint
+from n2khab_mhq_data_spark.catalog import load
 from n2khab_mhq_data_spark.llmdata.dedup import (
     exact_dedup,
     minhash_dedup_pairs,
@@ -42,7 +42,7 @@ from n2khab_mhq_data_spark.llmdata.text import (
     quality_metrics,
     tokens,
 )
-from n2khab_mhq_data_spark.plans import query
+from n2khab_mhq_data_spark.plans import query, shared
 
 # shared oracle CTE: distinct word 3-gram shingles per doc (mirror of
 # llmdata.text.word_shingles)
@@ -2923,147 +2923,71 @@ def _kmeans_cent_sql(iters: int) -> str:
     return ",\n    ".join(parts)
 
 
-# index-build memo: Lloyd's is deterministic per dataset, and building the
-# coarse quantizer is a separate lifecycle step from searching it — rerunning
-# the same 2 iterations on every query invocation would bill ~2 Catalyst
-# analysis passes + 2 tiny jobs per call for bit-identical centroids.
-# Keyed on a fingerprint of the parquet files (path + mtime + size), not the
-# path alone: regenerated data at the same sf_dir must invalidate the memo
-# or the cached centroids silently diverge from the oracle's (ADVICE r2).
-_KMEANS_CENTS: dict[tuple, list[tuple[int, list[float]]]] = {}
-
-
-# near-dup pair-table memo — the same lifecycle argument as the k-means
-# memo above: the verified (d1, d2) near-dup edge list at (k=3, 0.8) is
-# the shared intermediate that FIVE queries (canonicalize, both CC
-# variants, the size histogram, the leakage-safe split) consume, and a
-# real curation pipeline materializes it once, not per consumer. The
-# memo holds a localCheckpoint'ed DataFrame (materialized edge rows on
-# executors — the pair table is orders of magnitude smaller than the
-# corpus), keyed by the documents parquet fingerprint so regenerated
-# data invalidates it. Determinism: the pair pipeline is exact (no RNG),
-# so the checkpointed rows are bit-identical to a recompute.
-_NEAR_PAIRS: dict[tuple, DataFrame] = {}
-
-
-def _docs_fingerprint(sf_dir: str) -> tuple:
-    return parquet_fingerprint(sf_dir, "documents")
-
-
-def _near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from n2khab_mhq_data_spark.plans import evict_dead_sessions
-
-    evict_dead_sessions(_NEAR_PAIRS, spark)
-    key = (sf_dir, _docs_fingerprint(sf_dir))
-    df = _NEAR_PAIRS.get(key)
-    if df is None:
-        docs = load(spark, sf_dir, "documents")
-        df = ngram_jaccard_pairs(
-            docs, "text", "doc_id", k=3, threshold=0.8
-        ).localCheckpoint()
-        _NEAR_PAIRS[key] = df
-    return df
-
-
-_COMPONENTS: dict[tuple, DataFrame] = {}
-
-
-def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized exact component labels over the near-dup pair graph —
-    the shared intermediate of dedup_components, dedup_component_sizes
-    and dedup_canonicalize-style survivorship: a real pipeline labels
-    the corpus once and derives every dedup/observability table from
-    the labels, not one label propagation per consumer. Same lifecycle
-    as the near-pairs memo (checkpointed, keyed by the documents
-    parquet fingerprint, dead-session entries evicted wholesale);
-    bench.py times the build as a declared step. NOTE:
-    dedup_components_twophase intentionally does NOT use this memo —
-    it exists to differentially audit the two-phase ALGORITHM, so it
-    must run its own propagation every time."""
-    from n2khab_mhq_data_spark.llmdata.dedup import connected_components
-
-    from n2khab_mhq_data_spark.plans import evict_dead_sessions
-
-    evict_dead_sessions(_COMPONENTS, spark)
-    key = (sf_dir, _docs_fingerprint(sf_dir))
-    df = _COMPONENTS.get(key)
-    if df is None:
-        near = _near_pairs(spark, sf_dir)
-        df = connected_components(near, "d1", "d2").localCheckpoint()
-        _COMPONENTS[key] = df
-    return df
-
-
-_BIGRAM_LM: dict[tuple, DataFrame] = {}
-
-
-def _bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized RAW per-doc bigram-LM fluency table (doc_id, n_scored,
-    mean_logprob unrounded) — the shared intermediate of THREE consumers
-    (text_bigram_lm, the adaptive quality gate's percentile threshold,
-    curriculum binning). Same lifecycle as the near-dup pair memo: a
-    real pipeline scores the corpus with its LM once, not per consumer;
-    localCheckpoint'ed (doc-grain, far smaller than the bigram stream),
-    keyed by the documents parquet fingerprint, dead-session entries
-    evicted wholesale. bench.py times the build as a declared step."""
-    from n2khab_mhq_data_spark.llmdata.text import bigram_lm_logprob
-
-    from n2khab_mhq_data_spark.plans import evict_dead_sessions
-
-    evict_dead_sessions(_BIGRAM_LM, spark)
-    key = (sf_dir, _docs_fingerprint(sf_dir))
-    df = _BIGRAM_LM.get(key)
-    if df is None:
-        df = bigram_lm_logprob(
-            load(spark, sf_dir, "documents"), "text", "doc_id", 0.75,
-            rounded=False,
-        ).localCheckpoint()
-        _BIGRAM_LM[key] = df
-    return df
-
-
-def memo_warm(sf_dir: str) -> dict[str, bool]:
-    """Which build-step memos are already populated for ``sf_dir`` —
-    bench.py records this per query so per-query timings declare whether
-    they ran against a warm shared intermediate (ADVICE r4: the five
-    near-dup consumers and two BPE consumers are order-dependent:
-    whichever runs first pays the build cost)."""
-    from n2khab_mhq_data_spark.plans import graph
-    from n2khab_mhq_data_spark.plans import kernels as kn
-
-    dkey = (sf_dir, _docs_fingerprint(sf_dir))
-    ekey = (sf_dir, _embeddings_fingerprint(sf_dir))
-    from n2khab_mhq_data_spark.plans import pipeline as pl
-
-    return {
-        "near_pairs": dkey in _NEAR_PAIRS,
-        "bigram_lm": dkey in _BIGRAM_LM,
-        "bm25_index": dkey in pl._BM25_IDX,
-        "bpe_merges": dkey in _BPE_MERGES,
-        "kmeans_cents": ekey in _KMEANS_CENTS,
-        "copurchase_edges": (
-            (sf_dir, graph._li_fingerprint(sf_dir))
-            in graph._COPURCHASE_EDGES
-        ),
-        "lsvi_levels": (
-            (sf_dir, kn._lsvi_fingerprint(sf_dir)) in kn._LSVI_LEVELS
-        ),
-    }
-
-
-def _embeddings_fingerprint(sf_dir: str) -> tuple:
-    return parquet_fingerprint(sf_dir, "embeddings")
-
-
-def _kmeans_cents(spark: SparkSession, sf_dir: str):
+# IVF coarse quantizer: Lloyd's is deterministic per dataset, and building
+# the coarse quantizer is a separate lifecycle step from searching it —
+# rerunning the same 2 iterations on every query invocation would bill ~2
+# Catalyst analysis passes + 2 tiny jobs per call for bit-identical
+# centroids. Keyed on the embeddings fingerprint, not the path alone:
+# regenerated data at the same sf_dir must rebuild or the cached
+# centroids silently diverge from the oracle's (ADVICE r2).
+@shared("kmeans_cents", "embeddings")
+def _kmeans_cents(
+    spark: SparkSession, sf_dir: str
+) -> list[tuple[int, list[float]]]:
     from n2khab_mhq_data_spark.llmdata.similarity import ivf_kmeans_centroids
 
-    key = (sf_dir, _embeddings_fingerprint(sf_dir))
-    if key not in _KMEANS_CENTS:
-        _KMEANS_CENTS[key] = ivf_kmeans_centroids(
-            load(spark, sf_dir, "embeddings"), iters=2
-        )
-    return _KMEANS_CENTS[key]
+    return ivf_kmeans_centroids(
+        load(spark, sf_dir, "embeddings"), iters=2
+    )
+
+
+# near-dup pair table — the same lifecycle argument as the k-means
+# centroids above: the verified (d1, d2) near-dup edge list at (k=3, 0.8)
+# is the shared intermediate that FIVE queries (canonicalize, both CC
+# variants, the size histogram, the leakage-safe split) consume, and a
+# real curation pipeline materializes it once, not per consumer. The
+# value is a localCheckpoint'ed DataFrame (materialized edge rows on
+# executors — the pair table is orders of magnitude smaller than the
+# corpus). Determinism: the pair pipeline is exact (no RNG), so the
+# checkpointed rows are bit-identical to a recompute.
+@shared("near_pairs", "documents")
+def _near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load(spark, sf_dir, "documents")
+    return ngram_jaccard_pairs(
+        docs, "text", "doc_id", k=3, threshold=0.8
+    ).localCheckpoint()
+
+
+@shared("components", "documents")
+def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact component labels over the near-dup pair graph — the shared
+    intermediate of dedup_components, dedup_component_sizes and
+    dedup_canonicalize-style survivorship: a real pipeline labels the
+    corpus once and derives every dedup/observability table from the
+    labels, not one label propagation per consumer. NOTE:
+    dedup_components_twophase intentionally does NOT use it — it exists
+    to differentially audit the two-phase ALGORITHM, so it must run its
+    own propagation every time."""
+    from n2khab_mhq_data_spark.llmdata.dedup import connected_components
+
+    near = _near_pairs(spark, sf_dir)
+    return connected_components(near, "d1", "d2").localCheckpoint()
+
+
+@shared("bigram_lm", "documents")
+def _bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RAW per-doc bigram-LM fluency table (doc_id, n_scored,
+    mean_logprob unrounded) — the shared intermediate of THREE consumers
+    (text_bigram_lm, the adaptive quality gate's percentile threshold,
+    curriculum binning): a real pipeline scores the corpus with its LM
+    once, not per consumer; localCheckpoint'ed (doc-grain, far smaller
+    than the bigram stream)."""
+    from n2khab_mhq_data_spark.llmdata.text import bigram_lm_logprob
+
+    return bigram_lm_logprob(
+        load(spark, sf_dir, "documents"), "text", "doc_id", 0.75,
+        rounded=False,
+    ).localCheckpoint()
 
 
 _IVF_KMEANS_TOPK_SQL = f"""
@@ -4591,25 +4515,21 @@ def _bpe_encode_oracle(num_merges: int = 8, max_vocab: int = 10000) -> str:
     return "".join(parts)
 
 
-# tokenizer-training memo — the same lifecycle argument as the k-means
-# and near-pair memos: training the merge table is a build step its two
-# consumers (the merge-table query and corpus-wide encode) share; the
-# loop is deterministic, so the memo is bit-identical to a retrain.
-# Keyed by the documents parquet fingerprint (regenerated data
-# invalidates); the value is a plain Python list, session-independent.
-_BPE_MERGES: dict[tuple, list[tuple[int, str, str, int]]] = {}
-
-
-def _bpe_merges(spark: SparkSession, sf_dir: str):
+# tokenizer training — the same lifecycle argument as the k-means
+# centroids and the near-pair table: training the merge table is a build
+# step its two consumers (the merge-table query and corpus-wide encode)
+# share; the loop is deterministic, so the value is bit-identical to a
+# retrain.
+@shared("bpe_merges", "documents")
+def _bpe_merges(
+    spark: SparkSession, sf_dir: str
+) -> list[tuple[int, str, str, int]]:
     from n2khab_mhq_data_spark.llmdata.text import bpe_train
 
-    key = (sf_dir, _docs_fingerprint(sf_dir))
-    if key not in _BPE_MERGES:
-        _BPE_MERGES[key] = bpe_train(
-            load(spark, sf_dir, "documents"), "text", num_merges=8,
-            max_vocab=10000,
-        )
-    return _BPE_MERGES[key]
+    return bpe_train(
+        load(spark, sf_dir, "documents"), "text", num_merges=8,
+        max_vocab=10000,
+    )
 
 
 @query("text_bpe_merges", oracle=_bpe_merges_oracle())

@@ -12,7 +12,7 @@ from n2khab_mhq_data_spark.llmdata.pipeline import (
     pack_sequences,
     tfidf_topk,
 )
-from n2khab_mhq_data_spark.plans import query
+from n2khab_mhq_data_spark.plans import query, shared
 
 
 @query(
@@ -125,32 +125,17 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tfidf_topk(load(spark, sf_dir, "documents"), "text", "doc_id", 3)
 
 
-# BM25 postings/doc-length memo — the materialized search index both
+# BM25 postings/doc-length tables — the materialized search index both
 # retrieval consumers (text_bm25_topk, sim_rrf_fusion's lexical leg)
-# share; same lifecycle as the near-dup pair memo (fingerprint-keyed,
-# dead-session entries evicted; bench declares the build step).
-_BM25_IDX: dict[tuple, tuple] = {}
-
-
+# share.
+@shared("bm25_index", "documents")
 def _bm25_index(spark: SparkSession, sf_dir: str) -> tuple:
     from n2khab_mhq_data_spark.llmdata.pipeline import bm25_index
-    from n2khab_mhq_data_spark.plans.llm import _docs_fingerprint
 
-    for k in [
-        k
-        for k, v in _BM25_IDX.items()
-        if v[0].sparkSession is not spark
-    ]:
-        del _BM25_IDX[k]
-    key = (sf_dir, _docs_fingerprint(sf_dir))
-    idx = _BM25_IDX.get(key)
-    if idx is None:
-        tf, doclen = bm25_index(
-            load(spark, sf_dir, "documents"), "text", "doc_id"
-        )
-        idx = (tf.localCheckpoint(), doclen.localCheckpoint())
-        _BM25_IDX[key] = idx
-    return idx
+    tf, doclen = bm25_index(
+        load(spark, sf_dir, "documents"), "text", "doc_id"
+    )
+    return tf.localCheckpoint(), doclen.localCheckpoint()
 
 
 # The retrieval benchmark's fixed query set (terms from the corpus

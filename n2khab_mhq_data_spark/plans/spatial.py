@@ -572,24 +572,14 @@ def _demo_gpkg(spark: SparkSession, sf_dir: str) -> str:
     (data_heide_groot_schietveld.Rmd:32) at a size that forces multiple
     rowid-window tasks. Geometry is integer-arithmetic-exact so the
     DuckDB oracle re-derives the areas from the customer view alone."""
-    import hashlib
     import os
 
-    from n2khab_mhq_data_spark.plans.llm import _docs_fingerprint
+    from n2khab_mhq_data_spark.plans.pipeline import _table_fingerprint
     from n2khab_mhq_data_spark.spatial.geopackage import (
         write_geopackage_layer,
     )
 
-    cust = os.path.join(sf_dir, "customer.parquet")
-    files = sorted(
-        os.path.join(cust, f) for f in os.listdir(cust)
-    ) if os.path.isdir(cust) else [cust]
-    fp = hashlib.md5(
-        ";".join(
-            f"{f}:{os.stat(f).st_mtime_ns}:{os.stat(f).st_size}"
-            for f in files
-        ).encode()
-    ).hexdigest()[:16]
+    fp = _table_fingerprint(sf_dir, "customer")
     scratch = "/root/repo/.scale/gpkg"
     os.makedirs(scratch, exist_ok=True)
     path = os.path.join(scratch, f"plots_{fp}.gpkg")

@@ -169,22 +169,3 @@ def to_lambert72_udf(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
     transform sf::st_transform performs in the reference."""
     x, y = wgs84_to_lambert72_full(lon.to_numpy(), lat.to_numpy())
     return pd.DataFrame({"x": x, "y": y})
-
-
-_LL_SCHEMA = StructType(
-    [StructField("lon", DoubleType()), StructField("lat", DoubleType())]
-)
-
-
-@F.pandas_udf(_LL_SCHEMA)
-def lambert72_to_bd72_udf(x: pd.Series, y: pd.Series) -> pd.DataFrame:
-    """Inverse projection leg ONLY — output lon/lat stay on BD72."""
-    lon, lat = lambert72_to_wgs84(x.to_numpy(), y.to_numpy())
-    return pd.DataFrame({"lon": lon, "lat": lat})
-
-
-@F.pandas_udf(_LL_SCHEMA)
-def to_wgs84_udf(x: pd.Series, y: pd.Series) -> pd.DataFrame:
-    """Full inverse EPSG:31370: LCC inverse + Helmert shift to true WGS84."""
-    lon, lat = lambert72_to_wgs84_full(x.to_numpy(), y.to_numpy())
-    return pd.DataFrame({"lon": lon, "lat": lat})

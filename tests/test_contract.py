@@ -148,3 +148,46 @@ def test_cluster_conf_profile():
     small = cluster_conf(executors=10, executor_cores=8)
     assert small["spark.sql.shuffle.partitions"] == "160"
     assert small["spark.executor.memory"] == "32g"
+
+
+def test_registry_order_leads_with_unchecked_queries():
+    """queries() leads with the queries whose latest CORRECTNESS_r{N}
+    row failed, then those never hash-checked, and ends with the
+    hash-green ones — derived from those files, not a hand list."""
+    import json
+    import re
+    from pathlib import Path
+
+    root = Path(entrymod.__file__).resolve().parent
+    latest: dict[str, dict] = {}
+    for p in sorted(
+        root.glob("CORRECTNESS_r*.json"),
+        key=lambda p: int(re.search(r"_r(\d+)", p.name)[1]),
+    ):
+        latest.update(json.loads(p.read_text()))
+
+    qs = list(entrymod.queries())
+    failed = {
+        n
+        for n in qs
+        if n in latest
+        and (
+            latest[n]["err"]
+            or False
+            in (
+                latest[n]["rows_match"],
+                latest[n]["schema_match"],
+                latest[n]["hash_match"],
+            )
+        )
+    }
+    green = {
+        n
+        for n in qs
+        if n in latest and n not in failed and latest[n]["hash_match"]
+    }
+    unchecked = set(qs) - failed - green
+    head = len(failed) + len(unchecked)
+    assert set(qs[: len(failed)]) == failed
+    assert set(qs[len(failed) : head]) == unchecked
+    assert set(qs[head:]) == green
