@@ -33,6 +33,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 BASELINE = Path(__file__).resolve().parent / "plan_fingerprints.json"
 FP_SF_DIR = "/root/testdata/sf0.001"  # fingerprints only need a schema-true dir
+# The core count is part of many plans (shuffle.partitions, repartition by
+# defaultParallelism), so fingerprints are taken on a fixed one: a baseline
+# made on another machine would otherwise differ in dozens of queries.
+FP_CPUS = 4
 SF1_DIR = "/root/repo/.scale/sf1.0"
 
 
@@ -59,7 +63,7 @@ def fingerprints() -> dict[str, str]:
 
     import __spark_entry__ as entry
 
-    spark = get_spark()
+    spark = get_spark(cpus=FP_CPUS)
     fps = {}
     for name, fn in sorted(entry.queries().items()):
         try:
