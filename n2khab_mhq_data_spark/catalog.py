@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from n2khab_mhq_data_spark.functions.scalars import ident
+
 # reference yml class -> Spark type (SURVEY.md §1.2 table)
 YML_CLASS_TO_SPARK: dict[str, T.DataType] = {
     "integer": T.IntegerType(),
@@ -347,7 +349,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for c in nanos:
         if dtypes.get(c) == "bigint":
             df = df.withColumn(
-                c, F.timestamp_micros(F.expr(f"{c} div 1000"))
+                c, F.expr(f"timestamp_micros({ident(c)} div 1000)")
             )
     if name == "events" and dtypes.get("ts") == "timestamp_ntz":
         # driver may write plain TIMESTAMP(MICROS) without UTC
@@ -355,7 +357,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # timezone is pinned to UTC so this cast is value-preserving
         # and keeps downstream session_window/unix_millis plans typed
         # as they expect
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = df.withColumn("ts", F.expr("CAST(ts AS TIMESTAMP)"))
     return df
 
 

@@ -22,3 +22,14 @@ def eps_round(col: Column, d: int, eps: float = EPS) -> Column:
     """Round with a deterministic away-from-zero epsilon shift (see module
     docstring). Use for every *computed* float the oracle compares."""
     return F.round(col + F.signum(col) * eps, d)
+
+
+def eps_round_sql(expr: str, d: int, eps: float = EPS) -> str:
+    """:func:`eps_round` as Spark SQL text, for builders that emit their
+    expressions as strings (``D`` keeps the epsilon a DOUBLE literal)."""
+    return f"round(({expr}) + signum({expr}) * {eps!r}D, {d})"
+
+
+def ident(name: str) -> str:
+    """A column name as a quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"

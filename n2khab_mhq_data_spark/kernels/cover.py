@@ -57,7 +57,7 @@ def decode_cover(
             " duplicates; rename or drop them first"
         )
     return df.join(
-        F.broadcast(dim),
+        dim.hint("broadcast"),
         on=[scale_col, class_col],
         how="left",
     )

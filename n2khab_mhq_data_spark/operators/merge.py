@@ -9,8 +9,7 @@ foreachBatch."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from n2khab_mhq_data_spark.operators.relational import dedup_keep_latest
 
@@ -19,17 +18,18 @@ def incremental_merge(
     published: DataFrame,
     delta: DataFrame,
     keys: list[str],
-    order_by: list[Column],
+    order_by: list[str],
 ) -> DataFrame:
     """unionByName (schema drift tolerated: missing cols -> null) then
     latest-wins dedup on the key, with DELTA-BEATS-PUBLISHED as the
     final tiebreak: when a delta row carries exactly the same
-    ``order_by`` values as the published row it corrects (a
+    ``order_by`` values (SQL ORDER BY items, as in
+    ``dedup_keep_latest``) as the published row it corrects (a
     same-timestamp correction, common in CDC replays), the delta row
     deterministically wins — otherwise which row survives would be
     partition-order luck, and two replays of the same batch could
     publish different states. When ``order_by`` is already a total
-    order (e.g. [ts.desc(), event_id.desc()] with unique ids) the tag
+    order (e.g. ["ts DESC", "event_id DESC"] with unique ids) the tag
     never decides anything.
 
     Scale note: the shuffle is on ``keys`` only; at 100 TB partition the
@@ -40,9 +40,9 @@ def incremental_merge(
             "incremental_merge reserves the '__src' column name;"
             " rename it before merging"
         )
-    merged = published.withColumn("__src", F.lit(0)).unionByName(
-        delta.withColumn("__src", F.lit(1)), allowMissingColumns=True
+    merged = published.selectExpr("*", "0 AS __src").unionByName(
+        delta.selectExpr("*", "1 AS __src"), allowMissingColumns=True
     )
     return dedup_keep_latest(
-        merged, keys, list(order_by) + [F.col("__src").desc()]
+        merged, keys, [*order_by, "__src DESC"]
     ).drop("__src")

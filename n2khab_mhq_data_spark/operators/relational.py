@@ -11,6 +11,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from n2khab_mhq_data_spark.functions.scalars import ident
+
 
 class GrainViolation(AssertionError):
     pass
@@ -50,26 +52,32 @@ def assert_grain(df: DataFrame, keys: list[str], max_show: int = 20) -> DataFram
 
 
 def dedup_keep_latest(
-    df: DataFrame, keys: list[str], order_by: list[Column]
+    df: DataFrame, keys: list[str], order_by: list[str]
 ) -> DataFrame:
     """Keyed dedup with ordering: keeps the FIRST row per key under
-    ``order_by`` — for most-recent-wins (filter(date_status ==
-    max(date_status)) + unique(), query_fieldmap.Rmd:1376-1379) pass
-    DESCENDING columns, e.g. ``[F.col("updated_at").desc(), ...]`` (as
-    incremental_merge does); plain ascending columns keep the OLDEST.
-    ``order_by`` must be a total order (add a unique id as final
-    tiebreak)."""
+    ``order_by``, a list of SQL ORDER BY items — for most-recent-wins
+    (filter(date_status == max(date_status)) + unique(),
+    query_fieldmap.Rmd:1376-1379) pass DESCENDING items, e.g.
+    ``["updated_at DESC", ...]`` (as incremental_merge does); plain
+    ascending items keep the OLDEST. ``order_by`` must be a total order
+    (add a unique id as final tiebreak). The window is SQL text, so the
+    build costs a handful of py4j calls however many keys there are."""
     if "__rn" in df.columns:
-        # withColumn would silently replace it and drop() then delete
-        # the caller's data — same guard as membership_flag/asof_join
+        # selecting "*" plus a second __rn would make the filter
+        # ambiguous and drop() then delete the caller's data — same
+        # guard as membership_flag/asof_join
         raise ValueError(
             "dedup_keep_latest reserves the '__rn' column name;"
             " rename it before deduping"
         )
-    w = W.partitionBy(*keys).orderBy(*order_by)
+    part = ", ".join(ident(k) for k in keys)
     return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        df.selectExpr(
+            "*",
+            f"row_number() OVER (PARTITION BY {part}"
+            f" ORDER BY {', '.join(order_by)}) AS __rn",
+        )
+        .where("__rn = 1")
         .drop("__rn")
     )
 

@@ -22,8 +22,8 @@ for same-key windows), and nothing is ever collected.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
+
+from n2khab_mhq_data_spark.functions.scalars import ident
 
 
 def scd2_history(
@@ -49,18 +49,22 @@ def scd2_history(
             f"scd2_history reserves column names {sorted(reserved)};"
             " rename them before deriving history"
         )
-    order = [ts_col] + (tiebreak_cols or [])
-    w = W.partitionBy(*key_cols).orderBy(*order)
-    state = F.struct(*[F.col(c) for c in state_cols])
+    # both windows are SQL text over the same (key, ts, tiebreak) order,
+    # so Spark plans one Exchange and the build costs a few py4j calls
+    order = ", ".join(ident(c) for c in [ts_col, *(tiebreak_cols or [])])
+    over = (
+        f"OVER (PARTITION BY {', '.join(ident(c) for c in key_cols)}"
+        f" ORDER BY {order})"
+    )
+    state = f"struct({', '.join(ident(c) for c in state_cols)})"
     # null-safe comparison: a null state field must still compare (a
     # plain != returns null and would silently drop real changes)
-    changed = df.withColumn(
-        "__prev", F.lag(state).over(w)
-    ).filter(~F.col("__prev").eqNullSafe(state))
-    w2 = W.partitionBy(*key_cols).orderBy(*order)
+    changed = df.selectExpr("*", f"lag({state}) {over} AS __prev").where(
+        f"NOT (__prev <=> {state})"
+    )
     return (
-        changed.withColumn("valid_from", F.col(ts_col))
-        .withColumn("valid_to", F.lead("valid_from").over(w2))
-        .withColumn("is_current", F.col("valid_to").isNull())
+        changed.selectExpr("*", f"{ident(ts_col)} AS valid_from")
+        .selectExpr("*", f"lead(valid_from) {over} AS valid_to")
+        .selectExpr("*", "valid_to IS NULL AS is_current")
         .drop("__prev")
     )

@@ -11,7 +11,7 @@ from pyspark.sql.window import Window as W
 
 from n2khab_mhq_data_spark.catalog import load, local_dim
 from n2khab_mhq_data_spark.functions.parsing import parse_measurement
-from n2khab_mhq_data_spark.functions.scalars import eps_round
+from n2khab_mhq_data_spark.functions.scalars import eps_round, eps_round_sql
 from n2khab_mhq_data_spark.kernels.cover import (
     cover_scale_dim,
     decode_cover,
@@ -70,29 +70,20 @@ _BB_CLASSES = ["r", "+", "1", "2", "3", "4", "5"]
 def k1_cover_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K1 cover-scale decode: (scale, class code) -> mean cover % via the
     broadcast 60-row dimension (query_fieldmap.Rmd:78-93,351-356)."""
-    e = load(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull() & (F.col("value") >= 0)
-    )
-    bb = F.array(*[F.lit(x) for x in _BB_CLASSES])
-    coded = e.select(
+    e = load(spark, sf_dir, "events").where("value IS NOT NULL AND value >= 0")
+    bb = ", ".join(f"'{x}'" for x in _BB_CLASSES)
+    coded = e.selectExpr(
         "event_id",
-        F.when(F.col("user_id") % 2 == 0, "londo")
-        .otherwise("braun_blanquet")
-        .alias("coverscale_name"),
-        F.when(
-            F.col("user_id") % 2 == 0,
-            F.least(F.floor(F.col("value") / 40) + 1, F.lit(5)).cast("string"),
-        )
-        .otherwise(
-            F.element_at(
-                bb, F.least(F.floor(F.col("value") / 30) + 1, F.lit(7)).cast("int")
-            )
-        )
-        .alias("class_id"),
+        "CASE WHEN user_id % 2 = 0 THEN 'londo' ELSE 'braun_blanquet' END"
+        " AS coverscale_name",
+        "CASE WHEN user_id % 2 = 0"
+        " THEN CAST(least(floor(value / 40) + 1, 5) AS STRING)"
+        f" ELSE element_at(array({bb}),"
+        " CAST(least(floor(value / 30) + 1, 7) AS INT)) END AS class_id",
     )
     decoded = decode_cover(coded, cover_scale_dim(spark))
     return decoded.groupBy("coverscale_name", "class_id", "cover_mean").agg(
-        F.count("*").alias("n")
+        F.expr("count(*) AS n")
     )
 
 
@@ -740,21 +731,19 @@ def k10_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators.merge.incremental_merge). The streaming wrapper reuses this
     exact function per micro-batch."""
     e = load(spark, sf_dir, "events")
-    cutoff = F.lit("2024-04-01").cast("timestamp")
-    published = e.filter(F.col("ts") < cutoff)
-    delta = e.filter(F.col("ts") >= cutoff)
+    cutoff = "CAST('2024-04-01' AS TIMESTAMP)"
     merged = incremental_merge(
-        published,
-        delta,
+        e.where(f"ts < {cutoff}"),
+        e.where(f"ts >= {cutoff}"),
         keys=["user_id", "event_type"],
-        order_by=[F.col("ts").desc(), F.col("event_id").desc()],
+        order_by=["ts DESC", "event_id DESC"],
     )
-    return merged.select(
+    return merged.selectExpr(
         "user_id",
         "event_type",
         "event_id",
-        F.col("ts").cast("date").alias("day"),
-        eps_round(F.col("value"), 2).alias("value"),
+        "CAST(ts AS DATE) AS day",
+        f"{eps_round_sql('value', 2)} AS value",
     )
 
 

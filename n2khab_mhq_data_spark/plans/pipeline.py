@@ -1207,7 +1207,7 @@ def _merge_store(spark: SparkSession, sf_dir: str) -> str:
             tmp,
             updates.unionByName(inserts),
             ["c_custkey"],
-            [F.col("rev").desc()],
+            ["rev DESC"],
         )
 
     return _scratch_build(

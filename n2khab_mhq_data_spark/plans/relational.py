@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from n2khab_mhq_data_spark.catalog import load
-from n2khab_mhq_data_spark.functions.scalars import eps_round
+from n2khab_mhq_data_spark.functions.scalars import eps_round, eps_round_sql
 from n2khab_mhq_data_spark.plans import query
 
 # ---------------------------------------------------------------------------
@@ -319,9 +319,9 @@ def j6_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6 semi join — keep rows with a match, add no columns (~15 sites,
     HT31xx_LSVI.Rmd:118,181)."""
     c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 20000)
-    return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
-        F.col("c_custkey").alias("custkey"), F.col("c_name").alias("name")
+    o = load(spark, sf_dir, "orders").where("o_totalprice > 20000")
+    return c.join(o, F.expr("c_custkey = o_custkey"), "left_semi").selectExpr(
+        "c_custkey AS custkey", "c_name AS name"
     )
 
 
@@ -683,13 +683,12 @@ def a2_min_max_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     query_fieldmap.Rmd:820-826,1412-1419)."""
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy(
-        F.col("l_returnflag").alias("returnflag"),
-        F.col("l_linestatus").alias("linestatus"),
+        F.expr("l_returnflag AS returnflag"), F.expr("l_linestatus AS linestatus")
     ).agg(
-        F.min(F.col("l_shipdate").cast("date")).alias("min_shipdate"),
-        F.max(F.col("l_shipdate").cast("date")).alias("max_shipdate"),
-        F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-        eps_round(F.avg("l_extendedprice"), 2).alias("avg_price"),
+        F.expr("min(CAST(l_shipdate AS DATE)) AS min_shipdate"),
+        F.expr("max(CAST(l_shipdate AS DATE)) AS max_shipdate"),
+        F.expr("round(sum(l_quantity), 2) AS sum_qty"),
+        F.expr(f"{eps_round_sql('avg(l_extendedprice)', 2)} AS avg_price"),
     )
 
 

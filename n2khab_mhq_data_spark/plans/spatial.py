@@ -1,5 +1,5 @@
 """Spatial queries J10/J11/K5/K11 (SURVEY.md §2.3, §2.10) — pandas-UDF
-geometry kernels differentially tested against closed-form SQL oracles.
+geometry kernels and SQL-text CRS formulas, tested against SQL oracles.
 
 Synthetic geometry: points and segment cuts are derived from customer keys
 with pure integer arithmetic, so the DuckDB oracle can re-derive the exact
@@ -8,7 +8,6 @@ arithmetic form. The Spark side still runs the REAL general kernels
 (ray-casting, strip clipping, LCC projection)."""
 
 from __future__ import annotations
-
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,14 +66,40 @@ def j10_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     return point_in_polygon_join(_points(spark, sf_dir), _GRID_POLYGONS)
 
 
-_LCC_CONSTS = (
-    f"SELECT {crs._E!r}::DOUBLE AS e, {crs._A!r}::DOUBLE AS a,"
-    f" {float(crs._N)!r}::DOUBLE AS n,"
-    f" {float(crs._BIGF)!r}::DOUBLE AS bigf,"
-    f" {float(crs._RHO0)!r}::DOUBLE AS rho0,"
-    f" {crs._LON0!r}::DOUBLE AS lon0, {crs._X0!r}::DOUBLE AS x0,"
-    f" {crs._Y0!r}::DOUBLE AS y0"
+# the synthetic BD72/WGS84 point of each customer, in radians
+_PHI = "radians(50.0D + (c_custkey % 100) / 100.0D)"
+_LAM = "radians(3.0D + (c_custkey % 73) / 73.0D * 2)"
+
+
+def _consts(**values: float) -> str:
+    """A one-row oracle relation of named DOUBLE constants."""
+    return "SELECT " + ", ".join(
+        f"{float(v)!r}::DOUBLE AS {k}" for k, v in values.items()
+    )
+
+
+_LCC_CONSTS = _consts(
+    e=crs._E, a=crs._A, n=crs._N, bigf=crs._BIGF, rho0=crs._RHO0,
+    lon0=crs._LON0, x0=crs._X0, y0=crs._Y0,
 )
+
+
+def _lcc_oracle(src: str) -> str:
+    """The K11 oracles' last step: LCC-2SP from ``src``'s radian
+    ``phi``/``lam`` columns to rounded metres."""
+    return f""", proj AS (
+      SELECT point_id,
+             a * bigf * power(
+               tan(pi() / 4 - phi / 2)
+               / power((1 - e * sin(phi)) / (1 + e * sin(phi)), e / 2), n)
+               AS rho,
+             n * (lam - lon0) AS theta, x0, y0, rho0
+      FROM {src}, k
+    )
+    SELECT point_id,
+           round(x0 + rho * sin(theta) + 1e-9, 3) AS x,
+           round(y0 + rho0 - rho * cos(theta) + 1e-9, 3) AS y
+    FROM proj"""
 
 
 @query(
@@ -86,55 +111,32 @@ _LCC_CONSTS = (
              radians(50.0 + (c_custkey % 100) / 100.0) AS phi,
              radians(3.0 + (c_custkey % 73) / 73.0 * 2) AS lam
       FROM customer
-    ), proj AS (
-      SELECT point_id,
-             a * bigf * power(
-               tan(pi()/4 - phi/2)
-               / power((1 - e*sin(phi)) / (1 + e*sin(phi)), e/2), n) AS rho,
-             n * (lam - lon0) AS theta, x0, y0, rho0
-      FROM pts, k
-    )
-    SELECT point_id,
-           round(x0 + rho * sin(theta) + 1e-9, 3) AS x,
-           round(y0 + rho0 - rho * cos(theta) + 1e-9, 3) AS y
-    FROM proj
+    ){_lcc_oracle("pts")}
     """,
 )
 def k11_crs_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K11 CRS transform, projection leg (BD72 lon/lat -> Lambert-72 metres):
-    Snyder LCC-2SP in a vectorized pandas UDF; the oracle evaluates the same
-    published formulas in SQL. The full sf::st_transform pipeline (datum
-    shift + projection) is k11_crs_full_datum."""
-    c = load(spark, sf_dir, "customer")
-    pts = c.select(
-        F.col("c_custkey").alias("point_id"),
-        (50.0 + (F.col("c_custkey") % 100) / 100.0).alias("lat"),
-        (3.0 + (F.col("c_custkey") % 73) / 73.0 * 2).alias("lon"),
-    )
-    out = pts.withColumn(
-        "xy", crs.bd72_to_lambert72_udf(F.col("lon"), F.col("lat"))
-    )
-    return out.select(
-        "point_id",
-        F.round(F.col("xy.x") + F.lit(1e-9), 3).alias("x"),
-        F.round(F.col("xy.y") + F.lit(1e-9), 3).alias("y"),
+    Snyder LCC-2SP as one SQL-text projection; the oracle evaluates the same
+    published formulas. The full sf::st_transform pipeline (datum shift +
+    projection) is k11_crs_full_datum."""
+    x, y = crs.lambert72_sql(_PHI, _LAM)
+    return load(spark, sf_dir, "customer").selectExpr(
+        "c_custkey AS point_id",
+        f"round({x} + 1e-9D, 3) AS x",
+        f"round({y} + 1e-9D, 3) AS y",
     )
 
 
-_HELMERT_CONSTS = (
-    f"SELECT {crs._WGS_A!r}::DOUBLE AS wa, {crs._WGS_E2!r}::DOUBLE AS we2,"
-    f" {crs._A!r}::DOUBLE AS a2, {crs._E2!r}::DOUBLE AS e2,"
-    f" {crs._TX!r}::DOUBLE AS tx, {crs._TY!r}::DOUBLE AS ty,"
-    f" {crs._TZ!r}::DOUBLE AS tz, {float(crs._RX)!r}::DOUBLE AS rx,"
-    f" {float(crs._RY)!r}::DOUBLE AS ry, {float(crs._RZ)!r}::DOUBLE AS rz,"
-    f" {crs._DS!r}::DOUBLE AS ds"
+_HELMERT_CONSTS = _consts(
+    wa=crs._WGS_A, we2=crs._WGS_E2, a2=crs._A, e2=crs._E2, tx=crs._TX,
+    ty=crs._TY, tz=crs._TZ, rx=crs._RX, ry=crs._RY, rz=crs._RZ, ds=crs._DS,
 )
 
 # 6 unrolled iterations of the geocentric->geodetic latitude recovery
 # (mirrors crs._xyz_to_geodetic's fixed-point loop exactly)
 _PHI_ITER = "".join(
     f""", g{i + 1} AS (
-      SELECT point_id, lmb, p, zb, e2, a2,
+      SELECT point_id, lam, p, zb, e2, a2,
              atan2(zb + e2 * (a2 / sqrt(1 - e2 * sin(phi) * sin(phi)))
                    * sin(phi), p) AS phi
       FROM g{i}
@@ -170,42 +172,27 @@ _PHI_ITER = "".join(
         FROM xyz0
       ) q
     ), g0 AS (
-      SELECT point_id, atan2(yb, xb) AS lmb,
+      SELECT point_id, atan2(yb, xb) AS lam,
              sqrt(xb * xb + yb * yb) AS p, zb, e2, a2,
              atan2(zb, sqrt(xb * xb + yb * yb) * (1 - e2)) AS phi
       FROM xyz, hk
-    ){_PHI_ITER}, proj AS (
-      SELECT point_id,
-             a * bigf * power(
-               tan(pi() / 4 - phi / 2)
-               / power((1 - e * sin(phi)) / (1 + e * sin(phi)), e / 2), n)
-               AS rho,
-             n * (lmb - lon0) AS theta, x0, y0, rho0
-      FROM g6, k
-    )
-    SELECT point_id,
-           round(x0 + rho * sin(theta) + 1e-9, 3) AS x,
-           round(y0 + rho0 - rho * cos(theta) + 1e-9, 3) AS y
-    FROM proj
+    ){_PHI_ITER}{_lcc_oracle("g6")}
     """,
 )
 def k11_crs_full_datum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K11 full EPSG:31370 pipeline from true WGS84 (what sf::st_transform
     does, process_external_data.Rmd:148-152): Helmert 7-parameter shift to
     BD72 (inverse EPSG:15929) then LCC-2SP. ~100 m from the projection-only
-    leg over Belgium. Oracle re-derives every step in SQL, including the
-    fixed-point latitude recovery unrolled to the same 6 iterations."""
-    c = load(spark, sf_dir, "customer")
-    pts = c.select(
-        F.col("c_custkey").alias("point_id"),
-        (50.0 + (F.col("c_custkey") % 100) / 100.0).alias("lat"),
-        (3.0 + (F.col("c_custkey") % 73) / 73.0 * 2).alias("lon"),
+    leg over Belgium. Spark and the oracle evaluate the same SQL steps,
+    the fixed-point latitude recovery unrolled to the same 6 iterations."""
+    df = load(spark, sf_dir, "customer").selectExpr(
+        "c_custkey AS point_id", f"{_PHI} AS phi", f"{_LAM} AS lam"
     )
-    out = pts.withColumn("xy", crs.to_lambert72_udf(F.col("lon"), F.col("lat")))
-    return out.select(
-        "point_id",
-        F.round(F.col("xy.x") + F.lit(1e-9), 3).alias("x"),
-        F.round(F.col("xy.y") + F.lit(1e-9), 3).alias("y"),
+    for step in crs.wgs84_to_bd72_sql():
+        df = df.selectExpr("point_id", *step)
+    x, y = crs.lambert72_sql("phi", "lam")
+    return df.selectExpr(
+        "point_id", f"round({x} + 1e-9D, 3) AS x", f"round({y} + 1e-9D, 3) AS y"
     )
 
 

@@ -61,16 +61,12 @@ def w2_keep_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query_fieldmap.Rmd:1376-1379). Note: ALL rows tied at the max survive —
     that is the reference semantic, distinct from W3's single-row slice."""
     e = load(spark, sf_dir, "events")
-    w = W.partitionBy("user_id", "event_type")
     return (
-        e.withColumn("max_ts", F.max("ts").over(w))
-        .filter(F.col("ts") == F.col("max_ts"))
-        .select(
-            "user_id",
-            "event_type",
-            F.col("ts").cast("date").alias("day"),
-            "event_id",
+        e.selectExpr(
+            "*", "max(ts) OVER (PARTITION BY user_id, event_type) AS max_ts"
         )
+        .where("ts = max_ts")
+        .selectExpr("user_id", "event_type", "CAST(ts AS DATE) AS day", "event_id")
     )
 
 
@@ -919,15 +915,15 @@ def scd2_user_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning)."""
     from n2khab_mhq_data_spark.operators.scd import scd2_history
 
-    e = load(spark, sf_dir, "events").select(
+    e = load(spark, sf_dir, "events").selectExpr(
         "user_id", "event_type", "ts", "event_id"
     )
     out = scd2_history(
         e, ["user_id"], ["event_type"], "ts", tiebreak_cols=["event_id"]
     )
-    return out.select(
+    return out.selectExpr(
         "user_id",
-        F.col("event_type").alias("status"),
+        "event_type AS status",
         "event_id",
         "valid_from",
         "valid_to",

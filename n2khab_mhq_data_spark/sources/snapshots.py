@@ -44,6 +44,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from n2khab_mhq_data_spark.functions.scalars import ident
+
 
 def _manifest_dir(path: str) -> str:
     return os.path.join(path, "_manifests")
@@ -193,12 +195,12 @@ def merge_snapshot(
     path: str,
     delta: DataFrame,
     keys: list,
-    order_by: list,
+    order_by: list[str],
     extra_manifest: dict | None = None,
 ) -> int:
     """MERGE-publish: read the latest snapshot, upsert ``delta`` into
-    it (latest-wins on ``keys`` per ``order_by`` — the K10
-    incremental-merge kernel), and publish the result as a NEW version.
+    it (latest-wins on ``keys`` per ``order_by``, SQL ORDER BY items — the
+    K10 incremental-merge kernel), and publish the result as a NEW version.
     The previous version is untouched, so a bad merge is recoverable by
     reading AS OF its parent — the snapshot-log property that makes
     upserts safe at 100 TB without table locks (single-writer
@@ -373,7 +375,7 @@ def snapshot_stream(
         seen = _max_batch_id(path)
         if seen is not None and int(batch_id) <= seen:
             return  # replayed batch: its version is already manifested
-        order_by = [F.col(c).desc() for c in order_by_cols]
+        order_by = [f"{ident(c)} DESC" for c in order_by_cols]
         # batch_id rides INSIDE the manifest that write_snapshot renames
         # into place — stamping it afterwards left a crash window where
         # the version was already visible but not yet marked, so a

@@ -6,15 +6,12 @@ with the EPSG:31370 parameters on the International 1924 ellipsoid. The
 reference calls sf::st_transform for the same conversion
 (process_external_data.Rmd:148-152, data_questions.Rmd:157-164).
 
-Exposed as a vectorized pandas UDF — one Arrow batch in, two coordinate
-arrays out; scales linearly, no shuffle."""
+Queries run the numpy reference's formulas as Spark SQL text (the ``*_sql``
+functions), inside the JVM: no Python worker, no shuffle."""
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.types import StructType, StructField, DoubleType
 
 # International 1924 ellipsoid
 _A = 6378388.0
@@ -149,23 +146,38 @@ def lambert72_to_wgs84_full(x, y):
     return bd72_to_wgs84(lon_b, lat_b)
 
 
-_XY_SCHEMA = StructType(
-    [StructField("x", DoubleType()), StructField("y", DoubleType())]
-)
+def _d(v: float) -> str:
+    return f"({float(v)!r}D)"  # DOUBLE: a bare 0.5 parses as DECIMAL
 
 
-@F.pandas_udf(_XY_SCHEMA)
-def bd72_to_lambert72_udf(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-    """Projection leg ONLY (input lon/lat already on the BD72 datum) —
-    named bd72_* so the missing WGS84 datum shift is explicit at the call
-    site; use ``to_lambert72_udf`` for true-WGS84 input (~100 m apart)."""
-    x, y = wgs84_to_lambert72(lon.to_numpy(), lat.to_numpy())
-    return pd.DataFrame({"x": x, "y": y})
+def lambert72_sql(phi: str, lam: str) -> tuple[str, str]:
+    """``wgs84_to_lambert72`` as Spark SQL: the (x, y) metre expressions
+    of BD72 latitude ``phi`` and longitude ``lam``, SQL terms in radians."""
+    es = f"{_d(_E)} * sin({phi})"
+    rho = (
+        f"{_d(_A)} * {_d(_BIGF)} * power(tan(pi() / 4 - {phi} / 2)"
+        f" / power((1 - {es}) / (1 + {es}), {_d(_E)} / 2), {_d(_N)})"
+    )
+    theta = f"{_d(_N)} * ({lam} - {_d(_LON0)})"
+    x = f"{_d(_X0)} + {rho} * sin({theta})"
+    return x, f"{_d(_Y0)} + {_d(_RHO0)} - {rho} * cos({theta})"
 
 
-@F.pandas_udf(_XY_SCHEMA)
-def to_lambert72_udf(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-    """Full EPSG:31370 from true WGS84: Helmert datum shift + LCC, the
-    transform sf::st_transform performs in the reference."""
-    x, y = wgs84_to_lambert72_full(lon.to_numpy(), lat.to_numpy())
-    return pd.DataFrame({"x": x, "y": y})
+def wgs84_to_bd72_sql() -> list[list[str]]:
+    """``wgs84_to_bd72`` as Spark SQL: the ``selectExpr`` items of each step
+    from WGS84 radian columns ``phi``/``lam`` to BD72 ones. A step reads
+    only the previous step's columns, so each intermediate is computed
+    once; the latitude recovery is unrolled to ``_xyz_to_geodetic``'s 6
+    iterations."""
+    nu = f"({_d(_WGS_A)} / sqrt(1 - {_d(_WGS_E2)} * sin(phi) * sin(phi)))"
+    nu_b = f"({_d(_A)} / sqrt(1 - {_d(_E2)} * sin(phi) * sin(phi)))"
+    s, rx, ry, rz = f"(1 + {_d(_DS)})", _d(_RX), _d(_RY), _d(_RZ)
+    return [
+        [f"{nu} * cos(phi) * cos(lam) AS x", f"{nu} * cos(phi) * sin(lam) AS y",
+         f"{nu} * (1 - {_d(_WGS_E2)}) * sin(phi) AS z"],
+        [f"{_d(_TX)} + {s} * (x - {rz} * y + {ry} * z) AS xb",
+         f"{_d(_TY)} + {s} * ({rz} * x + y - {rx} * z) AS yb",
+         f"{_d(_TZ)} + {s} * (-{ry} * x + {rx} * y + z) AS zb"],
+        ["zb", "atan2(yb, xb) AS lam", "sqrt(xb * xb + yb * yb) AS p",
+         f"atan2(zb, sqrt(xb * xb + yb * yb) * (1 - {_d(_E2)})) AS phi"],
+    ] + [["zb", "lam", "p", f"atan2(zb + {_d(_E2)} * {nu_b} * sin(phi), p) AS phi"]] * 6

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window as W
 
+from n2khab_mhq_data_spark.functions.scalars import ident
 from n2khab_mhq_data_spark.operators.merge import incremental_merge
 
 
@@ -166,7 +167,7 @@ def merge_stream(
             published,
             batch,
             keys,
-            [F.col(c).desc() for c in order_cols],
+            [f"{ident(c)} DESC" for c in order_cols],
         )
         publish_state(s, state_path, merged)
 
@@ -268,7 +269,7 @@ def dedup_stream(
     # the ONE keyed-dedup implementation (guards included) — an inline
     # window copy here could drift from the batch contract
     return dedup_keep_latest(
-        events, list(keys), [F.col(ts_col), *[F.col(c) for c in tiebreak]]
+        events, list(keys), [ident(c) for c in [ts_col, *tiebreak]]
     )
 
 
@@ -327,7 +328,7 @@ def scd2_stream(
             log if log is not None else batch.limit(0),
             batch,
             key_cols + [ts_col],
-            [F.col(c).desc() for c in state_cols],
+            [f"{ident(c)} DESC" for c in state_cols],
         )
         # materialize the merged log FIRST; both downstream legs read it
         publish_state(s, events_path, all_events)

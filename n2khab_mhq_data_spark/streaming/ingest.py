@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from n2khab_mhq_data_spark.functions.scalars import ident
 from n2khab_mhq_data_spark.sources.jsonl import CORRUPT_COL, split_corrupt
 from n2khab_mhq_data_spark.streaming.incremental import (
     publish_state,
@@ -92,7 +93,7 @@ def jsonl_ingest_stream(
                 published,
                 good,
                 keys,
-                [F.col(c).desc() for c in order_cols],
+                [f"{ident(c)} DESC" for c in order_cols],
             )
             publish_state(s, state_path, merged)
         finally:

@@ -329,7 +329,7 @@ def neardup_gate_stream(
                     prev_side,
                     batch_verdicts,
                     [id_col],
-                    [F.col("is_dup").desc(), F.col("dup_of").asc_nulls_last()],
+                    ["is_dup DESC", "dup_of ASC NULLS LAST"],
                 )
             new_verdicts = new_verdicts.withColumn(
                 "vpart", _range_part(id_col)

@@ -170,7 +170,7 @@ def trending_topk_stream(
                 batch if prev_touched is None
                 else incremental_merge(
                     prev_touched, batch, ["window_start", "event_type"],
-                    [F.col("n").desc()],
+                    ["n DESC"],
                 )
             )
             merged = _with_part(merged).filter(

@@ -1,11 +1,14 @@
 """catalog.load's schema memo: only the first load of a table infers its
 schema (one Spark job); later loads, and the plan builds on top of them,
 launch none — and rewritten data or a changed inference conf infers
-again."""
+again. The benchmark's adhoc builds also stay within a py4j call budget,
+and its CRS op runs without a Python worker."""
 
 from __future__ import annotations
 
+import re
 import shutil
+import threading
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -13,8 +16,8 @@ import pyarrow.parquet as pq
 import __spark_entry__ as entrymod
 from n2khab_mhq_data_spark.catalog import TESTDATA_TABLES, load
 
-# the ops of the benchmark's adhoc and publish workloads
-BENCH_OPS = (
+# the ops of the benchmark's adhoc workload, then its publish workload
+ADHOC_OPS = (
     "a2_min_max_sum",
     "w2_keep_latest",
     "j6_semi_join",
@@ -22,8 +25,11 @@ BENCH_OPS = (
     "k10_incremental_merge",
     "k11_crs_transform",
     "scd2_user_status",
-    "mhq_publish_pipeline",
 )
+BENCH_OPS = (*ADHOC_OPS, "mhq_publish_pipeline")
+# py4j round-trips a warm build of one adhoc op may make: the builders emit
+# their expressions as SQL text, where a Column tree costs hundreds
+ADHOC_BUILD_CALLS = 100
 
 
 def _jobs(spark, group: str, action) -> int:
@@ -60,6 +66,49 @@ def test_plan_build_launches_no_jobs(spark, sf_dir, tmp_path):
         build = queries[op]
         builds[op] = _jobs(spark, f"build-{op}", lambda: build(spark, sf_dir))
     assert builds == dict.fromkeys(BENCH_OPS, 0)
+
+
+def _py4j_calls(spark, action) -> int:
+    """py4j round-trips (``send_command`` calls) that ``action`` makes.
+    Only this thread's calls count: py4j's finalizer thread sends one
+    call per released JVM object of earlier, unrelated frames, at
+    whatever moment the garbage collector runs."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    caller = threading.get_ident()
+    calls = 0
+
+    def counting(*args, **kwargs):
+        nonlocal calls
+        calls += threading.get_ident() == caller
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        action()
+    finally:
+        del client.send_command
+    return calls
+
+
+def test_adhoc_builds_stay_within_py4j_budget(spark, sf_dir):
+    queries = entrymod.queries()
+    calls = {}
+    for op in ADHOC_OPS:
+        build = queries[op]
+        build(spark, sf_dir)  # warm: the schema memo is filled
+        calls[op] = _py4j_calls(spark, lambda: build(spark, sf_dir))
+    over = {op: n for op, n in calls.items() if n > ADHOC_BUILD_CALLS}
+    assert not over, f"over {ADHOC_BUILD_CALLS} py4j calls: {calls}"
+
+
+def test_crs_transforms_run_without_python_workers(spark, sf_dir):
+    queries = entrymod.queries()
+    for op in ("k11_crs_transform", "k11_crs_full_datum"):
+        df = queries[op](spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert not re.search(r"EvalPython|InPandas|InArrow", plan), plan
 
 
 def test_load_reinfers_rewritten_table(spark, tmp_path):

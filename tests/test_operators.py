@@ -46,7 +46,7 @@ def test_dedup_keep_latest(plots):
     out = dedup_keep_latest(
         plots,
         ["plot_id", "mon_cycle"],
-        [F.col("date_status").desc(), F.col("status")],
+        ["date_status DESC", "status"],
     )
     rows = {(r.plot_id, r.mon_cycle): r.status for r in out.collect()}
     assert rows[(1, 1)] == "done"  # date 10 beats 5
@@ -1163,7 +1163,7 @@ def test_incremental_merge_delta_beats_published_on_ties(spark):
     out = {
         r["k"]: r["v"]
         for r in incremental_merge(
-            pub, delta, ["k"], [F.col("ts").desc()]
+            pub, delta, ["k"], ["ts DESC"]
         ).collect()
     }
     assert out == {1: "fixed", 2: "keep"}
@@ -1171,7 +1171,7 @@ def test_incremental_merge_delta_beats_published_on_ties(spark):
     # final tiebreak)
     pub2 = spark.createDataFrame([(1, 200, "newer")], "k int, ts int, v string")
     out2 = incremental_merge(
-        pub2, delta, ["k"], [F.col("ts").desc()]
+        pub2, delta, ["k"], ["ts DESC"]
     ).collect()
     assert [(r["k"], r["v"]) for r in out2] == [(1, "newer")]
 
@@ -1334,7 +1334,7 @@ def test_reserved_name_guards_relational(spark):
 
     df_rn = spark.createDataFrame([(1, 2, 0)], "k int, v int, __rn int")
     with _pytest.raises(ValueError, match="__rn"):
-        dedup_keep_latest(df_rn, ["k"], [F.col("v").desc()])
+        dedup_keep_latest(df_rn, ["k"], ["v DESC"])
     df_n = spark.createDataFrame([(1, 5)], "k int, n int")
     with _pytest.raises(ValueError, match="'n'"):
         duplicates(df_n, ["k"])

@@ -738,7 +738,7 @@ def test_snapshot_merge_publish(spark, tmp_path):
     delta = spark.createDataFrame(
         [(2, "B", 2), (9, "z", 2)], "k int, v string, rev int"
     )
-    assert merge_snapshot(path, delta, ["k"], [F.col("rev").desc()]) == 2
+    assert merge_snapshot(path, delta, ["k"], ["rev DESC"]) == 2
     v2 = {r.k: r.v for r in read_snapshot(spark, path, 2).collect()}
     assert v2 == {1: "a", 2: "B", 3: "c", 9: "z"}
     v1 = {r.k: r.v for r in read_snapshot(spark, path, 1).collect()}

@@ -8,9 +8,11 @@ import numpy as np
 import pytest
 
 from n2khab_mhq_data_spark.spatial.crs import (
+    lambert72_sql,
     lambert72_to_wgs84,
     lambert72_to_wgs84_full,
     wgs84_to_bd72,
+    wgs84_to_bd72_sql,
     wgs84_to_lambert72,
     wgs84_to_lambert72_full,
 )
@@ -843,3 +845,23 @@ def test_knn_join_duplicate_queries_deduped(spark):
     out = knn_join_gridded(pts, q, k=3, cell=2.0).collect()
     assert len(out) == 3
     assert len({r["neighbour_id"] for r in out}) == 3
+
+
+def test_sql_transforms_match_numpy_reference(spark):
+    """The SQL text the K11 queries run evaluates the numpy reference's
+    formulas: projection only, and datum shift + projection."""
+    lon = [2.6, 3.5, 4.367486, 5.5, 6.3]
+    lat = [49.6, 50.2, 50.8, 51.3, 51.5]
+    df = spark.createDataFrame(
+        list(zip(range(len(lon)), lon, lat)), "point_id int, lon double, lat double"
+    ).selectExpr("point_id", "radians(lat) AS phi", "radians(lon) AS lam")
+    x, y = lambert72_sql("phi", "lam")
+    shifted = df
+    for step in wgs84_to_bd72_sql():
+        shifted = shifted.selectExpr("point_id", *step)
+    for frame, ref in ((df, wgs84_to_lambert72), (shifted, wgs84_to_lambert72_full)):
+        rows = frame.selectExpr("point_id", f"{x} AS x", f"{y} AS y").collect()
+        rows.sort(key=lambda r: r.point_id)
+        xr, yr = ref(np.array(lon), np.array(lat))
+        np.testing.assert_allclose([r.x for r in rows], xr, rtol=0, atol=1e-6)
+        np.testing.assert_allclose([r.y for r in rows], yr, rtol=0, atol=1e-6)
