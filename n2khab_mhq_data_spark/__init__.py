@@ -4,7 +4,7 @@ R/tidyverse ETL codebase, re-expressed Spark-first.
 
 Layout
 ------
-- ``session``    : tuned SparkSession builder (local testing; cluster-ready confs)
+- ``session``    : tuned local SparkSession builder
 - ``catalog``    : schema catalog (reference yml classes -> Spark types, factor
                    domains, sort keys), table registry
 - ``sources``    : readers (parquet / csv2 / versioned-TSV / JDBC dispatch) and
@@ -17,10 +17,11 @@ Layout
                    DataFrame plans (cover decode, type resolution, completeness
                    audit, EAV restructure, LSVI rule engine, tariffs, merge)
 - ``spatial``    : GEOS-free geometry kernels (point-in-polygon, buffer
-                   intersection area, Lambert-72 CRS) as vectorized pandas UDFs
+                   intersection area) as vectorized pandas UDFs; the
+                   Lambert-72 CRS as SQL text
 - ``llmdata``    : 100 TB training-data pipeline ops (dedup exact/minhash/simhash,
                    similarity search, text analysis, multimodal plumbing)
-- ``streaming``  : Structured Streaming incremental-append path (K10 analog)
+- ``streaming``  : event-time operators that run on batch or streaming frames
 - ``plans``      : the query registry consumed by ``__spark_entry__``
 """
 

@@ -3,9 +3,8 @@ new-fieldwork-season merge, query_fieldmap_update_fieldwork2022.Rmd:943-1076):
 read the published table, align schema, union the new cycle, re-check grain,
 keep the most recent row per key, rewrite deterministically.
 
-This is the batch MERGE micro-pattern; the streaming wrapper in
-``n2khab_mhq_data_spark.streaming`` reuses it per micro-batch via
-foreachBatch."""
+This is the batch MERGE micro-pattern; ``sources/snapshots.py::merge_snapshot``
+applies it to a versioned snapshot store."""
 
 from __future__ import annotations
 

@@ -13,8 +13,7 @@ Scale: one shuffle on the key columns; each key's series is processed
 by exactly one task, so the operator scales with the number of keys
 (time-series cardinality), which is the natural parallelism of the
 problem. A single pathological key with billions of rows would need
-chunked carry-state processing (the transformWithState pattern in
-streaming/sessions.py); batch corpora key series are bounded.
+chunked carry-state processing; batch corpora key series are bounded.
 """
 
 from __future__ import annotations

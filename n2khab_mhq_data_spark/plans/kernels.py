@@ -728,8 +728,7 @@ def k10_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K10 incremental append/update
     (query_fieldmap_update_fieldwork2022.Rmd:943-1076): published table +
     new-season delta -> unionByName -> latest-wins keyed dedup
-    (operators.merge.incremental_merge). The streaming wrapper reuses this
-    exact function per micro-batch."""
+    (operators.merge.incremental_merge)."""
     e = load(spark, sf_dir, "events")
     cutoff = "CAST('2024-04-01' AS TIMESTAMP)"
     merged = incremental_merge(

@@ -186,11 +186,10 @@ def k11_crs_full_datum(spark: SparkSession, sf_dir: str) -> DataFrame:
     leg over Belgium. Spark and the oracle evaluate the same SQL steps,
     the fixed-point latitude recovery unrolled to the same 6 iterations."""
     df = load(spark, sf_dir, "customer").selectExpr(
-        "c_custkey AS point_id", f"{_PHI} AS phi", f"{_LAM} AS lam"
+        "c_custkey AS point_id", f"{_PHI} AS phi", f"{_LAM} AS lam",
+        *crs.wgs84_to_bd72_sql(),
     )
-    for step in crs.wgs84_to_bd72_sql():
-        df = df.selectExpr("point_id", *step)
-    x, y = crs.lambert72_sql("phi", "lam")
+    x, y = crs.lambert72_sql("phi6", "lam_bd")
     return df.selectExpr(
         "point_id", f"round({x} + 1e-9D, 3) AS x", f"round({y} + 1e-9D, 3) AS y"
     )

@@ -507,11 +507,9 @@ def events_hopping_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-window trending top-3 leaderboard over tumbling 1h windows —
-    the BATCH leg of streaming/trending.py's continuously materialized
-    leaderboard, ranked by the SAME trending_topk function the stream's
-    foreachBatch publishes (the stream-equals-batch pytest ties the two;
-    this entry puts the ranking core under the driver's value hash).
+    """Per-window trending top-3 leaderboard over tumbling 1h windows,
+    ranked by streaming/trending.py's trending_topk (this entry puts the
+    ranking under the driver's value hash and the DuckDB oracle).
     One shuffle for the windowed count, one window partitioned by
     window_start for the rank. Window start split day/hour for
     engine-portable comparison."""

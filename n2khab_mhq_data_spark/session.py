@@ -1,12 +1,10 @@
 """SparkSession factory.
 
-Local testing runs a single JVM (``local[N]``); the conf set below is chosen
-so the same logical plans scale to a multi-executor cluster:
+One local JVM (``local[N]``) with this conf set:
 
-- AQE on (runtime coalescing, skew-join splitting) — at 100 TB the static
-  shuffle-partition count is always wrong, AQE re-plans from runtime stats.
-- shuffle partitions sized to the core count locally; on a cluster this is
-  the AQE *initial* number only.
+- AQE on (runtime coalescing, skew-join splitting): AQE re-plans from
+  runtime stats instead of trusting the static shuffle-partition count.
+- shuffle partitions sized to the core count (the AQE *initial* number).
 - Arrow enabled for every pandas UDF / toPandas path.
 - UTC session timezone so timestamp semantics are deployment-independent.
 """
@@ -60,95 +58,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def cluster_conf(
-    executors: int = 1000,
-    executor_cores: int = 4,
-    target_partition_mb: int = 128,
-) -> dict[str, str]:
-    """The 100 TB deployment profile (VERDICT r10 stretch item 9): the
-    settings this repo's local incidents and measurements imply, as
-    RUNNABLE config rather than prose. Feed to spark-submit --conf or
-    ``SparkSession.builder.config(map=...)`` on a real cluster; the
-    local ``get_spark`` stays as-is (its values ARE these, scaled to
-    one machine). Each entry cites the incident/measurement that set it
-    — SCALE.md sections hold the full narratives.
-
-    Sizing model: 100 TB input at ``target_partition_mb`` per map
-    partition => ~800k scan tasks; shuffle partitions default to
-    2 x total cores so AQE COALESCES down (cheap) instead of splitting
-    up (impossible — AQE can merge but never increase beyond the
-    initial number); per-core working memory stays
-    ~target_partition_mb x a few, inside a 4-8 GB/core executor."""
-    total_cores = executors * executor_cores
-    return {
-        # --- the non-negotiables (every SCALE.md incident assumes them)
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        # r11: OptimizeSkewedJoin splits the house-account hot partition
-        # 4-ways at testbed thresholds (test_aqe_skew.py) — but ONLY for
-        # SMJ(shuffle, shuffle) patterns; agg-side joins need the
-        # explicit salting operators regardless of this flag
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        # --- broadcast governance (the r10 driver-OOM class)
-        # static 64 MB: fine — static estimates are byte-proportional,
-        # so at 100 TB every fact-derived relation estimates HUGE and
-        # demotes itself; the hazard was never the static path
-        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-        # adaptive 16 MB: AQE converts on COMPRESSED runtime bytes while
-        # the driver builds the HashedRelation DESERIALIZED (~20-30x
-        # observed) — 16 MB caps a build at ~500 MB driver heap. Seen
-        # live: prefix_filter died at the x10 tier under the default.
-        # The r11 BM25 x100 run shows the two paths dividing the work:
-        # the PERSISTED 5M-row doclen table broadcast via the STATIC
-        # path (27 MB parquet < 64 MB; ~0.5 GB driver build, measured
-        # fine) and self-demotes at the next tier because file-size
-        # estimates are byte-proportional; the adaptive cap governs
-        # only runtime conversions of shuffle stages, where compression
-        # hides the deserialized cost
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": str(
-            16 * 1024 * 1024
-        ),
-        # --- partition sizing
-        # map-side: 128 MB parquet splits — with ~1 GiB/core-s scan
-        # rates this keeps task overhead <1% while bounding per-task
-        # memory; binary payload columns (multimodal) decode inside the
-        # Arrow scan so the SAME bound governs them
-        "spark.sql.files.maxPartitionBytes": str(
-            target_partition_mb * 1024 * 1024
-        ),
-        # reduce-side: start at 2x total cores and let AQE coalesce;
-        # advisory 64 MB targets post-compression reducer input (the
-        # bench-tier shuffles compress 3-5x, so ~200-300 MB deserialized
-        # per reducer — inside a 4 GB/core budget with codegen operators)
-        "spark.sql.shuffle.partitions": str(2 * total_cores),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(
-            64 * 1024 * 1024
-        ),
-        # --- the pandas/Arrow path (multimodal decode, spatial kernels)
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # Arrow batches bound Python-worker memory; 10k rows of ~10 KB
-        # docs ~ 100 MB per batch worst-case — halve this if payload
-        # columns run larger (the mapInPandas codecs stream per-batch)
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
-        # --- semantics pins (cross-engine correctness, not perf)
-        "spark.sql.session.timeZone": "UTC",
-        # --- topology (informative defaults; override per cluster)
-        "spark.executor.instances": str(executors),
-        "spark.executor.cores": str(executor_cores),
-        # 4 GB/core heap + 1 GB/core overhead headroom for Arrow/Python
-        # workers (the multimodal decode UDFs run OUTSIDE the JVM heap)
-        "spark.executor.memory": f"{4 * executor_cores}g",
-        "spark.executor.memoryOverhead": f"{executor_cores}g",
-        # driver holds: P-row rank offsets (operators/rank.py), k-row
-        # centroid collects, bounded convergence counters — nothing
-        # corpus-sized (audited: 18 collect sites, all bounded), so a
-        # modest driver suffices even at 1000 executors
-        "spark.driver.memory": "16g",
-        # lineage through the iterative families (components, pagerank)
-        # is cut by localCheckpoint; executor loss then costs a stage
-        # re-run, so turn decommission hand-off on
-        "spark.decommission.enabled": "true",
-        "spark.storage.decommission.shuffleBlocks.enabled": "true",
-    }

@@ -53,9 +53,9 @@ def read_jsonl(
 
 
 def parse_jsonl_lines(lines: DataFrame, text_schema: str) -> DataFrame:
-    """The ONE line->row parse projection, shared by the batch reader
-    above and streaming/ingest.py's readStream path so batch and stream
-    agree line for line. ``lines`` carries a ``value`` string column.
+    """The ONE line->row parse projection, shared by ``read_jsonl`` and
+    ``read_jsonl_strict`` so both agree line for line. ``lines`` carries
+    a ``value`` string column.
 
     from_json yields a NULL struct — NOT a populated corrupt column —
     for blank/whitespace-only lines and the bare JSON literal ``null``;

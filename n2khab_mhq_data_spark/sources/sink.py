@@ -409,10 +409,10 @@ def compact_published(
     sort_keys: list[str] | None = None,
 ) -> dict:
     """Small-files compaction for the published store — the maintenance
-    op every incremental-append layout (K10 merge, streaming
-    foreachBatch) eventually needs: micro-batches leave hundreds of tiny
-    parquet files per partition, and at 100 TB the scan's task-per-file
-    overhead and NameNode/listing pressure dominate.
+    op every incremental-append layout (K10 merge) eventually needs:
+    repeated appends leave hundreds of tiny parquet files per partition,
+    and at 100 TB the scan's task-per-file overhead and NameNode/listing
+    pressure dominate.
 
     Reads the store, re-buckets EACH hive partition to
     ``ceil(partition_bytes / target_file_bytes)`` output files from its
@@ -428,10 +428,9 @@ def compact_published(
     sibling exists, the old store is RESTORED (renamed back) before
     anything else — never deleted — and only then are stale tmp/old
     dirs cleared. All directory walking and swapping goes through the
-    Hadoop FileSystem API (same as streaming's publish_state), so the
-    op works against HDFS/S3A stores, not just the driver's local
-    disk. Returns before/after file counts so operators can alert on
-    ineffective runs."""
+    Hadoop FileSystem API, so the op works against HDFS/S3A stores, not
+    just the driver's local disk. Returns before/after file counts so
+    operators can alert on ineffective runs."""
     import math
     import urllib.parse
 

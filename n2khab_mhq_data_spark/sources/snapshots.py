@@ -23,8 +23,7 @@ ORDER-INSENSITIVE aggregate (sum of per-row 64-bit hashes mod 2^64)
 computed in the same job that counts rows — one extra map-side
 expression, no extra pass, independent of partitioning. The manifest
 directory is O(versions) tiny JSON files; history pruning is
-whole-directory deletes of expired ``v=<n>`` dirs (same shape as the
-trending store's retention).
+whole-directory deletes of expired ``v=<n>`` dirs.
 
 Writer contract: SINGLE WRITER at a time (the reference's publishing
 model is one batch pipeline committing sequentially; Iceberg/Delta
@@ -43,8 +42,6 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from n2khab_mhq_data_spark.functions.scalars import ident
 
 
 def _manifest_dir(path: str) -> str:
@@ -83,17 +80,13 @@ def _content_stats(df: DataFrame) -> tuple[int, int]:
 def write_snapshot(
     df: DataFrame,
     path: str,
-    extra_manifest: dict | None = None,
     validate=None,
 ) -> int:
     """Publish ``df`` as the next snapshot version; returns the version
     number. Append-only: never touches existing version directories.
 
-    ``extra_manifest`` entries are merged into the manifest BEFORE it is
-    renamed into place (e.g. the streaming ``batch_id`` — stamping after
-    publish would leave a crash window where a replayed batch publishes a
-    duplicate version). ``validate(manifest)`` likewise runs before the
-    rename: if it raises, the unmanifested data dir is removed and
+    ``validate(manifest)`` runs before the manifest is renamed into
+    place: if it raises, the unmanifested data dir is removed and
     nothing ever became reader-visible (the OPTIMIZE drift check)."""
     versions = _versions(path)
     v = (versions[-1] + 1) if versions else 1
@@ -114,8 +107,6 @@ def write_snapshot(
         "schema": df.schema.jsonValue(),
         "parent": versions[-1] if versions else None,
     }
-    if extra_manifest:
-        manifest.update(extra_manifest)
     tmp = os.path.join(_manifest_dir(path), f".{v}.json.tmp")
     with open(tmp, "w") as fh:
         json.dump(manifest, fh)
@@ -196,7 +187,6 @@ def merge_snapshot(
     delta: DataFrame,
     keys: list,
     order_by: list[str],
-    extra_manifest: dict | None = None,
 ) -> int:
     """MERGE-publish: read the latest snapshot, upsert ``delta`` into
     it (latest-wins on ``keys`` per ``order_by``, SQL ORDER BY items — the
@@ -209,11 +199,7 @@ def merge_snapshot(
 
     spark = delta.sparkSession
     base = read_snapshot(spark, path)
-    return write_snapshot(
-        incremental_merge(base, delta, keys, order_by),
-        path,
-        extra_manifest=extra_manifest,
-    )
+    return write_snapshot(incremental_merge(base, delta, keys, order_by), path)
 
 
 def _aligned_val_cols(
@@ -334,72 +320,6 @@ def snapshot_changes(
             *[f"old_{c}" for c in val_cols],
             *[f"new_{c}" for c in val_cols],
         )
-    )
-
-
-def _max_batch_id(path: str) -> int | None:
-    """Largest stream batch_id already manifested — read NEWEST-first
-    and stop at the first stamped manifest. The engine's batch ids are
-    monotonic and each published batch stamps one version, so the
-    newest stamped manifest carries the max; scanning EVERY manifest
-    per trigger (the old _seen_batch_ids) was O(versions) driver IO per
-    batch — quadratic over a stream's lifetime — and broke when
-    prune_snapshots dropped an old manifest holding a replayed id."""
-    for v in reversed(_versions(path)):
-        with open(os.path.join(_manifest_dir(path), f"{v}.json")) as fh:
-            m = json.load(fh)
-        if m.get("batch_id") is not None:
-            return int(m["batch_id"])
-    return None
-
-
-def snapshot_stream(
-    source: DataFrame,
-    path: str,
-    keys: list,
-    order_by_cols: list[str],
-    checkpoint: str,
-):
-    """Streaming upsert INTO the snapshot store: each micro-batch
-    MERGE-publishes as a new version, with the engine's ``batch_id``
-    recorded in the manifest so a checkpoint replay of an
-    already-published batch is a NO-OP — the foreachBatch exactly-once
-    recipe applied to the version log. Downstream consumers get both
-    the latest state (read_snapshot) and the per-trigger change feed
-    (snapshot_diff of consecutive versions) for free.
-
-    ``order_by_cols`` are column NAMES (descending) rather than Column
-    objects so the closure stays picklable."""
-
-    def publish(batch: DataFrame, batch_id: int) -> None:
-        seen = _max_batch_id(path)
-        if seen is not None and int(batch_id) <= seen:
-            return  # replayed batch: its version is already manifested
-        order_by = [f"{ident(c)} DESC" for c in order_by_cols]
-        # batch_id rides INSIDE the manifest that write_snapshot renames
-        # into place — stamping it afterwards left a crash window where
-        # the version was already visible but not yet marked, so a
-        # checkpoint replay of the same batch published a duplicate
-        stamp = {"batch_id": int(batch_id)}
-        if _versions(path):
-            merge_snapshot(path, batch, keys, order_by, extra_manifest=stamp)
-        else:
-            from n2khab_mhq_data_spark.operators.relational import (
-                dedup_keep_latest,
-            )
-
-            write_snapshot(
-                dedup_keep_latest(batch, keys, order_by),
-                path,
-                extra_manifest=stamp,
-            )
-
-    return (
-        source.writeStream.foreachBatch(publish)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
 
 

@@ -163,21 +163,27 @@ def lambert72_sql(phi: str, lam: str) -> tuple[str, str]:
     return x, f"{_d(_Y0)} + {_d(_RHO0)} - {rho} * cos({theta})"
 
 
-def wgs84_to_bd72_sql() -> list[list[str]]:
-    """``wgs84_to_bd72`` as Spark SQL: the ``selectExpr`` items of each step
-    from WGS84 radian columns ``phi``/``lam`` to BD72 ones. A step reads
-    only the previous step's columns, so each intermediate is computed
-    once; the latitude recovery is unrolled to ``_xyz_to_geodetic``'s 6
-    iterations."""
+def wgs84_to_bd72_sql() -> list[str]:
+    """``wgs84_to_bd72`` as Spark SQL: one ``selectExpr`` item list from
+    WGS84 radian columns ``phi``/``lam`` to BD72 radians ``phi6``/``lam_bd``.
+    Each intermediate has its own name and later items read it as a
+    lateral column alias, so it is computed once; the latitude recovery is
+    unrolled to ``_xyz_to_geodetic``'s 6 iterations (``phi0`` … ``phi6``)."""
     nu = f"({_d(_WGS_A)} / sqrt(1 - {_d(_WGS_E2)} * sin(phi) * sin(phi)))"
-    nu_b = f"({_d(_A)} / sqrt(1 - {_d(_E2)} * sin(phi) * sin(phi)))"
     s, rx, ry, rz = f"(1 + {_d(_DS)})", _d(_RX), _d(_RY), _d(_RZ)
+
+    def nu_b(phi: str) -> str:
+        return f"({_d(_A)} / sqrt(1 - {_d(_E2)} * sin({phi}) * sin({phi})))"
+
     return [
-        [f"{nu} * cos(phi) * cos(lam) AS x", f"{nu} * cos(phi) * sin(lam) AS y",
-         f"{nu} * (1 - {_d(_WGS_E2)}) * sin(phi) AS z"],
-        [f"{_d(_TX)} + {s} * (x - {rz} * y + {ry} * z) AS xb",
-         f"{_d(_TY)} + {s} * ({rz} * x + y - {rx} * z) AS yb",
-         f"{_d(_TZ)} + {s} * (-{ry} * x + {rx} * y + z) AS zb"],
-        ["zb", "atan2(yb, xb) AS lam", "sqrt(xb * xb + yb * yb) AS p",
-         f"atan2(zb, sqrt(xb * xb + yb * yb) * (1 - {_d(_E2)})) AS phi"],
-    ] + [["zb", "lam", "p", f"atan2(zb + {_d(_E2)} * {nu_b} * sin(phi), p) AS phi"]] * 6
+        f"{nu} * cos(phi) * cos(lam) AS gx", f"{nu} * cos(phi) * sin(lam) AS gy",
+        f"{nu} * (1 - {_d(_WGS_E2)}) * sin(phi) AS gz",
+        f"{_d(_TX)} + {s} * (gx - {rz} * gy + {ry} * gz) AS xb",
+        f"{_d(_TY)} + {s} * ({rz} * gx + gy - {rx} * gz) AS yb",
+        f"{_d(_TZ)} + {s} * (-{ry} * gx + {rx} * gy + gz) AS zb",
+        "atan2(yb, xb) AS lam_bd", "sqrt(xb * xb + yb * yb) AS p",
+        f"atan2(zb, sqrt(xb * xb + yb * yb) * (1 - {_d(_E2)})) AS phi0",
+    ] + [
+        f"atan2(zb + {_d(_E2)} * {nu_b(f'phi{i}')} * sin(phi{i}), p) AS phi{i + 1}"
+        for i in range(6)
+    ]

@@ -1,1 +1,2 @@
-"""Structured Streaming wrappers (SURVEY.md §2.11)."""
+"""Event-time operators that run on a batch or a streaming DataFrame
+(SURVEY.md §2.11)."""

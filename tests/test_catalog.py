@@ -27,8 +27,9 @@ ADHOC_OPS = (
     "scd2_user_status",
 )
 BENCH_OPS = (*ADHOC_OPS, "mhq_publish_pipeline")
-# py4j round-trips a warm build of one adhoc op may make: the builders emit
-# their expressions as SQL text, where a Column tree costs hundreds
+# py4j round-trips a warm build of one adhoc op (or of k11_crs_full_datum)
+# may make: the builders emit their expressions as SQL text, where a Column
+# tree costs hundreds
 ADHOC_BUILD_CALLS = 100
 
 
@@ -94,7 +95,7 @@ def _py4j_calls(spark, action) -> int:
 def test_adhoc_builds_stay_within_py4j_budget(spark, sf_dir):
     queries = entrymod.queries()
     calls = {}
-    for op in ADHOC_OPS:
+    for op in (*ADHOC_OPS, "k11_crs_full_datum"):
         build = queries[op]
         build(spark, sf_dir)  # warm: the schema memo is filled
         calls[op] = _py4j_calls(spark, lambda: build(spark, sf_dir))

@@ -113,3 +113,16 @@ def test_release_propagates_unexpected_errors():
 
     with pytest.raises(RuntimeError, match="boom"):
         release(_FakeFrame(RuntimeError("boom")))
+
+
+def test_read_after_release_fails_loudly(spark):
+    """A released local checkpoint has no lineage to recompute from, so
+    reading it again raises instead of returning missing rows."""
+    import pytest
+    from py4j.protocol import Py4JJavaError
+
+    df = spark.range(0, 100, 1, 4).localCheckpoint()
+    assert df.count() == 100
+    release(df)
+    with pytest.raises(Py4JJavaError, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        df.count()

@@ -1,3 +1,6 @@
+import pytest
+
+
 
 
 def test_components_reliable_checkpoint(spark, tmp_path):
@@ -92,3 +95,18 @@ def test_twophase_matches_minlabel_on_random_graphs(spark):
             for r in connected_components_twophase(df).collect()
         }
         assert got == oracle, f"seed {seed}"
+
+
+@pytest.mark.parametrize(
+    "kernel", ["connected_components", "connected_components_twophase"]
+)
+def test_components_raise_when_not_converged(spark, kernel):
+    """One round cannot label a diameter-16 chain: exhausting max_iter
+    raises instead of returning under-merged components."""
+    from n2khab_mhq_data_spark.llmdata import dedup as D
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 17)], "d1 long, d2 long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        getattr(D, kernel)(edges, max_iter=1)

@@ -127,29 +127,6 @@ def test_catalog_load_handles_tz_aware_nanos(spark, tmp_path):
         assert row.seen_at == t1.replace(tzinfo=None)
 
 
-def test_cluster_conf_profile():
-    """r11 (VERDICT r10 item 9): the 100 TB deployment profile must stay
-    consistent with the local factory's incident-derived guards and with
-    its own sizing model."""
-    from n2khab_mhq_data_spark.session import cluster_conf
-
-    c = cluster_conf(executors=1000, executor_cores=4)
-    # the r10 driver-OOM guard must match the local factory exactly
-    assert c["spark.sql.adaptive.autoBroadcastJoinThreshold"] == str(
-        16 * 1024 * 1024
-    )
-    assert c["spark.sql.adaptive.enabled"] == "true"
-    assert c["spark.sql.adaptive.skewJoin.enabled"] == "true"
-    # shuffle partitions = 2 x total cores (AQE can coalesce, never grow)
-    assert c["spark.sql.shuffle.partitions"] == "8000"
-    # every value must be a string (spark-submit --conf compatible)
-    assert all(isinstance(v, str) for v in c.values())
-    # scaling: a smaller cluster scales the same model
-    small = cluster_conf(executors=10, executor_cores=8)
-    assert small["spark.sql.shuffle.partitions"] == "160"
-    assert small["spark.executor.memory"] == "32g"
-
-
 def test_registry_order_leads_with_unchecked_queries():
     """queries() leads with the queries whose latest CORRECTNESS_r{N}
     row failed, then those never hash-checked, and ends with the

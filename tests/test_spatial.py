@@ -855,11 +855,12 @@ def test_sql_transforms_match_numpy_reference(spark):
     df = spark.createDataFrame(
         list(zip(range(len(lon)), lon, lat)), "point_id int, lon double, lat double"
     ).selectExpr("point_id", "radians(lat) AS phi", "radians(lon) AS lam")
-    x, y = lambert72_sql("phi", "lam")
-    shifted = df
-    for step in wgs84_to_bd72_sql():
-        shifted = shifted.selectExpr("point_id", *step)
-    for frame, ref in ((df, wgs84_to_lambert72), (shifted, wgs84_to_lambert72_full)):
+    shifted = df.selectExpr("point_id", *wgs84_to_bd72_sql())
+    for frame, (phi, lam), ref in (
+        (df, ("phi", "lam"), wgs84_to_lambert72),
+        (shifted, ("phi6", "lam_bd"), wgs84_to_lambert72_full),
+    ):
+        x, y = lambert72_sql(phi, lam)
         rows = frame.selectExpr("point_id", f"{x} AS x", f"{y} AS y").collect()
         rows.sort(key=lambda r: r.point_id)
         xr, yr = ref(np.array(lon), np.array(lat))

@@ -1,92 +1,8 @@
-"""Structured Streaming incremental-merge test: file source -> foreachBatch
-merge -> parquet state, two deltas applied in sequence."""
+"""Stream/batch parity of the event-time operators: each runs through a
+real ``readStream`` (file source, availableNow) and must match its batch
+result or pin the documented streaming divergence."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
-
-from n2khab_mhq_data_spark.streaming.incremental import merge_stream
-
-
-def test_merge_stream_two_batches(spark, tmp_path):
-    src = tmp_path / "in"
-    state = tmp_path / "state"
-    ckpt = tmp_path / "ckpt"
-    src.mkdir()
-
-    schema = "user_id long, event_type string, ts long, value double"
-
-    # batch 1
-    spark.createDataFrame(
-        [(1, "click", 10, 1.0), (2, "view", 11, 2.0)], schema
-    ).write.mode("append").parquet(str(src))
-    stream = spark.readStream.schema(schema).parquet(str(src))
-    q = merge_stream(
-        spark, stream, str(state), ["user_id", "event_type"], ["ts"], str(ckpt)
-    )
-    q.awaitTermination(120)
-
-    s1 = {tuple(r) for r in spark.read.parquet(str(state)).collect()}
-    assert s1 == {(1, "click", 10, 1.0), (2, "view", 11, 2.0)}
-
-    # batch 2: update one key (newer ts), add one key, stale row ignored
-    spark.createDataFrame(
-        [(1, "click", 20, 9.0), (1, "click", 5, 0.5), (3, "click", 7, 3.0)],
-        schema,
-    ).write.mode("append").parquet(str(src))
-    stream2 = spark.readStream.schema(schema).parquet(str(src))
-    q2 = merge_stream(
-        spark, stream2, str(state), ["user_id", "event_type"], ["ts"], str(ckpt)
-    )
-    q2.awaitTermination(120)
-
-    s2 = {tuple(r) for r in spark.read.parquet(str(state)).collect()}
-    assert s2 == {
-        (1, "click", 20, 9.0),
-        (2, "view", 11, 2.0),
-        (3, "click", 7, 3.0),
-    }
-
-
-def test_running_totals_state_across_batches(spark, tmp_path):
-    """applyInPandasWithState: state must carry across micro-batches."""
-    from n2khab_mhq_data_spark.streaming.stateful import running_totals
-
-    src = tmp_path / "sin"
-    ckpt = tmp_path / "sckpt"
-    out = tmp_path / "sout"
-    src.mkdir()
-    schema = "user_id long, ts long, value double"
-
-    def run_batch(rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(
-            str(src)
-        )
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        q = (
-            running_totals(stream)
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(ckpt))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_batch([(1, 10, 1.0), (1, 11, 2.0), (2, 10, 5.0)])
-    run_batch([(1, 20, 4.0)])
-
-    rows = spark.read.parquet(str(out)).collect()
-    # latest emission per user reflects accumulated state
-    latest = {}
-    for r in rows:
-        if r.user_id not in latest or r.last_ts > latest[r.user_id].last_ts:
-            latest[r.user_id] = r
-    assert latest[1].n_events == 3 and latest[1].value_sum == 7.0
-    assert latest[1].last_ts == 20
-    assert latest[2].n_events == 1 and latest[2].value_sum == 5.0
 
 
 def test_windowed_counts_stream_equals_batch(spark, tmp_path):
@@ -133,122 +49,6 @@ def test_windowed_counts_stream_equals_batch(spark, tmp_path):
     }
     assert streamed == batch
     assert batch[("2024-01-01 10:00:00", "click")] == (2, 3.0)
-
-
-def test_transform_with_state_sessionize(spark, tmp_path):
-    """transformWithStateInPandas: open sessions must persist in RocksDB
-    state across micro-batches; only gap-closed sessions are emitted.
-
-    Requires the protobuf package (the transformWithState state protocol
-    is protobuf-based); skipped where it is absent — the processor's
-    sessionization semantics are still covered by the fake-state unit
-    test below."""
-    pytest.importorskip("google.protobuf")
-    from n2khab_mhq_data_spark.streaming.sessions import (
-        ROCKSDB_CONF,
-        sessionize,
-    )
-
-    key, value = ROCKSDB_CONF
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, value)
-    try:
-        src = tmp_path / "tin"
-        ckpt = tmp_path / "tckpt"
-        out = tmp_path / "tout"
-        src.mkdir()
-        schema = "user_id long, ts long"
-
-        def run_batch(rows):
-            spark.createDataFrame(rows, schema).write.mode("append").parquet(
-                str(src)
-            )
-            stream = spark.readStream.schema(schema).parquet(str(src))
-            q = (
-                sessionize(stream, gap=30)
-                .writeStream.format("parquet")
-                .option("path", str(out))
-                .option("checkpointLocation", str(ckpt))
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        # batch 1: user 1 has two events 5 apart (one open session);
-        # user 2 one event
-        run_batch([(1, 100), (1, 105), (2, 100)])
-        # batch 2: user 1 jumps 95 -> closes (100,105); user 2 stays open
-        run_batch([(1, 200), (2, 120)])
-        # batch 3: both users jump far -> closes (200,200) and (100,120)
-        run_batch([(1, 500), (2, 500)])
-
-        rows = {
-            (r.user_id, r.session_start, r.session_end, r.n_events)
-            for r in spark.read.parquet(str(out)).collect()
-        }
-        assert rows == {
-            (1, 100, 105, 2),
-            (1, 200, 200, 1),
-            (2, 100, 120, 2),
-        }
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-def test_session_processor_semantics():
-    """Drive SessionProcessor directly with a fake ValueState: gap logic,
-    cross-batch carry, and emission set must match the operator contract."""
-    import pandas as pd
-
-    from n2khab_mhq_data_spark.streaming.sessions import SessionProcessor
-
-    class FakeState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-    p = SessionProcessor(gap=30)
-    p._open = FakeState()
-
-    def feed(ts_list):
-        out = list(
-            p.handleInputRows((1,), iter([pd.DataFrame({"ts": ts_list})]), None)
-        )
-        return [tuple(r) for df in out for r in df.itertuples(index=False)]
-
-    assert feed([100, 105]) == []              # one open session
-    assert p._open.get() == (100, 105, 2)
-    assert feed([200]) == [(1, 100, 105, 2)]   # gap 95 closes it
-    assert p._open.get() == (200, 200, 1)
-    assert feed([210, 500, 505]) == [(1, 200, 210, 2)]
-    assert p._open.get() == (500, 505, 2)
-
-    # out-of-order CROSS-BATCH events must never move `last` backward
-    # (that prematurely closed the session and could emit
-    # session_end < session_start): a late in-span event only bumps the
-    # count; a late event within gap of start extends start backward;
-    # a too-late straggler (older than start - gap) is dropped
-    assert feed([502]) == []                   # late, inside the span
-    assert p._open.get() == (500, 505, 3)
-    assert feed([520]) == []                   # in-order extension still works
-    assert p._open.get() == (500, 520, 4)
-    assert feed([480]) == []                   # within gap of start
-    assert p._open.get() == (480, 520, 5)
-    assert feed([400]) == []                   # too late: dropped
-    assert p._open.get() == (480, 520, 5)
-    assert feed([600]) == [(1, 480, 520, 5)]   # gap closes the true span
 
 
 def test_stream_drop_duplicates_equals_batch_distinct(spark, tmp_path):
@@ -495,769 +295,6 @@ def test_interval_join_left_outer_emits_unmatched(spark, tmp_path):
     # watermark semantics, not data loss
     assert (100, 900) in streamed
     assert (102, None) in streamed
-
-
-def test_scd2_stream_converges_to_batch_history(spark, tmp_path):
-    """CDC stream -> materialized SCD2: two micro-batch rounds with a
-    duplicate replay and a LATE event; the final table must equal a
-    batch scd2_history over the full deduped event log."""
-    from n2khab_mhq_data_spark.operators.scd import scd2_history
-    from n2khab_mhq_data_spark.streaming.incremental import scd2_stream
-
-    src = tmp_path / "cdc"
-    events = tmp_path / "events"
-    scd2 = tmp_path / "scd2"
-    ckpt = tmp_path / "ckpt"
-    src.mkdir()
-    schema = "user_id long, status string, ts long"
-
-    def run_round():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        q = scd2_stream(
-            spark, stream, str(events), str(scd2),
-            ["user_id"], ["status"], "ts", str(ckpt),
-        )
-        q.awaitTermination(120)
-
-    # round 1: user 1 goes free -> paid; user 2 stays free
-    spark.createDataFrame(
-        [(1, "free", 10), (1, "paid", 20), (2, "free", 15)], schema
-    ).write.mode("append").parquet(str(src))
-    run_round()
-    cur = {
-        (r.user_id, r.status)
-        for r in spark.read.parquet(str(scd2))
-        .filter("is_current").collect()
-    }
-    assert cur == {(1, "paid"), (2, "free")}
-
-    # round 2: exact replay of (1, paid, 20), a LATE event for user 1
-    # (churn at ts 15 — before the paid upgrade), user 3 appears
-    spark.createDataFrame(
-        [(1, "paid", 20), (1, "churned", 15), (3, "trial", 30)], schema
-    ).write.mode("append").parquet(str(src))
-    run_round()
-
-    got = {
-        (r.user_id, r.status, r.valid_from, r.valid_to, r.is_current)
-        for r in spark.read.parquet(str(scd2)).collect()
-    }
-    # batch reference over the full (deduped) log
-    log = spark.createDataFrame(
-        [(1, "free", 10), (1, "churned", 15), (1, "paid", 20),
-         (2, "free", 15), (3, "trial", 30)],
-        schema,
-    )
-    want = {
-        (r.user_id, r.status, r.valid_from, r.valid_to, r.is_current)
-        for r in scd2_history(log, ["user_id"], ["status"], "ts").collect()
-    }
-    assert got == want
-    # the late churn event re-opened user 1's history: 3 intervals
-    assert sum(1 for g in got if g[0] == 1) == 3
-    # replayed (1, paid, 20) did not duplicate the event log:
-    # 3 round-1 events + churned/trial; the replay collapsed
-    assert spark.read.parquet(str(events)).count() == 5
-
-
-def test_neardup_gate_stream_flags_against_store(spark, tmp_path):
-    """Streaming MinHash near-dup gate: round 2's near-copy of a round-1
-    doc is flagged against the persistent signature store; in-batch
-    near-dups resolve to the smaller id; canonical docs extend the
-    store, dups don't."""
-    from n2khab_mhq_data_spark.streaming.neardup import neardup_gate_stream
-
-    src = tmp_path / "in"
-    sig = tmp_path / "sigs"
-    verdicts = tmp_path / "verdicts"
-    ckpt = tmp_path / "ckpt"
-    src.mkdir()
-    schema = "doc_id long, text string"
-    base = " ".join(f"w{i}" for i in range(40))
-
-    def run_round():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        q = neardup_gate_stream(
-            spark, stream, str(sig), str(verdicts),
-            "text", "doc_id", str(ckpt),
-        )
-        q.awaitTermination(120)
-
-    # round 1: two distinct docs
-    spark.createDataFrame(
-        [(1, base), (2, " ".join(f"v{i}" for i in range(40)))], schema
-    ).write.mode("append").parquet(str(src))
-    run_round()
-    v1 = {r.doc_id: (r.is_dup, r.dup_of)
-          for r in spark.read.parquet(str(verdicts)).collect()}
-    assert v1 == {1: (False, None), 2: (False, None)}
-
-    # round 2: near-copy of doc 1, a new doc, and an in-batch dup pair
-    other = " ".join(f"u{i}" for i in range(40))
-    spark.createDataFrame(
-        [(10, base + " extra"), (11, other), (12, other + " tail")],
-        schema,
-    ).write.mode("append").parquet(str(src))
-    run_round()
-    v2 = {r.doc_id: (r.is_dup, r.dup_of)
-          for r in spark.read.parquet(str(verdicts)).collect()}
-    assert v2[10] == (True, 1)     # flagged against the round-1 store
-    assert v2[11] == (False, None)
-    assert v2[12] == (True, 11)    # in-batch dup, smaller id canonical
-    # store holds only canonical docs
-    store_ids = {r.doc for r in spark.read.parquet(str(sig)).collect()}
-    assert store_ids == {1, 2, 11}
-
-
-def test_neardup_gate_transitive_chain_resolves_to_accepted(spark, tmp_path):
-    """A<B<C where C matches only B (not A): B is gated out, so C's
-    dup_of must resolve through the chain to the ACCEPTED doc A — a
-    consumer following dup_of never lands on a non-stored doc."""
-    from n2khab_mhq_data_spark.streaming.neardup import neardup_gate_stream
-
-    src = tmp_path / "in"
-    src.mkdir()
-    schema = "doc_id long, text string"
-    words = [f"w{i}" for i in range(40)]
-    a = " ".join(words)
-    b = " ".join(words[:-3] + ["x1", "x2", "x3"])          # ~0.85 vs A
-    c = " ".join(["y1", "y2", "y3"] + words[3:-3] + ["x1", "x2", "x3"])
-    spark.createDataFrame(
-        [(21, a), (22, b), (23, c)], schema
-    ).write.mode("append").parquet(str(src))
-    stream = spark.readStream.schema(schema).parquet(str(src))
-    q = neardup_gate_stream(
-        spark, stream, str(tmp_path / "sigs"), str(tmp_path / "verdicts"),
-        "text", "doc_id", str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-    v = {r.doc_id: (r.is_dup, r.dup_of)
-         for r in spark.read.parquet(str(tmp_path / "verdicts")).collect()}
-    assert v[21] == (False, None)
-    assert v[22] == (True, 21)
-    assert v[23] == (True, 21)  # resolved through gated-out 22
-    store_ids = {
-        r.doc for r in spark.read.parquet(str(tmp_path / "sigs")).collect()
-    }
-    assert store_ids == {21}
-
-
-def test_neardup_gate_monotonic_id_breach_fails_loud(spark, tmp_path):
-    """A batch doc id at or below the store's max id breaks the
-    documented monotonic-ingest contract — the gate must raise, not
-    silently admit the near-dup."""
-    import pytest
-
-    from n2khab_mhq_data_spark.streaming.neardup import neardup_gate_stream
-
-    src = tmp_path / "in"
-    src.mkdir()
-    schema = "doc_id long, text string"
-    base = " ".join(f"w{i}" for i in range(40))
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        q = neardup_gate_stream(
-            spark, stream, str(tmp_path / "sigs"),
-            str(tmp_path / "verdicts"), "text", "doc_id",
-            str(tmp_path / "ckpt"),
-        )
-        q.awaitTermination(120)
-
-    spark.createDataFrame([(10, base)], schema).write.mode(
-        "append"
-    ).parquet(str(src))
-    run()
-    spark.createDataFrame(
-        [(5, " ".join(f"v{i}" for i in range(40)))], schema
-    ).write.mode("append").parquet(str(src))
-    with pytest.raises(Exception, match="id contract breach"):
-        run()
-
-
-def test_neardup_gate_rejects_old_scheme_signature_store(spark, tmp_path):
-    """A signature store written under the pre-r9 scheme (grams as
-    array<string> shingles, not xxhash64 longs) must fail at the gate
-    with a regenerate instruction, not die at analysis time inside
-    unionByName/array_intersect with an opaque type mismatch
-    (ADVICE r9)."""
-    import pytest
-
-    from n2khab_mhq_data_spark.streaming.neardup import neardup_gate_stream
-
-    src = tmp_path / "in"
-    src.mkdir()
-    schema = "doc_id long, text string"
-    base = " ".join(f"w{i}" for i in range(40))
-    spark.createDataFrame([(10, base)], schema).write.mode(
-        "append"
-    ).parquet(str(src))
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        q = neardup_gate_stream(
-            spark, stream, str(tmp_path / "sigs"),
-            str(tmp_path / "verdicts"), "text", "doc_id",
-            str(tmp_path / "ckpt"),
-        )
-        q.awaitTermination(120)
-
-    # seed the store path with a legitimate run, then rewrite its grams
-    # column to the OLD array<string> scheme in place
-    run()
-    from pyspark.sql import functions as F
-
-    old = spark.read.parquet(str(tmp_path / "sigs")).withColumn(
-        "grams", F.expr("transform(grams, g -> cast(g as string))")
-    )
-    old_pdf = old.toPandas()
-    import shutil
-
-    shutil.rmtree(tmp_path / "sigs")
-    spark.createDataFrame(old_pdf, old.schema).write.parquet(
-        str(tmp_path / "sigs")
-    )
-    shutil.rmtree(tmp_path / "ckpt")  # force reprocessing of the source
-    spark.createDataFrame(
-        [(20, " ".join(f"v{i}" for i in range(40)))], schema
-    ).write.mode("append").parquet(str(src))
-    with pytest.raises(Exception, match="incompatible scheme"):
-        run()
-
-
-def test_neardup_gate_stream_replay_idempotent(spark, tmp_path):
-    """Replaying micro-batches (checkpoint wiped, full backlog
-    re-processed) must converge to the SAME verdict table and signature
-    store — every state transition of the gate is idempotent."""
-    import shutil
-
-    from n2khab_mhq_data_spark.streaming.neardup import neardup_gate_stream
-
-    src = tmp_path / "in"
-    sig = tmp_path / "sigs"
-    verdicts = tmp_path / "verdicts"
-    ckpt = tmp_path / "ckpt"
-    src.mkdir()
-    schema = "doc_id long, text string"
-    base = " ".join(f"w{i}" for i in range(40))
-    spark.createDataFrame(
-        [(1, base), (2, base + " extra"),
-         (3, " ".join(f"v{i}" for i in range(40)))],
-        schema,
-    ).write.mode("append").parquet(str(src))
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        q = neardup_gate_stream(
-            spark, stream, str(sig), str(verdicts),
-            "text", "doc_id", str(ckpt),
-        )
-        # must ASSERT termination: a replay-induced livelock (self-pairs
-        # in the store x batch leg spinning the pointer-jump loop) would
-        # otherwise time out here and leave a runaway query the reads
-        # below happily observe mid-flight state from
-        assert q.awaitTermination(120), "gate query did not terminate"
-
-    run()
-    v1 = sorted(
-        tuple(r)
-        for r in spark.read.parquet(str(verdicts))
-        .select("doc_id", "is_dup", "dup_of")
-        .collect()
-    )
-    s1 = sorted(r.doc for r in spark.read.parquet(str(sig)).collect())
-    assert v1 == [(1, False, None), (2, True, 1), (3, False, None)]
-    assert s1 == [1, 3]
-
-    # wipe the checkpoint -> the whole backlog replays as a new batch 0
-    shutil.rmtree(ckpt)
-    run()
-    v2 = sorted(
-        tuple(r)
-        for r in spark.read.parquet(str(verdicts))
-        .select("doc_id", "is_dup", "dup_of")
-        .collect()
-    )
-    s2 = sorted(r.doc for r in spark.read.parquet(str(sig)).collect())
-    assert v2 == v1
-    assert s2 == s1
-
-
-def test_trending_topk_stream_equals_batch(spark, tmp_path):
-    """Streaming leaderboard: two rounds (second updates an existing
-    window and opens a new one) must converge to the batch top-k, and
-    per-trigger IO must track the touched windows — a window untouched
-    by the second trigger keeps byte-identical partition files."""
-    import os
-
-    from n2khab_mhq_data_spark.streaming.trending import (
-        trending_topk,
-        trending_topk_stream,
-    )
-
-    src = tmp_path / "ev"
-    counts = tmp_path / "counts"
-    topk = tmp_path / "topk"
-    ckpt = tmp_path / "ckpt"
-    src.mkdir()
-    schema = "ts timestamp, event_type string"
-
-    def write(rows):
-        spark.createDataFrame(
-            rows, "ts string, event_type string"
-        ).selectExpr("CAST(ts AS TIMESTAMP) ts", "event_type").write.mode(
-            "append"
-        ).parquet(str(src))
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        q = trending_topk_stream(
-            spark, stream, str(counts), str(topk), str(ckpt), k=2,
-        )
-        q.awaitTermination(120)
-
-    write([
-        ("2024-01-01 09:30:00", "scroll"),  # 09:00: untouched by round 2
-        ("2024-01-01 10:05:00", "click"), ("2024-01-01 10:06:00", "click"),
-        ("2024-01-01 10:07:00", "view"), ("2024-01-01 10:08:00", "buy"),
-    ])
-    run()
-
-    def part_files(store):
-        d = os.path.join(str(store), "win_part=2024-01-01-09-00-00")
-        return {
-            f: os.stat(os.path.join(d, f)).st_mtime_ns
-            for f in sorted(os.listdir(d))
-            if not f.startswith(("_", "."))
-        }
-
-    before = {p: part_files(p) for p in (counts, topk)}
-    write([
-        # 10:00 window: 'buy' overtakes (2 more), new 11:00 window opens
-        ("2024-01-01 10:20:00", "buy"), ("2024-01-01 10:21:00", "buy"),
-        ("2024-01-01 11:01:00", "view"),
-    ])
-    run()
-    # dynamic partition overwrite: the 09:00 partition was not touched by
-    # the second trigger, so its files (names AND mtimes) are unchanged —
-    # per-trigger bytes written track the touched windows
-    for p in (counts, topk):
-        assert part_files(p) == before[p] and before[p]
-
-    got = {
-        (str(r.window_start), r.rank): (r.event_type, r.n)
-        for r in spark.read.parquet(str(topk)).collect()
-    }
-    # batch reference over all events
-    from pyspark.sql import functions as F
-
-    all_e = spark.read.parquet(str(src))
-    ref_counts = (
-        all_e.groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(F.col("window.start").alias("window_start"),
-                "event_type", "n")
-    )
-    want = {
-        (str(r.window_start), r.rank): (r.event_type, r.n)
-        for r in trending_topk(ref_counts, 2).collect()
-    }
-    assert got == want
-    assert got[("2024-01-01 10:00:00", 1)] == ("buy", 3)
-    assert got[("2024-01-01 10:00:00", 2)] == ("click", 2)
-    assert got[("2024-01-01 11:00:00", 1)] == ("view", 1)
-
-
-def test_trending_topk_replay_idempotent(spark, tmp_path):
-    """Wiping the checkpoint and replaying the whole backlog must
-    converge both partitioned stores to the same contents — the
-    dynamic-partition-overwrite publish is idempotent per window, which
-    is also what repairs a crash mid-publish (some partitions new, some
-    old) on the replayed batch."""
-    import shutil
-
-    from n2khab_mhq_data_spark.streaming.trending import trending_topk_stream
-
-    src = tmp_path / "ev"
-    counts = tmp_path / "counts"
-    topk = tmp_path / "topk"
-    ckpt = tmp_path / "ckpt"
-    src.mkdir()
-    schema = "ts timestamp, event_type string"
-    spark.createDataFrame(
-        [("2024-01-01 10:05:00", "click"), ("2024-01-01 10:06:00", "view"),
-         ("2024-01-01 11:30:00", "view")],
-        "ts string, event_type string",
-    ).selectExpr("CAST(ts AS TIMESTAMP) ts", "event_type").write.mode(
-        "append"
-    ).parquet(str(src))
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        q = trending_topk_stream(
-            spark, stream, str(counts), str(topk), str(ckpt), k=2,
-        )
-        q.awaitTermination(120)
-
-    run()
-    snap = lambda p: sorted(  # noqa: E731
-        tuple(r) for r in spark.read.parquet(str(p)).collect()
-    )
-    c1, t1 = snap(counts), snap(topk)
-    shutil.rmtree(ckpt)
-    run()
-    assert snap(counts) == c1
-    assert snap(topk) == t1
-
-
-def test_trending_topk_retention_prunes_final_windows(spark, tmp_path):
-    import datetime
-
-    from n2khab_mhq_data_spark.streaming.trending import trending_topk_stream
-
-    src = tmp_path / "ev"
-    counts = tmp_path / "counts"
-    topk = tmp_path / "topk"
-    ckpt = tmp_path / "ckpt"
-    src.mkdir()
-    schema = "ts timestamp, event_type string"
-
-    def write(rows):
-        spark.createDataFrame(
-            rows, "ts string, event_type string"
-        ).selectExpr("CAST(ts AS TIMESTAMP) ts", "event_type").write.mode(
-            "append"
-        ).parquet(str(src))
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        q = trending_topk_stream(
-            spark, stream, str(counts), str(topk), str(ckpt), k=2,
-            retention=datetime.timedelta(hours=3),
-        )
-        q.awaitTermination(120)
-
-    write([("2024-01-01 10:05:00", "click")])
-    run()
-    # a much later batch: the 10:00 window falls outside the 3h horizon
-    write([("2024-01-02 09:10:00", "view")])
-    run()
-    windows = {
-        str(r.window_start)
-        for r in spark.read.parquet(str(topk)).collect()
-    }
-    assert windows == {"2024-01-02 09:00:00"}
-    cwindows = {
-        str(r.window_start)
-        for r in spark.read.parquet(str(counts)).collect()
-    }
-    assert cwindows == {"2024-01-02 09:00:00"}
-
-
-def test_trending_topk_session_timezone_independent(spark, tmp_path):
-    """With spark.sql.session.timeZone set away from the JVM/driver
-    default, every partition string must still agree: they all derive
-    from one Spark-side date_format now, where the old driver-side
-    strftime over collected datetimes silently missed the partitions
-    just written (the count merge then read nothing and fresh top-k
-    came from an empty slice — ADVICE r4)."""
-    from n2khab_mhq_data_spark.streaming.trending import (
-        trending_topk,
-        trending_topk_stream,
-    )
-    from pyspark.sql import functions as F
-
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "Australia/Eucla")
-    try:
-        src = tmp_path / "ev"
-        src.mkdir()
-        schema = "ts timestamp, event_type string"
-
-        def write(rows):
-            spark.createDataFrame(
-                rows, "ts string, event_type string"
-            ).selectExpr(
-                "CAST(ts AS TIMESTAMP) ts", "event_type"
-            ).write.mode("append").parquet(str(src))
-
-        def run():
-            stream = spark.readStream.schema(schema).parquet(str(src))
-            q = trending_topk_stream(
-                spark, stream, str(tmp_path / "counts"),
-                str(tmp_path / "topk"), str(tmp_path / "ckpt"), k=2,
-            )
-            q.awaitTermination(120)
-
-        write([
-            ("2024-01-01 10:05:00", "click"),
-            ("2024-01-01 10:06:00", "click"),
-            ("2024-01-01 10:07:00", "view"),
-        ])
-        run()
-        # second trigger MERGES into the same window — the regression
-        # read an empty slice here and dropped the earlier counts
-        write([
-            ("2024-01-01 10:20:00", "view"),
-            ("2024-01-01 10:21:00", "view"),
-        ])
-        run()
-        got = {
-            (str(r.window_start), r.rank): (r.event_type, r.n)
-            for r in spark.read.parquet(str(tmp_path / "topk")).collect()
-        }
-        all_e = spark.read.parquet(str(src))
-        ref = (
-            all_e.groupBy(F.window("ts", "1 hour"), "event_type")
-            .agg(F.count("*").alias("n"))
-            .select(F.col("window.start").alias("window_start"),
-                    "event_type", "n")
-        )
-        want = {
-            (str(r.window_start), r.rank): (r.event_type, r.n)
-            for r in trending_topk(ref, 2).collect()
-        }
-        assert got == want and got
-        # the merged window ranks view(3) over click(2)
-        assert any(v == ("view", 3) for v in got.values())
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
-
-
-def test_snapshot_stream_publishes_versions_exactly_once(spark, tmp_path):
-    """Streaming upsert into the snapshot store: each trigger lands as
-    one MERGE-published version; latest state converges to the batch
-    latest-wins result; a checkpoint-wiped replay publishes NO new
-    versions for already-manifested batch ids (exactly-once via the
-    manifest's batch_id stamp); and the per-trigger change feed falls
-    out of snapshot_diff."""
-    import shutil
-
-    from n2khab_mhq_data_spark.sources.snapshots import (
-        read_snapshot,
-        snapshot_diff,
-        snapshot_log,
-        snapshot_stream,
-    )
-
-    src = tmp_path / "src"
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
-    schema = "k int, v string, rev int"
-
-    def write(rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(
-            str(src)
-        )
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        q = snapshot_stream(stream, store, ["k"], ["rev"], ckpt)
-        q.awaitTermination(120)
-
-    write([(1, "a", 1), (2, "b", 1)])
-    run()
-    assert read_snapshot(spark, store).count() == 2
-    write([(2, "B", 2), (3, "c", 2)])
-    run()
-    latest = {r.k: r.v for r in read_snapshot(spark, store).collect()}
-    assert latest == {1: "a", 2: "B", 3: "c"}
-    versions = [r.version for r in snapshot_log(spark, store).collect()]
-    assert versions == [1, 2]
-    # the trigger's change feed
-    feed = {
-        (r.k, r.op)
-        for r in snapshot_diff(spark, store, 1, 2, ["k"]).collect()
-    }
-    assert feed == {(2, "update"), (3, "insert")}
-    # wipe the checkpoint: the backlog replays as new batch ids -> those
-    # ARE published (new ids), but re-running with the SAME checkpoint
-    # state must be a no-op
-    run()
-    assert [r.version for r in snapshot_log(spark, store).collect()] == [1, 2]
-    # time travel to the pre-merge state still works
-    assert {r.k for r in read_snapshot(spark, store, 1).collect()} == {1, 2}
-
-
-def test_jsonl_ingest_stream_quarantine_and_merge(spark, tmp_path):
-    from n2khab_mhq_data_spark.streaming.ingest import jsonl_ingest_stream
-
-    src = tmp_path / "in"
-    state = tmp_path / "state"
-    quar = tmp_path / "quarantine"
-    ckpt = tmp_path / "ckpt"
-    src.mkdir()
-
-    schema = "doc_id long, text string, rev long"
-
-    # shard 1: two good lines and one corrupt line
-    (src / "a.jsonl").write_text(
-        '{"doc_id": 1, "text": "alpha", "rev": 1}\n'
-        "THIS IS NOT JSON\n"
-        '{"doc_id": 2, "text": "beta", "rev": 1}\n'
-    )
-    q = jsonl_ingest_stream(
-        spark, str(src), schema, str(state), str(quar),
-        ["doc_id"], ["rev"], str(ckpt),
-    )
-    q.awaitTermination(120)
-
-    s1 = {(r.doc_id, r.text, r.rev)
-          for r in spark.read.parquet(str(state)).collect()}
-    assert s1 == {(1, "alpha", 1), (2, "beta", 1)}
-    bad = spark.read.parquet(str(quar)).collect()
-    assert len(bad) == 1 and bad[0]._corrupt_record == "THIS IS NOT JSON"
-
-    # shard 2: update doc 1 (rev 2 wins), insert doc 3
-    (src / "b.jsonl").write_text(
-        '{"doc_id": 1, "text": "alpha-v2", "rev": 2}\n'
-        '{"doc_id": 3, "text": "gamma", "rev": 1}\n'
-    )
-    q = jsonl_ingest_stream(
-        spark, str(src), schema, str(state), str(quar),
-        ["doc_id"], ["rev"], str(ckpt),
-    )
-    q.awaitTermination(120)
-
-    s2 = {(r.doc_id, r.text, r.rev)
-          for r in spark.read.parquet(str(state)).collect()}
-    assert s2 == {(1, "alpha-v2", 2), (2, "beta", 1), (3, "gamma", 1)}
-
-    # replay with the same checkpoint and no new files: state unchanged,
-    # quarantine not double-appended (file source dedups delivery)
-    q = jsonl_ingest_stream(
-        spark, str(src), schema, str(state), str(quar),
-        ["doc_id"], ["rev"], str(ckpt),
-    )
-    q.awaitTermination(120)
-    s3 = {(r.doc_id, r.text, r.rev)
-          for r in spark.read.parquet(str(state)).collect()}
-    assert s3 == s2
-    assert spark.read.parquet(str(quar)).count() == 1
-
-
-def test_neardup_gate_rejects_intra_batch_duplicate_ids(spark, tmp_path):
-    """Two same-id rows with different text in ONE micro-batch would
-    sign a chimera gram set matching neither document — the gate must
-    fail loudly instead."""
-    import pytest as _pytest
-
-    from n2khab_mhq_data_spark.streaming.neardup import neardup_gate_stream
-
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    (src_dir / "b1.jsonl").write_text(
-        '{"doc_id": 1, "text": "alpha beta gamma delta"}\n'
-        '{"doc_id": 1, "text": "completely different text here"}\n'
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .json(str(src_dir))
-    )
-    q = neardup_gate_stream(
-        spark,
-        stream,
-        str(tmp_path / "sig"),
-        str(tmp_path / "verdicts"),
-        "text",
-        "doc_id",
-        str(tmp_path / "ckpt"),
-    )
-    with _pytest.raises(Exception, match="duplicate ids within"):
-        q.awaitTermination()
-
-
-def test_neardup_store_layout_is_partitioned(spark, tmp_path):
-    """The signature store persists hive-partitioned by doc-id range so
-    a trigger rewrites only touched partitions, and verdicts likewise —
-    the per-batch IO contract at scale."""
-    import glob
-
-    from n2khab_mhq_data_spark.streaming.neardup import neardup_gate_stream
-
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    (src_dir / "b1.jsonl").write_text(
-        '{"doc_id": 1, "text": "alpha beta gamma delta epsilon"}\n'
-        '{"doc_id": 2, "text": "one two three four five six"}\n'
-    )
-    q = neardup_gate_stream(
-        spark,
-        spark.readStream.schema("doc_id long, text string").json(
-            str(src_dir)
-        ),
-        str(tmp_path / "sig"),
-        str(tmp_path / "verdicts"),
-        "text",
-        "doc_id",
-        str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination()
-    assert glob.glob(str(tmp_path / "sig" / "sig_part=*"))
-    assert glob.glob(str(tmp_path / "verdicts" / "vpart=*"))
-
-
-def test_session_processor_idle_timer_closes_and_clears():
-    """Idle-timeout path: a stale timer (key active after registration)
-    passes through; a genuine-idle expiry emits the open session and
-    clears ALL state for the key."""
-    import pandas as pd
-
-    from n2khab_mhq_data_spark.streaming.sessions import SessionProcessor
-
-    class FakeState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-        def clear(self):
-            self.v = None
-
-    class FakeHandle:
-        def __init__(self):
-            self.timers = []
-
-        def registerTimer(self, ts):
-            self.timers.append(ts)
-
-    class TV:
-        def __init__(self, now):
-            self._now = now
-
-        def getCurrentProcessingTimeInMs(self):
-            return self._now
-
-    class ETI:
-        def __init__(self, t):
-            self._t = t
-
-        def getExpiryTimeInMs(self):
-            return self._t
-
-    p = SessionProcessor(gap=30, idle_timeout_ms=1000)
-    p._open = FakeState()
-    p._seen = FakeState()
-    p._handle = FakeHandle()
-    list(p.handleInputRows((1,), iter([pd.DataFrame({"ts": [100, 110]})]), TV(5000)))
-    assert p._handle.timers == [6000]
-    # key active again at 5500 -> the 6000 timer is stale when it fires
-    list(p.handleInputRows((1,), iter([pd.DataFrame({"ts": [120]})]), TV(5500)))
-    stale = list(p.handleExpiredTimer((1,), TV(6000), ETI(6000)))
-    assert stale == [] and p._open.exists()
-    # the 6500 timer is genuine idle: emit + clear
-    out = list(p.handleExpiredTimer((1,), TV(6500), ETI(6500)))
-    rows = [tuple(r) for df in out for r in df.itertuples(index=False)]
-    assert rows == [(1, 100, 120, 3)]
-    assert not p._open.exists() and not p._seen.exists()
 
 
 def test_static_enrich_stream_equals_batch(spark, tmp_path):

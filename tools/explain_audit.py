@@ -564,10 +564,10 @@ EXPECTED: dict[str, set[str]] = {
 # proportionality makes the estimates huge, so the static planner
 # demotes every one of these to a shuffle join on its own; they are NOT
 # the prefix_filter incident class (relations we could PROVE unbounded
-# got explicit SHUFFLE_MERGE hints instead — see llmdata/dedup.py,
-# streaming/neardup.py). The remaining scale hazard — AQE converting a
-# shuffle join back to broadcast on COMPRESSED runtime bytes whose
-# DESERIALIZED HashedRelation overwhelms the driver — is bounded
+# got explicit SHUFFLE_MERGE hints instead — see llmdata/dedup.py). The
+# remaining scale hazard — AQE converting a shuffle join back to
+# broadcast on COMPRESSED runtime bytes whose DESERIALIZED
+# HashedRelation overwhelms the driver — is bounded
 # globally by spark.sql.adaptive.autoBroadcastJoinThreshold = 16 MB
 # (session.py): ~500 MB deserialized worst case on the 8 GB driver.
 # Several entries are additionally bounded by construction: k-row
