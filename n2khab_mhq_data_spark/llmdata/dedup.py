@@ -582,51 +582,11 @@ def simhash(
     return src.mapInPandas(_sig, schema=out_schema)
 
 
-def _iter_ckpt(df: DataFrame, reliable: bool) -> DataFrame:
-    """LAZY checkpoint for iterative-loop state: the caller's very next
-    action (the convergence fingerprint collect) is the materializing
-    job, so each round costs ONE Spark job instead of an eager-
-    checkpoint job plus a fingerprint job. ``reliable=True`` switches to
-    durable ``checkpoint()`` (executor-loss-safe for long 100 TB runs;
-    requires ``setCheckpointDir``)."""
-    return df.checkpoint(False) if reliable else df.localCheckpoint(False)
-
-
-def _convergence_fingerprint(df: DataFrame, *cols: str) -> tuple:
-    """Order-insensitive (count, bit_xor of portable row hash) over
-    ``cols`` — equal fingerprints across rounds mean the iterative state
-    stopped changing. One tiny aggregate; no join against the previous
-    round's state."""
-    from n2khab_mhq_data_spark.operators.pinning import row_hash
-
-    (row,) = (
-        df.select(row_hash(*cols).alias("h"))
-        .agg(F.count("*").alias("n"), F.expr("bit_xor(h)").alias("x"))
-        .collect()
-    )
-    return (row.n, row.x)
-
-
-def _confirm_unchanged(old: DataFrame, new: DataFrame, cols: list[str]) -> bool:
-    """Exact set-equality confirmation for the round that FIRST reports
-    fingerprint convergence: a 64-bit (count, bit_xor) fingerprint can in
-    principle collide (or xor-cancel between rounds) and terminate an
-    iterative algorithm early with silently wrong state.  Both callers
-    iterate over duplicate-free states (labels keyed by unique node;
-    ``small_star`` output is ``.distinct()``), so with counts already
-    equal (part of the fingerprint) a one-directional anti-join proving
-    ``new ⊆ old`` proves set equality.  Runs once per algorithm, only on
-    the apparent convergence round — one extra bounded join, not a
-    per-round diff."""
-    return new.join(old, cols, "left_anti").limit(1).count() == 0
-
-
 def connected_components(
     edges: DataFrame,
     a_col: str = "d1",
     b_col: str = "d2",
     max_iter: int = 20,
-    reliable: bool = False,
 ) -> DataFrame:
     """EXACT connected components over an undirected edge list by
     iterated min-label propagation (hash-to-min) — the fixpoint that
@@ -647,30 +607,22 @@ def connected_components(
     (monotone min-label cannot oscillate), and convergence is an EXACT
     in-state probe: the round's last step carries each node's pre-step
     label as ``__old``, and an empty ``comp != __old`` filter proves
-    the fixpoint (see the loop comment).
-
-    ``reliable=True`` switches to reliable ``checkpoint()`` against the
-    session's configured checkpoint dir (``sparkContext.setCheckpointDir``
-    to durable storage first). localCheckpoint blocks live on executors —
-    on a long 100 TB run, one lost executor mid-iteration kills the job;
-    reliable checkpoints survive executor loss at the cost of a
-    write-to-storage per round."""
-
-    def ckpt(df: DataFrame) -> DataFrame:
-        return df.checkpoint() if reliable else df.localCheckpoint()
+    the fixpoint (see the loop comment). Label checkpoints are LAZY
+    (``localCheckpoint(False)``): the round's emptiness probe is the job
+    that materializes them, so a round costs one job, not two."""
 
     raw = edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
     # both directions once up front: each round then needs a SINGLE
     # edges-to-labels join to propagate labels across every edge both
     # ways, and the node universe is just e's distinct left endpoints
-    e = ckpt(
-        raw.union(raw.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    )
+    e = raw.union(
+        raw.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    ).localCheckpoint()
     nodes = e.select(F.col("a").alias("node")).distinct()
 
-    labels = _iter_ckpt(
-        nodes.select("node", F.col("node").alias("comp")), reliable
-    )
+    labels = nodes.select(
+        "node", F.col("node").alias("comp")
+    ).localCheckpoint(False)
     prev_ckpt = labels
     comp_t = labels.schema["comp"].dataType.simpleString()
 
@@ -716,15 +668,15 @@ def connected_components(
             "comp",
             F.expr(f"CAST(NULL AS {comp_t})").alias("__old"),
         )
-        new = _iter_ckpt(
+        new = (
             cur.withColumn("__old", F.col("comp"))
             .unionByName(prop2)
             .groupBy("node")
             .agg(
                 F.min("comp").alias("comp"),
                 F.min("__old").alias("__old"),
-            ),
-            reliable,
+            )
+            .localCheckpoint(False)
         )
         total_steps += n_steps
         converged = new.filter(
@@ -746,8 +698,8 @@ def connected_components(
         # returning them would silently under-merge components
         # (splitting a near-dup chain across train/test is the exact
         # leakage the consumers guard against). Fail loudly; min-label
-        # needs O(component diameter) rounds — raise max_iter or use
-        # connected_components_twophase (O(log^2 n)) for deep chains.
+        # needs O(component diameter) steps — raise max_iter for deep
+        # chains.
         raise RuntimeError(
             f"connected_components did not converge in {max_iter}"
             " rounds (component diameter exceeds max_iter)"
@@ -757,129 +709,6 @@ def connected_components(
     release(e)
     return labels.select(
         F.col("node").alias("doc"), F.col("comp").alias("component_id")
-    )
-
-
-def connected_components_twophase(
-    edges: DataFrame,
-    a_col: str = "d1",
-    b_col: str = "d2",
-    max_iter: int = 30,
-    reliable: bool = False,
-) -> DataFrame:
-    """Connected components by alternating LARGE-STAR / SMALL-STAR
-    contraction (the two-phase MapReduce CC algorithm, Kiveris et al.
-    2014) — same exact output as :func:`connected_components`, but
-    converging in O(log^2 n) rounds instead of O(component diameter), so
-    high-diameter near-dup graphs (chains of pairwise-similar docs) stop
-    dominating wall-clock at 100 TB.
-
-    Per round, each phase is ONE groupBy on the star center plus a join
-    back to the neighbor list — the same shuffle key both phases, and
-    strictly fewer shuffles per round than min-label propagation's two
-    edge-label joins once diameter exceeds ~4. Convergence is detected by
-    an order-insensitive edge-set fingerprint (count + bit_xor of a
-    portable row hash): one tiny aggregate per round instead of a
-    join-and-count diff.
-
-    Keep :func:`connected_components` as the oracle sibling — identical
-    labels, simpler invariants."""
-
-    def ckpt(df: DataFrame) -> DataFrame:
-        return df.checkpoint() if reliable else df.localCheckpoint()
-
-    # materialize the raw pair projection ONCE — both the edge list and
-    # the node universe derive from it, and the pair pipeline feeding
-    # `edges` is usually the expensive part (building nodes from the raw
-    # DataFrame would re-run it a second time)
-    raw = ckpt(edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b")))
-    # undirected edge list, self-loops dropped, canonical (min, max) dedup
-    e0 = (
-        raw.filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-    )
-    # node universe from the RAW pairs: a self-loop-only node has no row
-    # in e0 but is still its own component (parity with
-    # connected_components)
-    nodes = (
-        raw.select(F.col("a").alias("node"))
-        .union(raw.select(F.col("b")))
-        .distinct()
-    )
-    e = ckpt(e0)
-
-
-    # Each phase computes its per-center minimum with a WINDOW over the
-    # center partition instead of a groupBy + self-join: one shuffle per
-    # phase (the window's hash partitioning), no join at all. Dedup
-    # happens once per round (small_star's trailing distinct) — duplicate
-    # intermediate edges can't change a min.
-    def large_star(ed: DataFrame) -> DataFrame:
-        # directed both ways: for each center u, m = min(N(u) ∪ {u});
-        # re-link strictly larger neighbors to m
-        nbr = ed.select(
-            F.col("a").alias("u"), F.col("b").alias("v")
-        ).union(ed.select(F.col("b"), F.col("a")))
-        m = F.min(F.least("v", "u")).over(W.partitionBy("u"))
-        return (
-            nbr.withColumn("m", m)
-            .filter(F.col("v") > F.col("u"))
-            .select(
-                F.least("v", "m").alias("a"), F.greatest("v", "m").alias("b")
-            )
-            .filter(F.col("a") != F.col("b"))
-        )
-
-    def small_star(ed: DataFrame) -> DataFrame:
-        # orient larger -> smaller: center u keeps neighbors v < u;
-        # all of them (and u) re-link to the minimum
-        nbr = ed.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        linked = nbr.withColumn(
-            "m", F.min("v").over(W.partitionBy("u"))
-        )
-        relink = linked.select(
-            F.col("v").alias("a"), F.col("m").alias("b")
-        ).union(linked.select(F.col("u"), F.col("m")))
-        return (
-            relink.filter(F.col("a") != F.col("b"))
-            .select(
-                F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-            )
-            .distinct()
-        )
-
-    fp = _convergence_fingerprint(e, "a", "b")
-    for _ in range(max_iter):
-        prev = e
-        e = _iter_ckpt(small_star(large_star(e)), reliable)
-        nfp = _convergence_fingerprint(e, "a", "b")
-        converged = nfp == fp and _confirm_unchanged(prev, e, ["a", "b"])
-        # free the superseded round's star-edge blocks immediately (the
-        # returned plan references only the FINAL e plus `nodes` -> raw;
-        # see operators/ckpt.py for the lifecycle argument)
-        release(prev)
-        if converged:
-            break
-        fp = nfp
-    else:
-        # same posture as connected_components: unconverged star edges
-        # mean labels are still moving — never return them silently
-        raise RuntimeError(
-            f"connected_components_twophase did not converge in"
-            f" {max_iter} rounds"
-        )
-    # converged: stars rooted at component minima; roots label themselves
-    return (
-        nodes.join(e, nodes["node"] == e["b"], "left")
-        .select("node", F.coalesce(e["a"], nodes["node"]).alias("comp"))
-        .groupBy("node")
-        .agg(F.min("comp").alias("comp"))
-        .select(
-            F.col("node").alias("doc"), F.col("comp").alias("component_id")
-        )
     )
 
 

@@ -90,7 +90,7 @@ def degree_histogram(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangle_stats(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """Single-row global graph statistics: nodes, edges, wedges (open
     2-paths), triangles, and the global clustering coefficient
     ``3*triangles / wedges``.
@@ -103,17 +103,10 @@ def triangle_stats(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
     large fraction of all groups.
 
     The edge list feeds five consumers (degrees, both orientation
-    joins, the path join, the closing join); without materialization
-    Spark re-executes the upstream pair pipeline per consumer, so the
-    (pruned, small) edge list is localCheckpoint'ed once — the same
-    pattern as the connected-components loop in llmdata/dedup.py —
-    UNLESS the caller passes ``checkpoint=False`` because it already
-    hands in a materialized frame (the memoized co-purchase edges) — a
-    second materialization would just duplicate the edge blocks in
-    executor storage.
+    joins, the path join, the closing join), so pass a materialized
+    frame (the registered caller hands in the checkpointed co-purchase
+    edges); an unmaterialized one re-runs its upstream per consumer.
     """
-    if checkpoint:
-        edges = edges.localCheckpoint()
     deg = degrees(edges).localCheckpoint()
     da = deg.select(
         F.col("node").alias("a"), F.col("degree").alias("deg_a")

@@ -34,9 +34,9 @@ checkpoint, no driver collect, no storage residency; measured ~2.3x
 faster per call at the bench tier in same-JVM alternation.
 
 Correctness precondition: exchange reuse (``spark.sql.exchange.reuse``,
-default true, plus AQE's stage-cache path) must not be disabled. When a
-session has it off, every entry point falls back to the original
-checkpoint-pinned implementation.
+default true, plus AQE's stage-cache path) must not be disabled. Every
+entry point raises ``ValueError`` on a session that has it off, rather
+than rank against two independently-sampled partitionings.
 """
 
 from __future__ import annotations
@@ -60,28 +60,9 @@ def _sum_result_type(dt: T.DataType) -> str:
     return dt.simpleString()
 
 
-def _reuse_disabled(df: DataFrame) -> bool:
-    """True when the session has exchange reuse off — the one conf under
-    which the in-plan offsets shape would read two independently-sampled
-    range partitionings (wrong offsets). Both the non-AQE ReuseExchange
-    rule and AQE's stage cache honor this flag."""
-    return (
-        df.sparkSession.conf.get("spark.sql.exchange.reuse", "true")
-        == "false"
-    )
-
-
 def _num_partitions(df: DataFrame, num_partitions: int | None) -> int:
     return num_partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-
-
-def _all_cols_orderable(df: DataFrame) -> bool:
-    """True when every column can participate in a range-partitioning
-    key (atomic types; arrays/maps/structs excluded conservatively)."""
-    return all(
-        isinstance(f.dataType, T.AtomicType) for f in df.schema.fields
     )
 
 
@@ -100,6 +81,26 @@ def _full_range_key(df: DataFrame, order_by: list[Column]) -> list[Column]:
     return [*order_by, *[F.col(c) for c in df.columns]]
 
 
+def _range_shuffle(
+    df: DataFrame, order_by: list[Column], p: int
+) -> DataFrame:
+    """``df`` range-partitioned on ``_full_range_key`` and tagged with
+    its partition id — the exchange that BOTH in-plan consumers read.
+    Raises when the session has exchange reuse off: both the non-AQE
+    ReuseExchange rule and AQE's stage cache honor that flag, and
+    without reuse the two consumers would each sample their own range
+    boundaries (wrong offsets, silently)."""
+    conf = df.sparkSession.conf
+    if conf.get("spark.sql.exchange.reuse", "true") == "false":
+        raise ValueError(
+            "distributed ranking needs spark.sql.exchange.reuse=true: the"
+            " offsets and the ranking pass must read one range shuffle"
+        )
+    return df.repartitionByRange(
+        p, *_full_range_key(df, order_by)
+    ).withColumn("__pid", F.spark_partition_id())
+
+
 def _range_parts(
     df: DataFrame, order_by: list[Column], p: int
 ) -> tuple[DataFrame, DataFrame]:
@@ -109,9 +110,7 @@ def _range_parts(
     physical planner / AQE reuses one shuffle stage — the determinism
     contract the module docstring explains (and see ``_full_range_key``
     for why the partitioning key carries every column)."""
-    part = df.repartitionByRange(
-        p, *_full_range_key(df, order_by)
-    ).withColumn("__pid", F.spark_partition_id())
+    part = _range_shuffle(df, order_by, p)
     counts = part.groupBy("__pid").agg(F.count("*").alias("__c"))
     return part, counts
 
@@ -152,10 +151,6 @@ def global_rank(
     partition, and a unique order makes ranks reproducible and range
     partitions balanced (no single hot key ever exceeds one partition).
     """
-    if _reuse_disabled(df) or not _all_cols_orderable(df):
-        return _global_rank_checkpointed(
-            df, order_by, rank_col, num_partitions
-        )
     p = _num_partitions(df, num_partitions)
     part, counts = _range_parts(df, order_by, p)
     w = W.partitionBy("__pid").orderBy(*order_by)
@@ -169,21 +164,6 @@ def global_rank(
     )
 
 
-def _global_rank_n(
-    df: DataFrame,
-    order_by: list[Column],
-    rank_col: str = "rank",
-    num_partitions: int | None = None,
-) -> tuple[DataFrame, int]:
-    """``global_rank`` plus the exact total row count as a Python int
-    (callers that bake ``n`` into literal expressions: a23_trimmed_mean,
-    audit_equidepth_histogram). The count is ONE narrow extra job over
-    the unshuffled input — cheaper than the checkpoint+collect pass it
-    replaced, which materialized the whole shuffled relation to get the
-    same number."""
-    return global_rank(df, order_by, rank_col, num_partitions), df.count()
-
-
 def global_rank_with_total(
     df: DataFrame,
     order_by: list[Column],
@@ -194,14 +174,9 @@ def global_rank_with_total(
     """``global_rank`` carrying the exact total row count as a COLUMN
     (r11): for callers whose downstream logic needs ``n`` only inside
     expressions (median midpoints, trim cuts), the in-plan ``__total``
-    of the offsets relation replaces the ``df.count()`` driver
-    round-trip of :func:`_global_rank_n` — zero extra jobs, zero
-    driver-side state, one fewer pass over the input per call."""
-    if _reuse_disabled(df) or not _all_cols_orderable(df):
-        ranked, n = _global_rank_checkpointed_n(
-            df, order_by, rank_col, num_partitions
-        )
-        return ranked.withColumn(total_col, F.lit(n).cast("long"))
+    of the offsets relation replaces a ``df.count()`` driver
+    round-trip — zero extra jobs, zero driver-side state, one fewer
+    pass over the input per call."""
     p = _num_partitions(df, num_partitions)
     part, counts = _range_parts(df, order_by, p)
     w = W.partitionBy("__pid").orderBy(*order_by)
@@ -233,16 +208,6 @@ def quantile_bins(
     rank machinery; the total row count joins in as a column of the
     <= P-row offsets relation (``__total``), so the whole computation is
     ONE action with zero driver round-trips."""
-    if _reuse_disabled(df) or not _all_cols_orderable(df):
-        ranked, n = _global_rank_checkpointed_n(df, order_by, "__rank")
-        if n == 0:
-            return ranked.withColumn(
-                bin_col, F.lit(None).cast("int")
-            ).drop("__rank")
-        return ranked.withColumn(
-            bin_col,
-            F.expr(f"CAST(((__rank - 1) * {n_bins}) DIV {n} AS INT)"),
-        ).drop("__rank")
     p = _num_partitions(df, None)
     part, counts = _range_parts(df, order_by, p)
     w = W.partitionBy("__pid").orderBy(*order_by)
@@ -277,14 +242,8 @@ def global_running_max(
     semantics by construction instead of by a Python mirror). This is
     the streaming-watermark simulation primitive: the watermark a row
     sees is the max event time of everything that ARRIVED before it."""
-    if _reuse_disabled(df) or not _all_cols_orderable(df):
-        return _global_running_max_checkpointed(
-            df, order_by, value_col, out_col, num_partitions
-        )
     p = _num_partitions(df, num_partitions)
-    part = df.repartitionByRange(
-        p, *_full_range_key(df, order_by)
-    ).withColumn("__pid", F.spark_partition_id())
+    part = _range_shuffle(df, order_by, p)
     pmax = part.groupBy("__pid").agg(F.max(value_col).alias("__m"))
     woff = W.orderBy("__pid").rowsBetween(W.unboundedPreceding, -1)
     prefix = pmax.select(
@@ -334,15 +293,9 @@ def grouped_running_sum(
     and including that row; ``__pcnt`` (count of non-null values in
     earlier slices of the group) distinguishes "slice empty so far" from
     "group empty so far"."""
-    if _reuse_disabled(df) or not _all_cols_orderable(df):
-        return _grouped_running_sum_checkpointed(
-            df, group_cols, order_by, value_col, out_col, num_partitions
-        )
     p = _num_partitions(df, num_partitions)
     gcols = [F.col(c) for c in group_cols]
-    part = df.repartitionByRange(
-        p, *_full_range_key(df, [*gcols, *order_by])
-    ).withColumn("__pid", F.spark_partition_id())
+    part = _range_shuffle(df, [*gcols, *order_by], p)
     totals = part.groupBy("__pid", *group_cols).agg(
         F.sum(value_col).alias("__t"),
         F.count(value_col).alias("__cnt"),
@@ -383,188 +336,6 @@ def grouped_running_sum(
             cond = cond & (part[c] == off_dim[c])
     return (
         part.join(F.broadcast(off_dim), cond)
-        .drop(off_dim["__pid"])
-        .drop(*[off_dim[c] for c in group_cols])
-        .withColumn(
-            out_col,
-            F.when(
-                local.isNull(),
-                F.when(F.col("__pcnt") > 0, F.col("__prefix")),
-            ).otherwise(local + F.col("__prefix")),
-        )
-        .drop("__pid", "__prefix", "__pcnt")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Checkpoint-pinned originals — the fallback for sessions with
-# spark.sql.exchange.reuse=false (see module docstring). Kept verbatim
-# from the pre-r11 implementation; correct at any scale, but pays a full
-# materialization of the shuffled relation per call.
-# ---------------------------------------------------------------------------
-
-
-def _global_rank_checkpointed(
-    df: DataFrame,
-    order_by: list[Column],
-    rank_col: str = "rank",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    ranked, _ = _global_rank_checkpointed_n(
-        df, order_by, rank_col, num_partitions
-    )
-    return ranked
-
-
-def _global_rank_checkpointed_n(
-    df: DataFrame,
-    order_by: list[Column],
-    rank_col: str = "rank",
-    num_partitions: int | None = None,
-) -> tuple[DataFrame, int]:
-    """Original two-pass rank: ``repartitionByRange`` pinned with
-    ``localCheckpoint`` so the size-count pass and the ranking pass see
-    the SAME partitioning; partition sizes are a <= P-row collect;
-    offsets come back as a broadcast P-row dimension."""
-    spark = df.sparkSession
-    p = _num_partitions(df, num_partitions)
-    part = df.repartitionByRange(p, *order_by).localCheckpoint()
-    with_pid = part.withColumn("__pid", F.spark_partition_id())
-    sizes = sorted(
-        (r["__pid"], r["c"])
-        for r in with_pid.groupBy("__pid")
-        .agg(F.count("*").alias("c"))
-        .collect()
-    )
-    offsets, acc = [], 0
-    for pid, c in sizes:
-        offsets.append((pid, acc))
-        acc += c
-    off_dim = spark.createDataFrame(offsets, "__pid int, __offset long")
-    w = W.partitionBy("__pid").orderBy(*order_by)
-    ranked = (
-        with_pid.join(F.broadcast(off_dim), "__pid")
-        .withColumn(
-            rank_col,
-            (F.col("__offset") + F.row_number().over(w)).cast("long"),
-        )
-        .drop("__pid", "__offset")
-    )
-    return ranked, acc
-
-
-def _global_running_max_checkpointed(
-    df: DataFrame,
-    order_by: list[Column],
-    value_col: str,
-    out_col: str = "running_max",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    spark = df.sparkSession
-    p = _num_partitions(df, num_partitions)
-    part = df.repartitionByRange(p, *order_by).localCheckpoint()
-    with_pid = part.withColumn("__pid", F.spark_partition_id())
-    pmax = sorted(
-        (r["__pid"], r["m"])
-        for r in with_pid.groupBy("__pid")
-        .agg(F.max(value_col).alias("m"))
-        .collect()
-    )
-
-    # Spark orders NaN ABOVE every number (so F.max of a partition with
-    # a NaN is NaN, and greatest() below propagates it); Python's `>`
-    # says NaN > x is False, which would silently DROP a NaN partition
-    # maximum from the prefix. Mirror the engine's ordering here.
-    def _spark_gt(a, b) -> bool:
-        if a != a:  # a is NaN -> greatest
-            return True
-        if b != b:  # b is NaN, a is not
-            return False
-        return a > b
-
-    rows, run = [], None
-    for pid, m in pmax:
-        rows.append((pid, run))
-        if m is not None and (run is None or _spark_gt(m, run)):
-            run = m
-    field = df.schema[value_col].dataType.simpleString()
-    off_dim = spark.createDataFrame(rows, f"__pid int, __prefix {field}")
-    w = (
-        W.partitionBy("__pid")
-        .orderBy(*order_by)
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    local = F.max(value_col).over(w)
-    return (
-        with_pid.join(F.broadcast(off_dim), "__pid")
-        .withColumn(out_col, F.greatest(local, F.col("__prefix")))
-        .drop("__pid", "__prefix")
-    )
-
-
-def _grouped_running_sum_checkpointed(
-    df: DataFrame,
-    group_cols: list[str],
-    order_by: list[Column],
-    value_col: str,
-    out_col: str = "running_sum",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    spark = df.sparkSession
-    p = _num_partitions(df, num_partitions)
-    gcols = [F.col(c) for c in group_cols]
-    part = df.repartitionByRange(p, *gcols, *order_by).localCheckpoint()
-    with_pid = part.withColumn("__pid", F.spark_partition_id())
-    totals = (
-        with_pid.groupBy("__pid", *group_cols)
-        .agg(
-            F.sum(value_col).alias("t"),
-            F.count(value_col).alias("c"),
-        )
-        .collect()
-    )
-    by_group: dict[tuple, list] = {}
-    for r in totals:
-        key = tuple(r[c] for c in group_cols)
-        by_group.setdefault(key, []).append((r["__pid"], r["t"], r["c"]))
-    vtype = df.schema[value_col].dataType
-    if isinstance(vtype, (T.FloatType, T.DoubleType)):
-        zero = 0.0
-    elif isinstance(vtype, T.DecimalType):
-        from decimal import Decimal
-
-        zero = Decimal(0)
-    else:
-        zero = 0
-    rows = []
-    for key, lst in by_group.items():
-        acc, cnt = zero, 0
-        for pid, t, c in sorted(lst):
-            rows.append((pid, *key, acc, cnt))
-            if t is not None:
-                acc += t
-            cnt += int(c)
-    field = _sum_result_type(vtype)
-    gschema = ", ".join(
-        f"{c} {df.schema[c].dataType.simpleString()}" for c in group_cols
-    )
-    off_dim = spark.createDataFrame(
-        rows, f"__pid int, {gschema}, __prefix {field}, __pcnt long"
-    )
-    w = (
-        W.partitionBy("__pid", *group_cols)
-        .orderBy(*order_by)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    local = F.sum(value_col).over(w)
-    cond = with_pid["__pid"] == off_dim["__pid"]
-    for c in group_cols:
-        if df.schema[c].nullable:
-            cond = cond & with_pid[c].eqNullSafe(off_dim[c])
-        else:
-            cond = cond & (with_pid[c] == off_dim[c])
-    return (
-        with_pid.join(F.broadcast(off_dim), cond)
         .drop(off_dim["__pid"])
         .drop(*[off_dim[c] for c in group_cols])
         .withColumn(

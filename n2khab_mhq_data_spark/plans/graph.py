@@ -114,9 +114,7 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     side counts triangles with the degree-ordered orientation (skew-safe
     at scale); the oracle runs the naive canonical a<b<c enumeration —
     the counts are provably identical."""
-    edges = _copurchase_edges(spark, sf_dir).select("a", "b")
-    # the memo already holds a localCheckpoint'ed edge list
-    return triangle_stats(edges, checkpoint=False)
+    return triangle_stats(_copurchase_edges(spark, sf_dir).select("a", "b"))
 
 
 @query(
@@ -635,9 +633,9 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     empties at round 2 at sf0.1, round ~10 at sf0.01). Scale: one
     degree-count shuffle per round over the (already support-pruned)
     edge list; the survivor set is localCheckpoint'ed at each probe so
-    the plan stays shallow — the same bounded-rounds contract as the
-    two-phase connected components (O(log n) rounds, never a
-    driver-side edge materialization)."""
+    the plan stays shallow, and the edge list is never collected to the
+    driver. Unlike connected_components, which raises at ``max_iter``,
+    an unsettled peel is returned in-band, as the oracle expects."""
     kk, rounds = 3, 12
     last_ckpt = None  # superseded survivor checkpoint, freed on rotate
     edges = _copurchase_edges(spark, sf_dir).select("a", "b")

@@ -2406,18 +2406,15 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_components_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The scale sibling of dedup_components: alternating large-star /
-    small-star contraction (Kiveris et al. 2014) over the same near-dup
-    graph — O(log^2 n) rounds instead of O(diameter), so chain-shaped
-    near-dup components stop dominating at 100 TB. Same recursive-CTE
-    reachability oracle pins both algorithms to identical labels."""
-    from n2khab_mhq_data_spark.llmdata.dedup import (
-        connected_components_twophase,
-    )
+    """Connected components over the near-dup graph WITHOUT the shared
+    ``components`` labels: it runs the min-label kernel on the prebuilt
+    pair table every time, so the registry keeps one un-memoized run of
+    the iterative loop under its own reachability oracle. (The name is
+    kept from the large-star/small-star kernel it once ran; that kernel
+    lost a same-JVM A/B at every scale and was deleted.)"""
+    from n2khab_mhq_data_spark.llmdata.dedup import connected_components
 
-    docs = load(spark, sf_dir, "documents")
-    near = _near_pairs(spark, sf_dir)
-    return connected_components_twophase(near, "d1", "d2")
+    return connected_components(_near_pairs(spark, sf_dir), "d1", "d2")
 
 
 @query(
@@ -2965,9 +2962,9 @@ def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_canonicalize-style survivorship: a real pipeline labels the
     corpus once and derives every dedup/observability table from the
     labels, not one label propagation per consumer. NOTE:
-    dedup_components_twophase intentionally does NOT use it — it exists
-    to differentially audit the two-phase ALGORITHM, so it must run its
-    own propagation every time."""
+    dedup_components_twophase intentionally does NOT use it — it runs
+    its own propagation every time, so the kernel's loop is checked
+    against the oracle without the memo."""
     from n2khab_mhq_data_spark.llmdata.dedup import connected_components
 
     near = _near_pairs(spark, sf_dir)

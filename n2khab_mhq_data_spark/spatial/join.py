@@ -295,15 +295,10 @@ def parse_wkt_layer(
 
 
 def _knn_probe(
-    points: DataFrame,
-    queries: DataFrame,
-    k: int,
-    cell: float,
-    radius: int = 1,
+    points: DataFrame, queries: DataFrame, k: int, cell: float
 ) -> DataFrame:
-    """Grid-bucketed kNN candidate pass at probe ``radius`` (the query
-    probes its (2*radius+1)^2 cell neighbourhood; guaranteed covered
-    distance is ``radius * cell``).
+    """Grid-bucketed kNN candidate pass (the query probes its 3x3 cell
+    neighbourhood; guaranteed covered distance is ``cell``).
 
     Returns one row per kept candidate — columns ``qid, nid, rank, d2,
     __bad`` — PLUS a null-``nid`` placeholder row for every query with
@@ -337,12 +332,12 @@ def _knn_probe(
     probes = queries.select(
         F.col("point_id").alias("qid"), "x", "y",
         F.explode(
-            F.expr(f"sequence(-{radius}, {radius})")
+            F.expr("sequence(-1, 1)")
         ).alias("dx"),
     ).select(
         "qid", "x", "y",
         (F.floor(F.col("x") / cell) + F.col("dx")).alias("cx"),
-        F.explode(F.expr(f"sequence(-{radius}, {radius})")).alias("dy"),
+        F.explode(F.expr("sequence(-1, 1)")).alias("dy"),
     ).select(
         "qid", "x", "y", "cx",
         (F.floor(F.col("y") / cell) + F.col("dy")).alias("cy"),
@@ -391,7 +386,7 @@ def _knn_probe(
     joined = kept.join(qmeta, "qid", "right")
     wq = W.partitionBy("qid")
     kcnt = F.count("nid").over(wq)  # non-null kept rows only
-    reach = float(radius) * float(cell)
+    reach = float(cell)
     bad = (
         F.coalesce(
             F.max("d2").over(wq) > F.lit(reach * reach), F.lit(False)
@@ -400,119 +395,53 @@ def _knn_probe(
     return joined.select("qid", "nid", "rank", "d2", bad.alias("__bad"))
 
 
-def _knn_finalize(probe: DataFrame, enforce: bool, context: str) -> DataFrame:
-    """Project a ``_knn_probe`` result to the public schema. The breach
-    raise lives INSIDE the filter condition so the null-nid placeholder
-    rows are evaluated (and raise) before they are dropped — a filter on
-    ``nid`` alone could be planned before the breach column and lose the
-    zero-candidate signal."""
+def knn_join_gridded(
+    points: DataFrame,
+    queries: DataFrame,
+    k: int,
+    cell: float,
+) -> DataFrame:
+    """Exact k-nearest-neighbour join via grid buckets: each corpus
+    point hashes to ONE (cx, cy) cell; each query probes its 3x3 cell
+    neighbourhood; exact distances verify inside the candidate set, a
+    per-query window keeps the top k.
+
+    EXACTNESS PRECONDITION: the kth neighbour must lie within ``cell``
+    of the query (the probe ring's guaranteed radius). Pick ``cell`` so
+    that expected k-NN distance sqrt(k / (pi * density)) is well under
+    it. The precondition is CHECKED AT RUNTIME inside the plan: any
+    query whose kth kept distance exceeds the guaranteed radius, that
+    kept fewer than k rows while eligible points exist outside its
+    ring, or that kept ZERO rows while eligible points exist, fails the
+    job via ``raise_error`` — an inexact result can never pass silently
+    (ADVICE r3/r4). Eligibility uses the query's actual corpus
+    id-match count, so disjoint query sets are held to the full corpus
+    size. The breach raise lives INSIDE the filter condition so the
+    null-nid placeholder rows are evaluated (and raise) before they are
+    dropped — a filter on ``nid`` alone could be planned before the
+    breach column and lose the zero-candidate signal.
+
+    Scale: one shuffle each side on the cell key (query side is 9 rows
+    per query — broadcastable when the query set is small); candidate
+    count is bounded by ring size * cell occupancy, never O(n) per
+    query; the top-k window partitions by query id only."""
+    probe = _knn_probe(points, queries, k, cell)
     dist = F.round(F.sqrt(F.col("d2")) + F.lit(1e-9), 6)
-    if enforce:
-        keep = F.when(
-            F.col("__bad"),
-            F.raise_error(
-                F.format_string(
-                    "knn_join_gridded exactness breach for query %s:"
-                    " kth neighbour beyond %s — expand the probe"
-                    " ring or enlarge cell",
-                    F.col("qid"),
-                    F.lit(context),
-                )
-            ).cast("boolean"),
-        ).otherwise(F.col("nid").isNotNull())
-    else:
-        keep = F.col("nid").isNotNull()
+    keep = F.when(
+        F.col("__bad"),
+        F.raise_error(
+            F.format_string(
+                "knn_join_gridded exactness breach for query %s:"
+                " kth neighbour beyond %s — expand the probe"
+                " ring or enlarge cell",
+                F.col("qid"),
+                F.lit(f"radius 1 * cell {cell}"),
+            )
+        ).cast("boolean"),
+    ).otherwise(F.col("nid").isNotNull())
     return probe.filter(keep).select(
         F.col("qid").alias("query_id"),
         F.col("nid").alias("neighbour_id"),
         F.col("rank").cast("int").alias("rank"),
         dist.alias("dist"),
     )
-
-
-def knn_join_gridded(
-    points: DataFrame,
-    queries: DataFrame,
-    k: int,
-    cell: float,
-    enforce_exact: bool = True,
-    radius: int = 1,
-) -> DataFrame:
-    """Exact k-nearest-neighbour join via grid buckets: each corpus
-    point hashes to ONE (cx, cy) cell; each query probes its
-    (2*radius+1)^2 cell neighbourhood; exact distances verify inside
-    the candidate set, a per-query window keeps the top k.
-
-    EXACTNESS PRECONDITION: the kth neighbour must lie within
-    ``radius * cell`` of the query (the probe ring's guaranteed
-    radius). Pick ``cell`` so that expected k-NN distance
-    sqrt(k / (pi * density)) is well under it. With ``enforce_exact``
-    (default) the precondition is CHECKED AT RUNTIME inside the plan:
-    any query whose kth kept distance exceeds the guaranteed radius,
-    that kept fewer than k rows while eligible points exist outside its
-    ring, or that kept ZERO rows while eligible points exist, fails the
-    job via ``raise_error`` — an inexact result can never pass silently
-    (ADVICE r3/r4). Eligibility uses the query's actual corpus
-    id-match count, so disjoint query sets are held to the full corpus
-    size. Production path at unbounded scale is ``knn_join_expanding``:
-    re-probe wider rings for the (rare) flagged queries;
-    ``enforce_exact=False`` is for that caller, which re-checks after
-    expansion.
-
-    Scale: one shuffle each side on the cell key (query side is
-    (2r+1)^2 rows per query — broadcastable when the query set is
-    small); candidate count is bounded by ring size * cell occupancy,
-    never O(n) per query; the top-k window partitions by query id only."""
-    probe = _knn_probe(points, queries, k, cell, radius)
-    return _knn_finalize(
-        probe, enforce_exact, f"radius {radius} * cell {cell}"
-    )
-
-
-def knn_join_expanding(
-    points: DataFrame,
-    queries: DataFrame,
-    k: int,
-    cell: float,
-    max_radius: int = 4,
-) -> DataFrame:
-    """Ring-expansion kNN: probe at radius 1, then re-probe ONLY the
-    flagged queries (exactness breach: kth-distance overflow, short or
-    empty result with eligible points remaining) at radius 2, 3, ...
-    ``max_radius``. The final radius enforces — if a query still
-    breaches at ``max_radius`` the job fails loudly rather than return
-    an inexact neighbour list.
-
-    This is the production caller the ``enforce_exact=False`` escape
-    hatch exists for: the radius-1 pass does the bulk of the work once
-    (localCheckpoint-pinned so the good/bad split does not recompute
-    it); each widening round touches only the residual query set, which
-    shrinks geometrically for any sane cell choice."""
-    out: DataFrame | None = None
-    remaining = queries
-    for radius in range(1, max_radius + 1):
-        last = radius == max_radius
-        probe = _knn_probe(points, remaining, k, cell, radius)
-        if not last:
-            # pin this round so the good-rows projection and the
-            # bad-query id set share one computation of the probe
-            probe = probe.localCheckpoint(eager=False)
-        if last:
-            good = _knn_finalize(
-                probe, True, f"max_radius {max_radius} * cell {cell}"
-            )
-        else:
-            good = _knn_finalize(
-                probe.filter(~F.col("__bad")), False, ""
-            )
-        out = good if out is None else out.unionByName(good)
-        if last:
-            break
-        badq = probe.filter(F.col("__bad")).select("qid").distinct()
-        if badq.isEmpty():
-            break
-        remaining = remaining.join(
-            badq, remaining["point_id"] == badq["qid"], "left_semi"
-        )
-    assert out is not None
-    return out

@@ -245,13 +245,16 @@ def test_interval_union_islands_by_hand(spark):
 
 
 def test_trimmed_mean_exact_cut(spark):
-    from n2khab_mhq_data_spark.operators.rank import _global_rank_n
+    from n2khab_mhq_data_spark.operators.rank import global_rank_with_total
 
     # 0..39: 5% trim of 40 rows drops ranks 1-2 and 39-40 exactly
     df = spark.range(0, 40).select(
         F.col("id").alias("v"), F.col("id").alias("k")
     )
-    ranked, n = _global_rank_n(df, [F.col("v"), F.col("k")], "rnk")
+    ranked = global_rank_with_total(
+        df, [F.col("v"), F.col("k")], "rnk", total_col="n"
+    )
+    n = F.col("n")
     inside = ranked.filter(
         (F.col("rnk") * 20 > n) & ((n - F.col("rnk") + 1) * 20 > n)
     )

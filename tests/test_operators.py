@@ -333,37 +333,65 @@ def test_global_rank_payload_column_reuse(spark):
     stopped being reused, the two branches sampled different partition
     boundaries, and ranks stopped being a permutation (ml_gains_deciles
     grew an 11th decile at sf0.01). The full-column range key makes the
-    reuse structural; this asserts exactness on that shape."""
+    reuse structural; this asserts exactness on that shape, for atomic,
+    array and struct payloads. A map payload cannot join the range key
+    and must fail at analysis, and a session with exchange reuse off
+    must be refused rather than ranked against two samplings."""
+    from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
 
     from n2khab_mhq_data_spark.operators.rank import (
         global_rank,
+        global_rank_with_total,
+        global_running_max,
+        grouped_running_sum,
         quantile_bins,
     )
 
-    df = spark.range(503).select(
-        F.col("id"),
-        (F.col("id") % 11).alias("k"),
-        # payload: referenced by no key, pruned unless pinned
-        (F.col("id") % 2).alias("pos"),
-    ).repartition(17)
-    r = global_rank(
-        df, [F.col("k").asc(), F.col("id").desc()], num_partitions=7
+    base = spark.range(503).select(
+        F.col("id"), (F.col("id") % 11).alias("k")
     )
-    got = {x.id: x.rank for x in r.collect()}
+    order = [F.col("k").asc(), F.col("id").desc()]
     rows = sorted(((i % 11, -i, i) for i in range(503)))
     want = {i: pos + 1 for pos, (_, _, i) in enumerate(rows)}
-    assert got == want
+    # payloads: referenced by no key, pruned unless pinned
+    for payload in (
+        F.col("id") % 2,
+        F.array(F.col("id") % 2, F.col("k")),
+        F.struct((F.col("id") % 2).alias("p"), F.col("k").alias("q")),
+    ):
+        df = base.withColumn("pos", payload).repartition(17)
+        r = global_rank(df, order, num_partitions=7)
+        assert {x.id: x.rank for x in r.collect()} == want
 
-    b = quantile_bins(
-        df, [F.col("k").asc(), F.col("id").desc()], 10, bin_col="d"
-    )
-    sizes = sorted(
-        (x.d, x.c)
-        for x in b.groupBy("d").agg(F.count("*").alias("c")).collect()
-    )
-    assert [d for d, _ in sizes] == list(range(10))
-    assert all(c in (50, 51) for _, c in sizes)
+        b = quantile_bins(df, order, 10, bin_col="d")
+        sizes = sorted(
+            (x.d, x.c)
+            for x in b.groupBy("d").agg(F.count("*").alias("c")).collect()
+        )
+        assert [d for d, _ in sizes] == list(range(10))
+        assert all(c in (50, 51) for _, c in sizes)
+
+    with_map = base.withColumn("pos", F.create_map(F.col("k"), F.col("id")))
+    with pytest.raises(AnalysisException, match="INVALID_ORDERING_TYPE"):
+        global_rank(with_map, order, num_partitions=7).collect()
+
+    prev = spark.conf.get("spark.sql.exchange.reuse")
+    spark.conf.set("spark.sql.exchange.reuse", "false")
+    try:
+        for call in (
+            lambda: global_rank(base, order),
+            lambda: global_rank_with_total(base, order),
+            lambda: quantile_bins(base, order),
+            lambda: global_running_max(base, order, "k"),
+            lambda: grouped_running_sum(base, ["k"], [F.col("id")], "id"),
+        ):
+            with pytest.raises(
+                ValueError, match="spark.sql.exchange.reuse"
+            ):
+                call()
+    finally:
+        spark.conf.set("spark.sql.exchange.reuse", prev)
 
 
 def test_interval_overlap_join_binned_matches_brute_force(spark):

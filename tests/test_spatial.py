@@ -557,11 +557,6 @@ def test_knn_join_gridded_inexact_cell_fails_loud(spark):
     qs = pts.filter("point_id = 0")
     with pytest.raises(Exception, match="exactness breach"):
         knn_join_gridded(pts, qs, k=3, cell=2.0).collect()
-    # the escape hatch for the ring-expansion caller still returns rows
-    rows = knn_join_gridded(
-        pts, qs, k=3, cell=2.0, enforce_exact=False
-    ).collect()
-    assert len(rows) == 1  # only the in-ring candidate survives
 
 
 def test_knn_join_zero_candidate_query_fails_loud(spark):
@@ -580,11 +575,6 @@ def test_knn_join_zero_candidate_query_fails_loud(spark):
     qs = pts.filter("point_id = 0")  # nothing else within cell=2 ring
     with pytest.raises(Exception, match="exactness breach"):
         knn_join_gridded(pts, qs, k=2, cell=2.0).collect()
-    # escape hatch still just returns the (empty) in-ring rows
-    assert (
-        knn_join_gridded(pts, qs, k=2, cell=2.0, enforce_exact=False)
-        .count() == 0
-    )
 
 
 def test_knn_join_disjoint_query_set_short_result_fails_loud(spark):
@@ -610,58 +600,6 @@ def test_knn_join_disjoint_query_set_short_result_fails_loud(spark):
     # with k=2 the result is complete and must pass
     rows = knn_join_gridded(pts, qs, k=2, cell=2.0).collect()
     assert sorted(r.neighbour_id for r in rows) == [100, 101]
-
-
-def test_knn_join_expanding_converges_on_small_cell(spark):
-    """The ring-expansion caller promised by the enforce_exact=False
-    escape hatch: a deliberately-too-small cell must converge by
-    widening the probe ring for the flagged queries instead of raising
-    (VERDICT r4 #7), and the final result must equal brute force."""
-    import math
-
-    from n2khab_mhq_data_spark.spatial.join import knn_join_expanding
-
-    data = [
-        (0, 0.0, 0.0), (1, 0.5, 0.0),
-        (2, 5.0, 0.0), (3, 5.5, 0.0), (4, 6.0, 0.0),
-    ]
-    pts = spark.createDataFrame(data, "point_id long, x double, y double")
-    qs = pts.filter("point_id = 0")
-    # cell=2: radius-1 ring reaches 2.0 — misses the 3rd NN at 5.5;
-    # radius 3 reaches 6.0 and covers it
-    rows = knn_join_expanding(pts, qs, k=3, cell=2.0, max_radius=4)
-    got = {
-        (r.query_id, r.rank): (r.neighbour_id, r.dist)
-        for r in rows.collect()
-    }
-    brute = sorted(
-        (math.hypot(x - 0.0, y - 0.0), pid)
-        for pid, x, y in data
-        if pid != 0
-    )[:3]
-    assert len(got) == 3
-    for rank, (d, nid) in enumerate(brute, 1):
-        gn, gd = got[(0, rank)]
-        assert gn == nid
-        assert abs(gd - d) < 1e-5
-
-
-def test_knn_join_expanding_still_raises_past_max_radius(spark):
-    """If a query still breaches at max_radius the job must fail loud,
-    never return an inexact neighbour list."""
-    import pytest
-
-    from n2khab_mhq_data_spark.spatial.join import knn_join_expanding
-
-    pts = spark.createDataFrame(
-        [(0, 0.0, 0.0), (1, 0.5, 0.0), (2, 500.0, 0.0)],
-        "point_id long, x double, y double",
-    )
-    qs = pts.filter("point_id = 0")
-    with pytest.raises(Exception, match="exactness breach"):
-        knn_join_expanding(
-            pts, qs, k=2, cell=2.0, max_radius=2
-        ).collect()
 
 
 def test_geopackage_write_read_roundtrip(spark, tmp_path):

@@ -473,11 +473,6 @@ EXPECTED: dict[str, set[str]] = {
     # pinned groups), which cannot broadcast — SortMergeJoin of two
     # group-grain sides is the correct strategy
     "audit_input_pinning": {"CARTESIAN(x1)", "SMJ"},
-    # large-star/small-star rounds join the edge list with per-center
-    # minima — both corpus-grain, same node key both phases, so
-    # SortMergeJoin is the correct strategy (AQE downgrades to broadcast
-    # when a side shrinks late in convergence)
-    "dedup_components_twophase": {"SMJ"},
     # r5 exactness-guard plumbing (ADVICE r4): the 1-row corpus count
     # broadcasts onto the query-id set (deliberate 1-row cross — the
     # text_tfidf_topk global-stat pattern); the zero-candidate guard is

@@ -356,12 +356,13 @@ def cc_family(spark, docs) -> None:
     """r10 VERDICT item 4, second half (the judge named retrieval AND
     graph as unmeasured): connected components at the upsampled tier.
     The pair graph comes from the measured minhash path; the timed
-    phase here is the ITERATIVE large-star/small-star contraction whose
-    round count is the scale question (O(log^2 n) rounds, each a
-    groupBy + join on the star center). Pairs are materialized first so
-    the CC timing isn't billed for pair generation."""
+    phase here is the ITERATIVE min-label propagation whose round count
+    is the scale question (O(component diameter) steps, each a join of
+    the edge list against the labels plus a groupBy on the node).
+    Pairs are materialized first so the CC timing isn't billed for pair
+    generation."""
     from n2khab_mhq_data_spark.llmdata.dedup import (
-        connected_components_twophase,
+        connected_components,
         minhash_dedup_pairs,
     )
 
@@ -374,10 +375,7 @@ def cc_family(spark, docs) -> None:
 
     measure("cc_pair_materialize", build_pairs)
     pairs = spark.read.parquet(pairs_path)
-    measure(
-        "cc_twophase",
-        lambda: connected_components_twophase(pairs).count(),
-    )
+    measure("cc_minlabel", lambda: connected_components(pairs).count())
 
 
 def bm25_family(spark, docs) -> None:

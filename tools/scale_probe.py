@@ -38,7 +38,7 @@ HEADLINE = [
     "dedup_exact",                # content-hash groupBy
     "dedup_minhash_lsh",          # banded LSH pair generation
     "dedup_ngram_capped",         # capped gram self-join
-    "dedup_components_twophase",  # iterative graph contraction
+    "dedup_components_twophase",  # un-memoized min-label CC loop
     "ann_lsh_topk",               # bucketed ANN
     "text_tfidf_topk",            # explode + window
     "pipeline_end_to_end",        # composed corpus-prep flow
