@@ -2,14 +2,16 @@
 """Benchmark harness — runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}.
+"queries": {name: sec, ...}, "build_s": ..., "exec_s": ..., "sf": ...}.
 
-Per query: ONE untimed warm-up run (plan + codegen + IO cache), then the
-MEDIAN of $SPARK_GRAFT_BENCH_RUNS timed runs (default 3) of full plan
-execution (``df.count()`` on a cached-nothing plan), with GC + cleaner
-settle quarantined outside the timed region. A global warm-up runs first
-so JVM startup isn't billed to q1, and shared build-step memos are
-prebuilt and timed as their own line items.
+Per query: ONE untimed warm-up sample (plan + codegen + IO cache), then
+the MEDIAN of $SPARK_GRAFT_BENCH_RUNS timed samples (default 3), with GC +
+cleaner settle quarantined outside the timed region. A sample
+(``tools/timing.py``) builds the query's DataFrame, then writes it to
+Spark's ``noop`` sink, so the full plan runs: ``df.count()`` let Catalyst
+prune the work the query specifies. A global warm-up runs first so JVM
+startup isn't billed to q1, and the shared build steps (``plans.SHARED``)
+are prebuilt and timed as their own line items (``build_seconds``).
 
 Drift observability (r10): ambient host drift on this box moves ALL
 back-to-back samples of a query together (observed ±40% on identical
@@ -18,27 +20,36 @@ run therefore re-times a fixed calibration probe every
 ``_CAL_INTERVAL`` queries and emits the TIMELINE: ``calibration_sec``
 (median of all probes), ``calibration_timeline``, and ``drift_ratio``
 (max/min probe). Every query's raw samples land in the
-``BENCH_SAMPLES*.json`` sidecar keyed with its calibration segment AND
-(r11) its per-run ``t_start`` wall-clock offsets — the probes carry
+``BENCH_SAMPLES*.json`` sidecar keyed with its calibration segment and
+its per-run ``t_start`` wall-clock offsets — the probes carry
 ``calibration_t_start`` offsets too — so a cross-round delta can be
-normalized — or dismissed as drift — from the artifacts alone, without
-a forensic re-run, and any single sample maps onto the drift curve by
-one timestamp lookup. (For adjudicating a
-specific rewrite, ``tools/ab_same_jvm.py``'s same-JVM alternation is
-still the stronger instrument.)
+normalized — or dismissed as drift — from the artifacts alone. (For
+adjudicating a specific rewrite, ``tools/ab_same_jvm.py``'s same-JVM
+alternation is still the stronger instrument.)
+
+Layers: each sidecar sample record carries per-run ``build_s`` and
+``exec_s`` and, per timed sample, the ``jobs``, ``build_jobs``,
+``stages``, ``tasks``, ``shuffle_read_bytes``, ``shuffle_write_bytes``
+and ``spill_bytes`` of its job groups, rolled up from the Spark event
+log the run writes to ``.bench_events/`` (read after the session stops,
+because a live log can end in a partial line).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+ROOT = Path(__file__).resolve().parent
+sys.path.insert(0, str(ROOT))
 
 from n2khab_mhq_data_spark.session import get_spark  # noqa: E402
+from perfbench.spans import Tracer, event_log_totals  # noqa: E402
+from tools.timing import last_span_s, sample, settle  # noqa: E402
 
 # sf1.0 scratch tier (tools/make_sf1.py output): when present, the top-N
 # most expensive sf0.1 queries are re-timed at 10x data so cross-round
@@ -73,19 +84,44 @@ SF1_EXTRA = [
     "dedup_components",
     "graph_shortest_paths",
 ]
+# event_log_totals reads every file in the directory, so a run empties it
+EVENTS = ROOT / ".bench_events"
+COUNTERS = (
+    "jobs", "stages", "tasks",
+    "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes",
+)
+_CAL_INTERVAL = 25
 
 
-def _prebuild_memos(spark, sf_dir: str) -> dict[str, float]:
-    """Build each registered shared intermediate (``plans.SHARED``) and
-    return {name: seconds}. Queries then all run against warm values."""
+def _prebuild_memos(
+    spark, tracer: Tracer, tier: str, sf_dir: str
+) -> dict[str, float]:
+    """Build each registered shared intermediate (``plans.SHARED``) under
+    a ``build`` phase and return {name: seconds}. Queries then all run
+    against warm values. Every value is materialized as it is built
+    (``localCheckpoint`` or a driver-side collect), so there is no
+    ``exec`` phase to time."""
     from n2khab_mhq_data_spark.plans import SHARED
 
     steps = {}
     for name, get in SHARED.items():
-        t0 = time.time()
-        get(spark, sf_dir)
-        steps[name] = round(time.time() - t0, 3)
+        with tracer.phase(f"{tier}:shared", name, "build"):
+            get(spark, sf_dir)
+        steps[name] = round(last_span_s(tracer), 3)
     return steps
+
+
+def _layers(groups: dict, tier: str, name: str, runs: int) -> dict[str, float]:
+    """Event-log counters of one query's timed samples, per sample."""
+    build = groups.get(f"{tier}|{name}|build", {})
+    ex = groups.get(f"{tier}|{name}|exec", {})
+    out = {k: (build.get(k, 0) + ex.get(k, 0)) / runs for k in COUNTERS}
+    out["build_jobs"] = build.get("jobs", 0) / runs
+    return {k: round(v, 2) for k, v in out.items()}
+
+
+def _median(xs: list[float]) -> float:
+    return sorted(xs)[len(xs) // 2]
 
 
 def main() -> None:
@@ -99,7 +135,18 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-    spark = get_spark("bench")
+    shutil.rmtree(EVENTS, ignore_errors=True)
+    EVENTS.mkdir()
+    spark = get_spark(
+        "bench",
+        extra_conf={
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": str(EVENTS),
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+        },
+    )
+    tracer = Tracer(spark)
 
     # warm up the JVM, parquet footers, the events (nanos) reader, and the
     # Python worker pool once, outside any query's bill
@@ -113,18 +160,18 @@ def main() -> None:
     # (N=3 by default; SPARK_GRAFT_BENCH_RUNS=1 for a quick pass)
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
 
-    # Fixed calibration probe: median of 3 runs of a canonical scan+agg,
-    # re-timed every _CAL_INTERVAL queries (see module docstring). A
-    # single start-of-run probe cannot key minutes-scale drift — r9's
-    # driver bench had a FASTER calibration than the cleanest builder
-    # run yet a 44% slower total, because the host degraded after the
-    # probe fired.
+    # Fixed calibration probe: median of 3 executions of a canonical
+    # scan+agg, re-timed every _CAL_INTERVAL queries (see module
+    # docstring). A single start-of-run probe cannot key minutes-scale
+    # drift: in r9 one bench run had a FASTER calibration than another
+    # yet a 44% slower total, because the host degraded after the probe
+    # fired.
     cal_df = (
         spark.read.parquet(f"{sf_dir}/lineitem.parquet")
         .groupBy("l_returnflag")
         .count()
     )
-    cal_df.count()
+    sample(tracer, "cal", "calibration", lambda: cal_df)
 
     # every probe and every timed sample records its wall-clock start
     # relative to bench_t0, so a riser maps onto the drift curve by one
@@ -136,14 +183,47 @@ def main() -> None:
 
     def cal_probe() -> float:
         cal_times.append(round(time.time() - bench_t0, 2))
-        cs = []
-        for _ in range(3):
-            t0 = time.time()
-            cal_df.count()
-            cs.append(time.time() - t0)
-        return round(sorted(cs)[1], 4)
+        cs = [
+            sample(tracer, "cal", "calibration", lambda: cal_df)[1]
+            for _ in range(3)
+        ]
+        return round(_median(cs), 4)
 
     cal_timeline = [cal_probe()]
+
+    def time_tier(
+        tier: str, sf_dir: str, names: list[str], runs: int
+    ) -> dict[str, dict]:
+        """{name: raw samples} of each query at ``sf_dir``, its timed
+        samples tagged ``tier``."""
+        out: dict[str, dict] = {}
+        for qi, name in enumerate(names):
+            if qi and qi % _CAL_INTERVAL == 0:
+                cal_timeline.append(cal_probe())
+            # collect garbage OUTSIDE the timed region: ~100 queries
+            # accumulate broadcasts/shuffle state in the driver JVM, and a
+            # full GC landing inside a timed run showed up as 0.8 s
+            # queries spiking to 7-10 s late in the sequence
+            settle(spark)
+
+            def build(fn=qs[name]):
+                return fn(spark, sf_dir)
+
+            sample(tracer, f"{tier}:warm", name, build)
+            starts, layers = [], []
+            for _ in range(runs):
+                starts.append(round(time.time() - bench_t0, 2))
+                layers.append(sample(tracer, tier, name, build))
+            totals = [b + e for b, e in layers]
+            rec = out[name] = {
+                "runs": [round(t, 3) for t in totals],
+                "build_s": [round(b, 3) for b, _ in layers],
+                "exec_s": [round(e, 3) for _, e in layers],
+                "t_start": starts,
+                "cal_segment": len(cal_timeline) - 1,
+            }
+            print(f"# {tier} {name}: {rec}", file=sys.stderr)
+        return out
 
     # Pre-build the shared intermediates (near-dup pair table, BPE
     # merge table, IVF centroids, ...) ONCE, timed as declared build steps.
@@ -151,55 +231,16 @@ def main() -> None:
     # consumers run warm, none of them hides the build cost in its own
     # number, and the build cost is its own line instead of vanishing
     # into whichever consumer's untimed warm-up ran first (ADVICE r4).
-    build_steps = _prebuild_memos(spark, sf_dir)
-
-    _CAL_INTERVAL = 25
-    timings: dict[str, float] = {}
-    samples_out: dict[str, dict] = {}
-    total = 0.0
-    for qi, (name, fn) in enumerate(qs.items()):
-        if qi and qi % _CAL_INTERVAL == 0:
-            cal_timeline.append(cal_probe())
-        # collect garbage OUTSIDE the timed region: ~100 queries accumulate
-        # broadcasts/shuffle state in the driver JVM, and letting a full GC
-        # land inside a timed run shows up as a multi-second spike on
-        # whichever query is unlucky (observed 0.8s queries spiking to 7-10s
-        # late in the sequence)
-        # Python-side first: localCheckpoint'ed RDDs (components, pagerank,
-        # triangle stats) stay pinned until their Python DataFrame wrappers
-        # are collected, so the JVM GC alone can't reclaim them mid-run
-        import gc as _gc
-
-        _gc.collect()
-        spark._jvm.System.gc()
-        # let the async ContextCleaner drain the block-removal storm the
-        # GC just triggered (checkpointed CC/pagerank RDDs): without the
-        # settle, cleanup overlaps the next timed run — observed as the
-        # mid-sequence query paying 3x (7.9s vs 2.4s isolated)
-        time.sleep(0.3)
-        n = fn(spark, sf_dir).count()  # warm-up (plan + codegen + IO cache)
-        samples = []
-        starts = []
-        for _ in range(runs):
-            t0 = time.time()
-            fn(spark, sf_dir).count()
-            samples.append(time.time() - t0)
-            starts.append(round(t0 - bench_t0, 2))
-        dt = sorted(samples)[len(samples) // 2]
-        timings[name] = round(dt, 3)
-        samples_out[name] = {
-            "runs": [round(t, 3) for t in samples],
-            "t_start": starts,
-            "cal_segment": len(cal_timeline) - 1,
-        }
-        total += dt
-        print(f"# {name}: {n} rows, median {dt:.2f}s of {samples}", file=sys.stderr)
+    build_steps = _prebuild_memos(spark, tracer, "q", sf_dir)
+    samples_out = time_tier("q", sf_dir, list(qs), runs)
+    timings = {name: _median(s["runs"]) for name, s in samples_out.items()}
 
     # Optional sf1.0 tier: re-time the top-N most expensive queries at
-    # 10x data (one warmed run each — regression detection, not a
+    # 10x data (one warmed sample each — regression detection, not a
     # median-of-3 microbenchmark). Skipped when explicitly disabled;
     # reported as "absent" when the scratch tier hasn't been generated.
     sf1: dict | None = None
+    sf1_samples: dict[str, dict] = {}
     run_sf1 = os.environ.get("SPARK_GRAFT_BENCH_SF1", "1") != "0"
     if (
         run_sf1
@@ -219,26 +260,31 @@ def main() -> None:
         top += [
             n for n in SF1_EXTRA if n in timings and n not in top
         ]
-        sf1_build = _prebuild_memos(spark, SF1_DIR)
-        sf1_timings: dict[str, float] = {}
-        for name in top:
-            import gc as _gc
-
-            _gc.collect()
-            spark._jvm.System.gc()
-            time.sleep(0.3)
-            qs[name](spark, SF1_DIR).count()  # warm-up
-            t0 = time.time()
-            qs[name](spark, SF1_DIR).count()
-            dt = time.time() - t0
-            sf1_timings[name] = round(dt, 3)
-            print(f"# sf1.0 {name}: {dt:.2f}s", file=sys.stderr)
+        sf1_build = _prebuild_memos(spark, tracer, "sf1", SF1_DIR)
+        sf1_samples = time_tier("sf1", SF1_DIR, top, 1)
+        sf1_timings = {name: s["runs"][0] for name, s in sf1_samples.items()}
         sf1 = {
             "dir": SF1_DIR,
             "total": round(sum(sf1_timings.values()), 3),
             "build_seconds": sf1_build,
             "queries": sf1_timings,
         }
+
+    # closing probe: a cross-round riser is adjudicated by comparing its
+    # runs against its segment's probe, no forensic re-run needed
+    cal_timeline.append(cal_probe())
+    spark.stop()
+    t0 = time.time()
+    groups = event_log_totals(EVENTS)
+    size = sum(p.stat().st_size for p in EVENTS.iterdir())
+    print(
+        f"# event log: {size / 2**20:.1f} MB,"
+        f" rolled up in {time.time() - t0:.1f}s",
+        file=sys.stderr,
+    )
+    for tier, recs, n in (("q", samples_out, runs), ("sf1", sf1_samples, 1)):
+        for name, rec in recs.items():
+            rec |= _layers(groups, tier, name, n)
 
     # Full per-query timings go to a sidecar file; the stdout JSON line
     # stays small (the driver's round-1 capture truncated a ~4 KB line to
@@ -248,20 +294,12 @@ def main() -> None:
     # suffixed sidecar instead of clobbering it (an sf0.001 smoke run
     # once overwrote the sf0.1 table mid-round).
     suffix = "" if sf == "0.1" else f"_sf{sf}"
-    queries_file = str(
-        Path(__file__).resolve().parent / f"BENCH_QUERIES{suffix}.json"
-    )
+    queries_file = str(ROOT / f"BENCH_QUERIES{suffix}.json")
     with open(queries_file, "w") as fh:
         json.dump(timings, fh, indent=1, sort_keys=True)
-    # closing probe + full raw-samples sidecar: a cross-round riser is
-    # adjudicated by comparing its runs against its segment's probe,
-    # no forensic re-run needed
-    cal_timeline.append(cal_probe())
-    cal_med = sorted(cal_timeline)[len(cal_timeline) // 2]
+    cal_med = _median(cal_timeline)
     drift_ratio = round(max(cal_timeline) / min(cal_timeline), 3)
-    samples_file = str(
-        Path(__file__).resolve().parent / f"BENCH_SAMPLES{suffix}.json"
-    )
+    samples_file = str(ROOT / f"BENCH_SAMPLES{suffix}.json")
     with open(samples_file, "w") as fh:
         json.dump(
             {
@@ -269,6 +307,7 @@ def main() -> None:
                 "calibration_t_start": cal_times,
                 "cal_interval": _CAL_INTERVAL,
                 "samples": samples_out,
+                "sf1_samples": sf1_samples,
             },
             fh,
             indent=1,
@@ -279,7 +318,7 @@ def main() -> None:
     )
     out = {
         "metric": "total_query_wall_seconds",
-        "value": round(total, 3),
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "n_queries": len(timings),
         "calibration_sec": cal_med,
@@ -288,6 +327,11 @@ def main() -> None:
         # shared-intermediate build steps, timed separately so no
         # query's number hides (or pays) them — see _prebuild_memos
         "build_seconds": build_steps,
+        # each phase's per-query median, summed over the queries
+        **{
+            k: round(sum(_median(s[k]) for s in samples_out.values()), 3)
+            for k in ("build_s", "exec_s")
+        },
         "queries": slowest,
         "queries_file": queries_file,
         "samples_file": samples_file,

@@ -10,8 +10,11 @@ dedup.py`` (e.g. ``git show r9:…/dedup.py > /tmp/a.py`` plus an edited
 ``/tmp/b.py``). All variants are loaded as separate modules into ONE
 SparkSession; their plans are built once, warmed once, then timed in
 STRICT ALTERNATION (a, b, a, b, …) for ``--runs`` rounds; per-variant
-medians and mins are printed, and the row counts are asserted equal
-(an A/B that changes the answer is a bug, not a speedup).
+medians and mins are printed. Each timed sample builds the variant's
+plan and writes it to the ``noop`` sink (``tools/timing.py``), and the
+warm-up collects every variant's rows and requires them equal after
+``tools/check.py``'s normalization (an A/B that changes the answer is a
+bug, not a speedup).
 
 Why this exists (r10): separate-process warm medians on this box swing
 ±20-40% on identical code over minutes (BENCH_r09's ten false risers;
@@ -39,13 +42,15 @@ import argparse
 import importlib.util
 import statistics
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from n2khab_mhq_data_spark.catalog import load  # noqa: E402
 from n2khab_mhq_data_spark.session import get_spark  # noqa: E402
+from perfbench.spans import Tracer  # noqa: E402
+from tools.check import normalize  # noqa: E402
+from tools.timing import sample  # noqa: E402
 
 # call shapes per comparable function: build the query DataFrame from
 # (module, docs). Extend as rewrites target other families.
@@ -97,24 +102,30 @@ def main() -> None:
     # too (r11: caught overstating a checkpoint rewrite 0.06x vs its
     # honest 0.48x)
     factories = {k: (lambda m=m: shape(m, docs)) for k, m in mods.items()}
-    counts = {k: f().count() for k, f in factories.items()}  # warm+verify
-    if len(set(counts.values())) != 1:
-        raise SystemExit(f"variants disagree on row count: {counts}")
-    samples: dict[str, list[float]] = {k: [] for k in factories}
     order = list(factories)
+    rows = {}
+    for k, f in factories.items():  # warm + verify
+        df = f()
+        rows[k] = normalize([tuple(r) for r in df.collect()], df.columns)
+    if any(r != rows[order[0]] for r in rows.values()):
+        counts = {k: len(r) for k, r in rows.items()}
+        raise SystemExit(f"variants disagree on rows (counts {counts})")
+    tracer = Tracer(spark)
+    samples: dict[str, list[tuple[float, float]]] = {k: [] for k in factories}
     for r in range(args.runs):
         # serpentine: a,b then b,a — a fixed within-round order would
         # hand the same variant the post-GC/cleaner-backlog slot every
         # round, a small systematic bias alternation alone can't cancel
         # (r11 adversarial review of this tool)
         for k in order if r % 2 == 0 else reversed(order):
-            t0 = time.time()
-            factories[k]().count()
-            samples[k].append(time.time() - t0)
-    for k, ts in samples.items():
+            samples[k].append(sample(tracer, f"ab{r}", k, factories[k]))
+    for k, bes in samples.items():
+        ts = [b + e for b, e in bes]
         print(
             f"{k}: median={statistics.median(ts):.2f}s min={min(ts):.2f}s"
-            f" rows={counts[k]} runs={[round(t, 2) for t in ts]}",
+            f" build={statistics.median(b for b, _ in bes):.2f}s"
+            f" exec={statistics.median(e for _, e in bes):.2f}s"
+            f" rows={len(rows[k])} runs={[round(t, 2) for t in ts]}",
             flush=True,
         )
 

@@ -12,6 +12,11 @@ fixed scheduling overhead (dominates at sf0.001) and real data work, so
 ratios are *upper-bounded* by the asymptotic slope — we flag only
 ratios well above the data growth factor.
 
+Each tier's time is one sample (``tools/timing.py``): the query's plan
+build plus a write of its result to the ``noop`` sink, so the full plan
+runs at every scale. An unknown query name exits 2 before the session
+starts.
+
 Usage: python tools/scale_probe.py [query ...]   (default: headline set)
 """
 
@@ -19,12 +24,13 @@ from __future__ import annotations
 
 import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from n2khab_mhq_data_spark.session import get_spark  # noqa: E402
+from perfbench.spans import Tracer  # noqa: E402
+from tools.timing import sample  # noqa: E402
 
 # one representative per family, biased toward the shapes with
 # quadratic risk (pair generation, self-joins, iterative graph passes)
@@ -103,6 +109,7 @@ HEADLINE = [
     "tpch_q9_product_type_profit",      # multi-fact star, AQE broadcast (r6)
     "tpch_q2_min_cost_supplier",        # decorrelated window-min vs
                                         # correlated-subquery oracle (r6)
+    "ml_roc_auc",                       # score-grid groupBy + grid window
 ]
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01",
@@ -117,10 +124,16 @@ def main() -> int:
     import __spark_entry__ as entry
 
     qs = entry.queries()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        print(f"unknown queries: {unknown}", file=sys.stderr)
+        return 2
     spark = get_spark()
+    tracer = Tracer(spark)
     # warm the JVM + parquet footers so sf0.001 isn't charged the
     # session fixed costs
-    qs["p1_select_rename"](spark, SFS[0]).count()
+    sample(tracer, "warm", "p1_select_rename",
+           lambda: qs["p1_select_rename"](spark, SFS[0]))
 
     sfs = list(SFS)
     if Path(SF1).is_dir():
@@ -129,14 +142,11 @@ def main() -> int:
 
     rows = []
     for name in names:
-        if name not in qs:
-            print(f"?? unknown query {name}", file=sys.stderr)
-            continue
-        times = []
-        for sf in sfs:
-            t0 = time.time()
-            qs[name](spark, sf).count()
-            times.append(time.time() - t0)
+        times = [
+            sum(sample(tracer, Path(sf).name, name,
+                       lambda: qs[name](spark, sf)))
+            for sf in sfs
+        ]
         r_mid = times[1] / times[0] if times[0] > 0 else float("nan")
         r_big = times[2] / times[1] if times[1] > 0 else float("nan")
         # 10x data; flag only clearly super-linear growth (>2x slope)
