@@ -1,6 +1,18 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
-columns with typed metadata, processed by Arrow-batched pandas UDFs over
-``mapInPandas``.
+columns with typed metadata.
+
+Every encode/decode wrapper below hands a per-row function to one
+primitive, :func:`_map_rows` — the module's only ``mapInPandas`` call.
+It owns the Spark side: the batch loop, assembling each output batch
+from the plain row tuples the function returns, and the DDL schema
+Arrow casts those values to. Payload generators map an id to payload
+rows (after :func:`_spread_ids` spreads the ids over the session's
+cores); decoders map a payload row to statistic rows. Fan-out is just
+several tuples per input row. A decoder's error on a truncated or
+corrupt payload propagates and fails the task — nothing is caught.
+:func:`_bounded_memo` is the one per-task cache, used only where a task
+sees repeated keys: the grouped planted-duplicate generators and the
+hash decoders that read their output.
 
 Decode support comes in two tiers. PNG (sequential + Adam7
 interlaced), WAV (PCM16 + G.711
@@ -30,9 +42,8 @@ honest waiver is SCOPE, not library-necessity: each is a large
 standalone engineering effort, and they remain STUBBED:
 ``decode_image`` raises NotImplementedError for unrecognized
 magic unless ``fake=True``, in which case a deterministic fake decoder
-derives metadata from the raw bytes. The Spark-side plumbing — schema,
-batch iteration, partition sizing — is identical across tiers;
-swapping in PIL/ffmpeg later only changes the inner function.
+derives metadata from the raw bytes. Swapping in PIL/ffmpeg later only
+changes the per-row functions.
 
 Scale notes: binary payloads dominate partition size — size
 ``spark.sql.files.maxPartitionBytes`` for the payload, not the row count,
@@ -41,11 +52,112 @@ mapInPandas pass: no shuffle, output is narrow metadata."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _map_rows(
+    df: DataFrame,
+    cols: tuple[str, ...],
+    row_fn: Callable[..., Iterable[tuple]],
+    schema: str,
+) -> DataFrame:
+    """The module's one engine boundary: a ``mapInPandas`` pass calling
+    ``row_fn(*values)`` on each input row's ``cols`` and concatenating
+    the tuples it returns (zero or more per input row) into the output
+    batch. The tuples hold plain Python values in ``schema``'s column
+    order; Arrow casts them to the declared DDL types on the way out,
+    empty batches included."""
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def map_batches(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in pdfs:
+            rows = [
+                out
+                for values in zip(*(pdf[c] for c in cols))
+                for out in row_fn(*values)
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(map_batches, schema)
+
+
+def _bounded_memo(fn: Callable) -> Callable:
+    """``fn`` of one hashable key, memoized in a dict that is emptied
+    once it holds more than 65536 entries. The dict travels empty
+    inside the pickled row function and Spark unpickles that function
+    per task, so the cache lives for one task. Use it only where a task
+    sees repeated keys — on a path with unique keys it is all misses."""
+    cache: dict = {}
+
+    def memo(key):
+        hit = cache.get(key)
+        if hit is None:
+            if len(cache) > 65536:
+                cache.clear()
+            hit = cache[key] = fn(key)
+        return hit
+
+    return memo
+
+
+def _round3(x) -> float:
+    """A statistic rounded to 3 places as the SQL oracles round it: the
+    1e-9 nudge settles .0005 knife-edges the same way in both engines."""
+    return round(float(x) + 1e-9, 3)
+
+
+def _luma(img) -> tuple[float, int]:
+    """(mean, max) of one decoded plane."""
+    return _round3(np.mean(img)), int(img.max())
+
+
+def _spread_ids(
+    df: DataFrame, id_col: str, key: Column | None = None
+) -> DataFrame:
+    """Repartition the bare id column across the session's cores before
+    a CPU-bound payload-generation pass: the testbed's documents table
+    is one parquet file (one input partition), which would serialize
+    the whole encode stage onto a single Python worker — measured 7.3 s
+    for the video query at sf0.1 vs ~0.8 s spread. Shuffling ids is
+    bytes-trivial (one long per row); at 100 TB the source scan has
+    ample partitions and this is a near-no-op rebalance.
+
+    ``key``: optional partitioning expression. The grouped payload
+    generators (key_div / key_mod planted-duplicate families) pass the
+    GROUP key here so that ids sharing a payload land in the same task
+    and the generator's per-task memo turns the group's repeated
+    encode work into one encode + (group_size - 1) dict hits. Key
+    cardinality stays ~|ids|/group_size — far above the partition
+    count, so the hash spread stays even (guide §2.5)."""
+    sc = df.sparkSession.sparkContext
+    if key is None:
+        return df.select(id_col).repartition(
+            sc.defaultParallelism, id_col
+        )
+    return df.select(id_col).repartition(sc.defaultParallelism, key)
+
+
+def _payloads(
+    df: DataFrame,
+    id_col: str,
+    encode: Callable[[int], bytes],
+    key: Column | None = None,
+) -> DataFrame:
+    """One ``(id, payload)`` row per id, ``encode(int(id))`` producing
+    the bytes; the id keeps its input name and type."""
+    idt = df.schema[id_col].dataType.simpleString()
+    return _map_rows(
+        _spread_ids(df, id_col, key),
+        (id_col,),
+        lambda did: [(did, encode(int(did)))],
+        f"{id_col} {idt}, payload binary",
+    )
+
 
 FRAME_META_SCHEMA = (
     "doc_id long, n_bytes long, format string, n_frames int, first_byte int"
@@ -155,23 +267,14 @@ def decode_image(raw: bytes, fake: bool = False) -> dict:
 
 
 def extract_frame_meta(binary_df: DataFrame, fake: bool = True) -> DataFrame:
-    """mapInPandas feature extraction over (doc_id, payload binary):
-    Arrow-batched, one pass, narrow output."""
+    """Feature extraction over (doc_id, payload binary): one pass,
+    narrow output."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [decode_image(b, fake=fake) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": [len(b) for b in pdf["payload"]],
-                    "format": [m["format"] for m in metas],
-                    "n_frames": [m["n_frames"] for m in metas],
-                    "first_byte": [m["first_byte"] for m in metas],
-                }
-            )
+    def row(did, raw):
+        m = decode_image(raw, fake=fake)
+        return [(did, len(raw), m["format"], m["n_frames"], m["first_byte"])]
 
-    return binary_df.mapInPandas(op, FRAME_META_SCHEMA)
+    return _map_rows(binary_df, ("doc_id", "payload"), row, FRAME_META_SCHEMA)
 
 
 FRAME_SAMPLE_SCHEMA = "doc_id long, frame_idx int, frame_byte int"
@@ -182,24 +285,20 @@ def sample_frames(
 ) -> DataFrame:
     """Frame sampling over opaque video-ish payloads: every ``stride``-th
     frame of each payload becomes one output row (doc_id, frame_idx,
-    frame_byte). A generator-shaped mapInPandas pass — input rows fan out to
-    0..n_frames rows, still one scan, no shuffle; the frame decode is the
-    same stubbed fake decoder as extract_frame_meta."""
+    frame_byte). Input rows fan out to 0..n_frames rows, still one scan,
+    no shuffle; the frame decode is the same stubbed fake decoder as
+    extract_frame_meta."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {"doc_id": [], "frame_idx": [], "frame_byte": []}
-            for doc_id, raw in zip(pdf["doc_id"], pdf["payload"]):
-                meta = decode_image(raw, fake=fake)
-                for idx in range(0, meta["n_frames"], stride):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(idx)
-                    rows["frame_byte"].append(
-                        raw[(idx * 13) % len(raw)] if raw else -1
-                    )
-            yield pd.DataFrame(rows)
+    def row(did, raw):
+        n_frames = decode_image(raw, fake=fake)["n_frames"]
+        return [
+            (did, idx, raw[(idx * 13) % len(raw)] if raw else -1)
+            for idx in range(0, n_frames, stride)
+        ]
 
-    return binary_df.mapInPandas(op, FRAME_SAMPLE_SCHEMA)
+    return _map_rows(
+        binary_df, ("doc_id", "payload"), row, FRAME_SAMPLE_SCHEMA
+    )
 
 
 def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -218,9 +317,6 @@ def _gear(b: int) -> int:
     z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & 0xFFFFFFFFFFFFFFFF
     z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & 0xFFFFFFFFFFFFFFFF
     return z ^ (z >> 31)
-
-
-
 
 
 def cdc_chunks(
@@ -247,8 +343,6 @@ def cdc_chunks(
     python-reference pytest is the check, and the registered query gets
     the driver's rows-only verdict.
     """
-    import pandas as pd
-
     # id name AND type propagate from the input (the bpe_encode /
     # mmr_rerank convention) — the old hardcoded "doc_id long" schema
     # crashed on string ids and silently renamed every other id column
@@ -258,28 +352,13 @@ def cdc_chunks(
         " chunk_md5 string"
     )
 
-    def op(batches):
-        for pdf in batches:
-            ids, idxs, offs, lens, digs = [], [], [], [], []
-            for did, raw in zip(pdf[id_col], pdf[payload_col]):
-                chunks = cdc_chunk_one(bytes(raw), mask, min_len, max_len)
-                for i, (off, ln, dig) in enumerate(chunks):
-                    ids.append(did)
-                    idxs.append(i)
-                    offs.append(off)
-                    lens.append(ln)
-                    digs.append(dig)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="object"),
-                    "chunk_idx": pd.Series(idxs, dtype="int64"),
-                    "offset": pd.Series(offs, dtype="int64"),
-                    "n_bytes": pd.Series(lens, dtype="int64"),
-                    "chunk_md5": pd.Series(digs, dtype="object"),
-                }
-            )
+    def row(did, raw):
+        chunks = cdc_chunk_one(bytes(raw), mask, min_len, max_len)
+        return [
+            (did, i, off, ln, dig) for i, (off, ln, dig) in enumerate(chunks)
+        ]
 
-    return binary_df.mapInPandas(op, schema)
+    return _map_rows(binary_df, (id_col, payload_col), row, schema)
 
 
 _GEAR_TABLE = None
@@ -292,8 +371,6 @@ def cdc_chunk_one(
     unit/property-testable without Spark): (offset, length, md5) chunk
     tuples per the FastCDC-style walk documented in :func:`cdc_chunks`."""
     import hashlib
-
-    import numpy as np
 
     global _GEAR_TABLE
     if _GEAR_TABLE is None:
@@ -343,19 +420,12 @@ def cdc_chunk_one(
     ]
 
 
-
-
 # --- REAL codecs (pure stdlib: zlib/struct — no PIL/ffmpeg needed) -----
 #
-# The container has no imaging/audio libraries, but PNG and WAV are
-# decodable with nothing beyond zlib + struct, so for those two formats
-# the decode step is REAL, not stubbed: full chunk walk, inflate,
-# scanline unfilter (all five PNG filter types), RIFF parse, PCM16 and
-# G.711 mu-law/A-law samples. JPEG (baseline gray/color + progressive,
-# llmdata/jpeg.py), GIF (87a + animated 89a, llmdata/gif.py), and
-# MJPEG-AVI are real too; only codecs that genuinely need external
-# libraries (BMP/TIFF, arithmetic JPEG, ADPCM, H.264-class video)
-# remain the env-gated stub.
+# PNG and WAV are decodable with nothing beyond zlib + struct: full
+# chunk walk, inflate, scanline unfilter (all five PNG filter types),
+# RIFF parse, PCM16, G.711 mu-law/A-law and IMA ADPCM samples. The
+# other real codecs live in llmdata/jpeg.py, gif.py, bmp.py and tiff.py.
 
 _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
@@ -370,8 +440,6 @@ def encode_png(img, interlace: bool = False) -> bytes:
     build REAL binary payloads for the decode queries."""
     import struct
     import zlib
-
-    import numpy as np
 
     a = np.asarray(img, dtype=np.uint8)
     h, w = a.shape
@@ -416,8 +484,6 @@ def _png_unfilter(flat: bytes, pos: int, h: int, w: int, ch: int):
     one Adam7 pass — each pass filters against its own previous scanline
     per the spec) starting at ``pos``; returns ((h, w*ch) array,
     next_pos)."""
-    import numpy as np
-
     stride = w * ch
     if pos + h * (stride + 1) > len(flat):
         raise ValueError("PNG scanline payload length mismatch")
@@ -466,8 +532,6 @@ def decode_png(raw: bytes):
     pixel grid). Returns an (h, w) or (h, w, 3) uint8 numpy array."""
     import struct
     import zlib
-
-    import numpy as np
 
     if raw[:8] != _PNG_MAGIC:
         raise ValueError("not a PNG payload")
@@ -522,8 +586,6 @@ def encode_wav(samples, rate: int = 8000) -> bytes:
     """Minimal real WAV encoder: PCM16 mono RIFF container."""
     import struct
 
-    import numpy as np
-
     s = np.asarray(samples, dtype=np.int16)
     data = s.tobytes()
     return (
@@ -542,8 +604,6 @@ def encode_wav_g711(codes, rate: int = 8000, law: str = "mulaw") -> bytes:
     A-law (format tag 6) RIFF container around already-companded code
     bytes — the telephony capture format."""
     import struct
-
-    import numpy as np
 
     tag = 7 if law == "mulaw" else 6
     data = np.asarray(codes, dtype=np.uint8).tobytes()
@@ -568,8 +628,6 @@ def g711_expand(codes, law: str):
     A-law:  a = c ^ 0x55; seg = (a >> 4) & 7; t = (a & 15) << 4;
             mag = t + 8 (seg 0) | (t + 0x108) << (seg - 1);
             pcm = +mag if sign bit else -mag"""
-    import numpy as np
-
     c = np.asarray(codes, dtype=np.int64)
     if law == "mulaw":
         u = (~c) & 0xFF
@@ -613,8 +671,6 @@ def ima_expand(nibbles, pred: int, index: int):
     stepped by the adjustment table and clamped to [0, 88]. Returns an
     int16 array of len(nibbles) decoded samples (the initial predictor
     itself is sample 0 of the block, emitted by the caller)."""
-    import numpy as np
-
     out = []
     for b in nibbles:
         step = _IMA_STEPS[index]
@@ -682,8 +738,6 @@ def decode_wav(raw: bytes):
     array)."""
     import struct
 
-    import numpy as np
-
     if raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
         raise ValueError("not a WAV payload")
     off = 12
@@ -747,30 +801,82 @@ def decode_wav(raw: bytes):
     return rate, g711_expand(codes, "mulaw" if fmt == 7 else "alaw")
 
 
-def _spread_ids(
-    df: DataFrame, id_col: str, key: Column | None = None
-) -> DataFrame:
-    """Repartition the bare id column across the session's cores before
-    a CPU-bound payload-generation pass: the testbed's documents table
-    is one parquet file (one input partition), which would serialize
-    the whole encode stage onto a single Python worker — measured 7.3 s
-    for the video query at sf0.1 vs ~0.8 s spread. Shuffling ids is
-    bytes-trivial (one long per row); at 100 TB the source scan has
-    ample partitions and this is a near-no-op rebalance.
+# --- test-payload images and clips -------------------------------------
+#
+# Each is a pure function of one integer key, so a SQL oracle re-derives
+# every decoded statistic from the key; the generators and
+# mixed_payloads share them.
 
-    ``key``: optional partitioning expression. The grouped payload
-    generators (key_div / key_mod planted-duplicate families) pass the
-    GROUP key here so that ids sharing a payload land in the same task
-    and the generator's per-task memo cache turns the group's repeated
-    encode work into one encode + (group_size - 1) dict hits. Key
-    cardinality stays ~|ids|/group_size — far above the partition
-    count, so the hash spread stays even (guide §2.5)."""
-    sc = df.sparkSession.sparkContext
-    if key is None:
-        return df.select(id_col).repartition(
-            sc.defaultParallelism, id_col
-        )
-    return df.select(id_col).repartition(sc.defaultParallelism, key)
+
+def _gradient(k: int, textured: bool = False):
+    """The PNG/GIF test image of key k: (8 + k%3) rows x (8 + k%5)
+    columns, pixel(r, c) = (k + 7r + 13c) mod 256, or with ``textured``
+    (k + 37r^2 + 73c^2 + 11rc) mod 256 (see :func:`png_payloads`)."""
+    r = np.arange(8 + k % 3)[:, None]
+    c = np.arange(8 + k % 5)[None, :]
+    if textured:
+        img = k + 37 * r * r + 73 * c * c + 11 * r * c
+    else:
+        img = k + 7 * r + 13 * c
+    return (img % 256).astype(np.uint8)
+
+
+def _blocks(vals):
+    """Each value of ``vals`` as a constant 8x8 block (int64). Under the
+    all-ones quantization a block-constant image survives the JPEG DCT
+    round trip bit-exactly."""
+    return np.kron(vals, np.ones((8, 8), dtype=np.int64))
+
+
+def _ycbcr_blocks(k: int):
+    """(y, cb, cr) planes of the color JPEG test image of key k:
+    (1 + k%3) x (1 + k%2) 4:2:0 MCUs, luma block (bi, bj) =
+    (k*13 + 7bi + 3bj) mod 256, chroma constant per MCU (Cb =
+    (k*5 + 11ci + 17cj) mod 256, Cr = (k*7 + 13ci + 5cj) mod 256)."""
+    mw, mh = 1 + k % 2, 1 + k % 3
+    bi = np.arange(2 * mh)[:, None]
+    bj = np.arange(2 * mw)[None, :]
+    ci = np.arange(mh)[:, None]
+    cj = np.arange(mw)[None, :]
+    return (
+        _blocks((k * 13 + 7 * bi + 3 * bj) % 256),
+        _blocks((k * 5 + 11 * ci + 17 * cj) % 256),
+        _blocks((k * 7 + 13 * ci + 5 * cj) % 256),
+    )
+
+
+def _wav_clip(k: int) -> bytes:
+    """PCM16 WAV of key k: 64 + k%32 samples at 8 kHz,
+    sample_i = ((k*31 + i*17) mod 4096) - 2048."""
+    i = np.arange(64 + k % 32, dtype=np.int64)
+    return encode_wav(((k * 31 + i * 17) % 4096) - 2048, 8000)
+
+
+def _gray_jpeg(k: int) -> bytes:
+    """Baseline grayscale JPEG of key k: (2 + k%2) x (2 + k%3) constant
+    blocks, block (bi, bj) = (k*13 + 7bi + 3bj) mod 256."""
+    from n2khab_mhq_data_spark.llmdata.jpeg import encode_jpeg
+
+    bi = np.arange(2 + k % 2)[:, None]
+    bj = np.arange(2 + k % 3)[None, :]
+    return encode_jpeg(_blocks((k * 13 + 7 * bi + 3 * bj) % 256))
+
+
+def _avi_clip(k: int) -> bytes:
+    """MJPEG-in-AVI clip of key k: 3 + k%4 frames at 10 fps, frame f a
+    16x16 image of constant blocks (k*11 + 19f + 7bi + 3bj) mod 256."""
+    from n2khab_mhq_data_spark.llmdata.jpeg import (
+        encode_avi_mjpeg,
+        encode_jpeg,
+    )
+
+    bi = np.arange(2)[:, None]
+    bj = np.arange(2)[None, :]
+    frames = [
+        encode_jpeg(_blocks((k * 11 + 19 * f + 7 * bi + 3 * bj) % 256))
+        for f in range(3 + k % 4)
+    ]
+    return encode_avi_mjpeg(frames, fps=10, width=16, height=16)
 
 
 def png_payloads(
@@ -798,67 +904,45 @@ def png_payloads(
     image (monotone rows have no sign changes), which is fine for
     stats/resize but makes hash-dedup degenerate; the textured pattern
     gives distinct keys distinct signatures."""
-    import numpy as np
 
-    grouped = key_mod is not None or key_div is not None
+    def encode(key: tuple[int, bool]) -> bytes:
+        k, edited = key
+        img = _gradient(k, textured)
+        if edited:
+            # near-duplicate: one strong pixel edit at (0, 0) — flips at
+            # most ONE dHash bit (only resized cell (0,0) samples it)
+            img[0, 0] = (int(img[0, 0]) + 200) % 256
+        return encode_png(img)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per-task memo, GROUPED paths only: rows sharing (k, perturb-
-        # parity) carry byte-identical PNGs, and the grouped spread
-        # below co-locates them, so each group pays ONE zlib deflate
-        # instead of group_size (guide §4.5 — amortize per-task work).
-        # In the ungrouped path k = id is unique per row — a memo would
-        # fill with 64k dead entries per task at a 0% hit rate
-        # (ADVICE r11), so it is skipped entirely there.
-        memo: dict[tuple[int, bool], bytes] = {}
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                if key_div is not None:
-                    k = did // key_div
-                elif key_mod is not None:
-                    k = did % key_mod
-                else:
-                    k = did
-                edited = bool(perturb and grouped and did % 2)
-                hit = memo.get((k, edited)) if grouped else None
-                if hit is not None:
-                    payloads.append(hit)
-                    continue
-                w, h = 8 + k % 5, 8 + k % 3
-                r = np.arange(h)[:, None]
-                c = np.arange(w)[None, :]
-                if textured:
-                    img = (k + 37 * r * r + 73 * c * c + 11 * r * c) % 256
-                else:
-                    img = (k + 7 * r + 13 * c) % 256
-                if edited:
-                    # near-duplicate: one strong pixel edit at (0, 0) —
-                    # flips at most ONE dHash bit (only resized cell
-                    # (0,0) samples source (0,0))
-                    img = img.copy()
-                    img[0, 0] = (img[0, 0] + 200) % 256
-                data = encode_png(img)
-                if grouped:
-                    if len(memo) > 65536:
-                        memo.clear()
-                    memo[(k, edited)] = data
-                payloads.append(data)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads}
-            )
+    if key_div is None and key_mod is None:
+        return _payloads(df, id_col, lambda did: encode((did, False)))
 
-    idt = df.schema[id_col].dataType.simpleString()
+    def group(did: int) -> tuple[int, bool]:
+        k = did // key_div if key_div is not None else did % key_mod
+        return k, bool(perturb and did % 2)
+
     if key_div is not None:
         key = F.expr(f"`{id_col}` div {key_div}")
-    elif key_mod is not None:
-        key = F.col(id_col) % key_mod
     else:
-        key = None
-    return _spread_ids(df, id_col, key).mapInPandas(
-        op, f"{id_col} {idt}, payload binary"
-    )
+        key = F.col(id_col) % key_mod
+    # rows sharing (k, perturb-parity) carry byte-identical PNGs and the
+    # group-key spread co-locates them, so the memo pays ONE zlib
+    # deflate per group instead of group_size
+    encode_once = _bounded_memo(encode)
+    return _payloads(df, id_col, lambda did: encode_once(group(did)), key)
+
+
+def _dhash(raw: bytes) -> int:
+    """56-bit difference hash of one PNG (see :func:`image_dhash`)."""
+    g = decode_png(raw)
+    if g.ndim == 3:  # RGB -> integer-mean luma
+        g = g.astype(np.int64).sum(axis=2) // 3
+    h, w = g.shape
+    rw = np.arange(8)
+    small = g[np.ix_((rw * h) // 8, (rw * w) // 8)].astype(np.int64)
+    bits = (small[:, :-1] > small[:, 1:]).astype(np.int64)
+    weights = 1 << (rw[:, None] * 7 + np.arange(7)[None, :])
+    return int((bits * weights).sum())
 
 
 def image_dhash(binary_df: DataFrame) -> DataFrame:
@@ -870,42 +954,16 @@ def image_dhash(binary_df: DataFrame) -> DataFrame:
     Identical images hash identically byte-for-byte; near-identical
     images differ in few bits (Hamming-ball matching is the banded-LSH
     extension). One Arrow pass, zero shuffle — the hash is computed
-    inside the scan like every other decode query."""
-    import numpy as np
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rw = np.arange(8)
-        weights = 1 << (np.arange(8)[:, None] * 7 + np.arange(7)[None, :])
-        # per-task memo: planted-duplicate corpora repeat payload bytes
-        # (and the grouped generators co-locate the repeats), so each
-        # distinct payload pays one inflate+unfilter, not group_size
-        memo: dict[bytes, int] = {}
-        for pdf in batches:
-            hashes = []
-            for raw in pdf["payload"]:
-                raw = bytes(raw)
-                hit = memo.get(raw)
-                if hit is not None:
-                    hashes.append(hit)
-                    continue
-                g = decode_png(raw)
-                if g.ndim == 3:  # RGB -> integer-mean luma
-                    g = g.astype(np.int64).sum(axis=2) // 3
-                h, w = g.shape
-                small = g[
-                    np.ix_((rw * h) // 8, (rw * w) // 8)
-                ].astype(np.int64)
-                bits = (small[:, :-1] > small[:, 1:]).astype(np.int64)
-                val = int((bits * weights).sum())
-                if len(memo) > 65536:
-                    memo.clear()
-                memo[raw] = val
-                hashes.append(val)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "dhash": hashes}
-            )
-
-    return binary_df.mapInPandas(op, "doc_id long, dhash long")
+    inside the scan like every other decode query. Planted-duplicate
+    corpora repeat payload bytes within a task, so each distinct
+    payload is decoded once."""
+    dhash = _bounded_memo(_dhash)
+    return _map_rows(
+        binary_df,
+        ("doc_id", "payload"),
+        lambda did, raw: [(did, dhash(bytes(raw)))],
+        "doc_id long, dhash long",
+    )
 
 
 def dhash_near_pairs(
@@ -985,8 +1043,6 @@ def image_stats(binary_df: DataFrame, fmt: str = "png") -> DataFrame:
     """REAL decode feature extraction: fully decode each image (PNG
     inflate + unfilter, or GIF LZW) and emit (width, height, n_px,
     mean_luma, max_luma). One Arrow pass, no shuffle; narrow output."""
-    import numpy as np
-
     if fmt == "png":
         decode = decode_png
     elif fmt == "gif":
@@ -996,30 +1052,15 @@ def image_stats(binary_df: DataFrame, fmt: str = "png") -> DataFrame:
     else:
         raise ValueError(f"unsupported image_stats format {fmt!r}")
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, npx, mean, mx = [], [], [], [], []
-            for raw in pdf["payload"]:
-                img = decode(bytes(raw))
-                h, w = img.shape[:2]
-                ws.append(w)
-                hs.append(h)
-                npx.append(h * w)
-                mean.append(round(float(np.mean(img)) + 1e-9, 3))
-                mx.append(int(img.max()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "n_px": pd.Series(npx, dtype="int64"),
-                    "mean_luma": pd.Series(mean, dtype="float64"),
-                    "max_luma": pd.Series(mx, dtype="int32"),
-                }
-            )
+    def row(did, raw):
+        img = decode(bytes(raw))
+        h, w = img.shape[:2]
+        return [(did, w, h, h * w, *_luma(img))]
 
-    return binary_df.mapInPandas(
-        op,
+    return _map_rows(
+        binary_df,
+        ("doc_id", "payload"),
+        row,
         "doc_id long, width int, height int, n_px long,"
         " mean_luma double, max_luma int",
     )
@@ -1029,31 +1070,9 @@ def gif_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """REAL GIF payloads (llmdata/gif.py — GIF87a LZW, lossless): the
     same gradient image per row as ``png_payloads``, so the identical
     arithmetic oracle verifies the whole LZW round trip."""
-    import numpy as np
-
     from n2khab_mhq_data_spark.llmdata.gif import encode_gif
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = 8 + did % 5, 8 + did % 3
-                r = np.arange(h)[:, None]
-                c = np.arange(w)[None, :]
-                payloads.append(
-                    encode_gif(
-                        ((did + 7 * r + 13 * c) % 256).astype(np.uint8)
-                    )
-                )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads}
-            )
-
-    idt = df.schema[id_col].dataType.simpleString()
-    return _spread_ids(df, id_col).mapInPandas(
-        op, f"{id_col} {idt}, payload binary"
-    )
+    return _payloads(df, id_col, lambda did: encode_gif(_gradient(did)))
 
 
 def image_resize_nn(
@@ -1065,33 +1084,20 @@ def image_resize_nn(
     the thumbnail/tile-pyramid primitive. Fan-out is bounded
     (out_w * out_h rows per payload), one Arrow pass, no shuffle."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "ro": [], "co": [], "v": []
-            }
-            for did, raw in zip(pdf["doc_id"], pdf["payload"]):
-                img = decode_png(bytes(raw))
-                h, w = img.shape[:2]
-                for ro in range(out_h):
-                    sr = ro * h // out_h
-                    for co in range(out_w):
-                        sc = co * w // out_w
-                        rows["doc_id"].append(int(did))
-                        rows["ro"].append(ro)
-                        rows["co"].append(co)
-                        rows["v"].append(int(img[sr, sc]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "ro": pd.Series(rows["ro"], dtype="int32"),
-                    "co": pd.Series(rows["co"], dtype="int32"),
-                    "v": pd.Series(rows["v"], dtype="int32"),
-                }
-            )
+    def row(did, raw):
+        img = decode_png(bytes(raw))
+        h, w = img.shape[:2]
+        return [
+            (did, ro, co, int(img[ro * h // out_h, co * w // out_w]))
+            for ro in range(out_h)
+            for co in range(out_w)
+        ]
 
-    return binary_df.mapInPandas(
-        op, "doc_id long, ro int, co int, v int"
+    return _map_rows(
+        binary_df,
+        ("doc_id", "payload"),
+        row,
+        "doc_id long, ro int, co int, v int",
     )
 
 
@@ -1100,65 +1106,24 @@ def wav_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (64 + id%32) samples at 8 kHz, sample_i = ((id*31 + i*17) mod 4096)
     - 2048 — integer arithmetic for the oracle, real RIFF bytes for the
     decoder."""
-    import numpy as np
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                n = 64 + did % 32
-                i = np.arange(n, dtype=np.int64)
-                s = ((did * 31 + i * 17) % 4096) - 2048
-                payloads.append(encode_wav(s.astype(np.int16), 8000))
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads}
-            )
-
-    idt = df.schema[id_col].dataType.simpleString()
-    return _spread_ids(df, id_col).mapInPandas(
-        op, f"{id_col} {idt}, payload binary"
-    )
+    return _payloads(df, id_col, _wav_clip)
 
 
 def wav_payloads_grouped(
     df: DataFrame, id_col: str = "doc_id", key_div: int = 10
 ) -> DataFrame:
-    """REAL audio payloads with planted duplicates: clip keyed on
-    id // key_div (constant group size at any corpus scale, like the
-    image-dedup payloads), sample_i = ((k*31 + i*17) mod 4096) - 2048
-    over 64 + k%32 samples — integer arithmetic for the oracle, real
-    RIFF bytes for the decoder."""
-    import numpy as np
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per-task memo over the group key: the group-key spread
-        # co-locates the key_div replicas, so each group encodes once
-        memo: dict[int, bytes] = {}
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                k = int(did) // key_div
-                hit = memo.get(k)
-                if hit is not None:
-                    payloads.append(hit)
-                    continue
-                n = 64 + k % 32
-                i = np.arange(n, dtype=np.int64)
-                s = ((k * 31 + i * 17) % 4096) - 2048
-                data = encode_wav(s.astype(np.int16), 8000)
-                if len(memo) > 65536:
-                    memo.clear()
-                memo[k] = data
-                payloads.append(data)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads}
-            )
-
-    idt = df.schema[id_col].dataType.simpleString()
-    return _spread_ids(
-        df, id_col, F.expr(f"`{id_col}` div {key_div}")
-    ).mapInPandas(op, f"{id_col} {idt}, payload binary")
+    """REAL audio payloads with planted duplicates: the
+    :func:`wav_payloads` clip keyed on id // key_div (constant group
+    size at any corpus scale, like the image-dedup payloads). The
+    group-key spread co-locates a group's ids, so each group encodes
+    once."""
+    clip = _bounded_memo(_wav_clip)
+    return _payloads(
+        df,
+        id_col,
+        lambda did: clip(did // key_div),
+        F.expr(f"`{id_col}` div {key_div}"),
+    )
 
 
 def audio_fingerprint(binary_df: DataFrame, frames: int = 16) -> DataFrame:
@@ -1166,71 +1131,43 @@ def audio_fingerprint(binary_df: DataFrame, frames: int = 16) -> DataFrame:
     clip into ``frames`` equal-share frames (sample i -> frame
     (i*frames)//n), take per-frame energy (sum of squares — exact
     integer arithmetic on int16 samples), set bit f when
-    E_f > E_{f+1} — a 15-bit energy-envelope signature, the shape of
-    Shazam-class fingerprints reduced to its integer core so a SQL
-    oracle can re-derive it. One Arrow pass, zero shuffle."""
-    import numpy as np
+    E_f > E_{f+1} — a (frames - 1)-bit energy-envelope signature, the
+    shape of Shazam-class fingerprints reduced to its integer core so a
+    SQL oracle can re-derive it. One Arrow pass, zero shuffle;
+    planted-duplicate clips repeat payload bytes within a task, so each
+    distinct clip is decoded once."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per-task memo: planted-duplicate clips repeat payload bytes,
-        # and the grouped generator co-locates the repeats
-        memo: dict[bytes, int] = {}
-        for pdf in batches:
-            fps = []
-            for raw in pdf["payload"]:
-                raw = bytes(raw)
-                hit = memo.get(raw)
-                if hit is not None:
-                    fps.append(hit)
-                    continue
-                _rate, s = decode_wav(raw)
-                s = s.astype(np.int64)
-                n = len(s)
-                fidx = (np.arange(n) * frames) // n
-                e = np.zeros(frames, dtype=np.int64)
-                np.add.at(e, fidx, s * s)
-                bits = (e[:-1] > e[1:]).astype(np.int64)
-                val = int((bits << np.arange(frames - 1)).sum())
-                if len(memo) > 65536:
-                    memo.clear()
-                memo[raw] = val
-                fps.append(val)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "fingerprint": fps}
-            )
+    def fingerprint(raw: bytes) -> int:
+        s = decode_wav(raw)[1].astype(np.int64)
+        n = len(s)
+        e = np.zeros(frames, dtype=np.int64)
+        np.add.at(e, (np.arange(n) * frames) // n, s * s)
+        bits = (e[:-1] > e[1:]).astype(np.int64)
+        return int((bits << np.arange(frames - 1)).sum())
 
-    return binary_df.mapInPandas(op, "doc_id long, fingerprint long")
+    fingerprint_once = _bounded_memo(fingerprint)
+    return _map_rows(
+        binary_df,
+        ("doc_id", "payload"),
+        lambda did, raw: [(did, fingerprint_once(bytes(raw)))],
+        "doc_id long, fingerprint long",
+    )
 
 
 def audio_stats(binary_df: DataFrame) -> DataFrame:
     """REAL WAV decode feature extraction: (sample_rate, n_samples,
     peak, rms) per payload — the audio-quality gate primitive."""
-    import numpy as np
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rates, ns, peak, rms = [], [], [], []
-            for raw in pdf["payload"]:
-                rate, s = decode_wav(bytes(raw))
-                x = s.astype(np.float64)
-                rates.append(rate)
-                ns.append(len(s))
-                peak.append(int(np.abs(s.astype(np.int64)).max()))
-                rms.append(
-                    round(float(np.sqrt(np.mean(x * x))) + 1e-9, 3)
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "sample_rate": pd.Series(rates, dtype="int32"),
-                    "n_samples": pd.Series(ns, dtype="int64"),
-                    "peak": pd.Series(peak, dtype="int64"),
-                    "rms": pd.Series(rms, dtype="float64"),
-                }
-            )
+    def row(did, raw):
+        rate, s = decode_wav(bytes(raw))
+        x = s.astype(np.float64)
+        peak = int(np.abs(s.astype(np.int64)).max())
+        return [(did, rate, len(s), peak, _round3(np.sqrt(np.mean(x * x))))]
 
-    return binary_df.mapInPandas(
-        op,
+    return _map_rows(
+        binary_df,
+        ("doc_id", "payload"),
+        row,
         "doc_id long, sample_rate int, n_samples long, peak long,"
         " rms double",
     )
@@ -1244,62 +1181,23 @@ def jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     survives the DCT/Huffman round trip bit-exactly, so the decoded
     statistics stay SQL-derivable while the full entropy-coding path
     (canonical Huffman, byte stuffing, zigzag, IDCT) really runs."""
-    import numpy as np
-
-    from n2khab_mhq_data_spark.llmdata.jpeg import encode_jpeg
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                wb, hb = 2 + did % 3, 2 + did % 2
-                bi = np.arange(hb)[:, None]
-                bj = np.arange(wb)[None, :]
-                vals = (did * 13 + 7 * bi + 3 * bj) % 256
-                img = np.kron(vals, np.ones((8, 8), dtype=np.int64))
-                payloads.append(encode_jpeg(img.astype(np.uint8)))
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads}
-            )
-
-    idt = df.schema[id_col].dataType.simpleString()
-    return _spread_ids(df, id_col).mapInPandas(
-        op, f"{id_col} {idt}, payload binary"
-    )
+    return _payloads(df, id_col, _gray_jpeg)
 
 
 def jpeg_stats(binary_df: DataFrame) -> DataFrame:
     """REAL JPEG decode feature extraction (Huffman decode, dequantize,
     IDCT per block): (width, height, n_px, mean_luma, max_luma)."""
-    import numpy as np
-
     from n2khab_mhq_data_spark.llmdata.jpeg import decode_jpeg
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, npx, mean, mx = [], [], [], [], []
-            for raw in pdf["payload"]:
-                img = decode_jpeg(bytes(raw))
-                h, w = img.shape
-                ws.append(w)
-                hs.append(h)
-                npx.append(h * w)
-                mean.append(round(float(np.mean(img)) + 1e-9, 3))
-                mx.append(int(img.max()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "n_px": pd.Series(npx, dtype="int64"),
-                    "mean_luma": pd.Series(mean, dtype="float64"),
-                    "max_luma": pd.Series(mx, dtype="int32"),
-                }
-            )
+    def row(did, raw):
+        img = decode_jpeg(bytes(raw))
+        h, w = img.shape
+        return [(did, w, h, h * w, *_luma(img))]
 
-    return binary_df.mapInPandas(
-        op,
+    return _map_rows(
+        binary_df,
+        ("doc_id", "payload"),
+        row,
         "doc_id long, width int, height int, n_px long,"
         " mean_luma double, max_luma int",
     )
@@ -1315,32 +1213,10 @@ def color_jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     planes survive the subsampled round trip bit-exactly under Q=1,
     so decoded per-channel statistics stay SQL-derivable while the
     full interleaved-scan entropy path really runs."""
-    import numpy as np
-
     from n2khab_mhq_data_spark.llmdata.jpeg import encode_jpeg_color
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ones = np.ones((8, 8), dtype=np.int64)
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                mw, mh = 1 + did % 2, 1 + did % 3
-                bi = np.arange(2 * mh)[:, None]
-                bj = np.arange(2 * mw)[None, :]
-                y = np.kron((did * 13 + 7 * bi + 3 * bj) % 256, ones)
-                ci = np.arange(mh)[:, None]
-                cj = np.arange(mw)[None, :]
-                cb = np.kron((did * 5 + 11 * ci + 17 * cj) % 256, ones)
-                cr = np.kron((did * 7 + 13 * ci + 5 * cj) % 256, ones)
-                payloads.append(encode_jpeg_color(y, cb, cr))
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads}
-            )
-
-    idt = df.schema[id_col].dataType.simpleString()
-    return _spread_ids(df, id_col).mapInPandas(
-        op, f"{id_col} {idt}, payload binary"
+    return _payloads(
+        df, id_col, lambda did: encode_jpeg_color(*_ycbcr_blocks(did))
     )
 
 
@@ -1354,32 +1230,10 @@ def progressive_jpeg_payloads(
     bits) — the decoder reassembles the coefficients across scans, so
     equal stats against the SAME oracle prove the progressive path
     end-to-end."""
-    import numpy as np
-
     from n2khab_mhq_data_spark.llmdata.jpeg import encode_jpeg_progressive
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ones = np.ones((8, 8), dtype=np.int64)
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                mw, mh = 1 + did % 2, 1 + did % 3
-                bi = np.arange(2 * mh)[:, None]
-                bj = np.arange(2 * mw)[None, :]
-                y = np.kron((did * 13 + 7 * bi + 3 * bj) % 256, ones)
-                ci = np.arange(mh)[:, None]
-                cj = np.arange(mw)[None, :]
-                cb = np.kron((did * 5 + 11 * ci + 17 * cj) % 256, ones)
-                cr = np.kron((did * 7 + 13 * ci + 5 * cj) % 256, ones)
-                payloads.append(encode_jpeg_progressive(y, cb, cr))
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads}
-            )
-
-    idt = df.schema[id_col].dataType.simpleString()
-    return _spread_ids(df, id_col).mapInPandas(
-        op, f"{id_col} {idt}, payload binary"
+    return _payloads(
+        df, id_col, lambda did: encode_jpeg_progressive(*_ycbcr_blocks(did))
     )
 
 
@@ -1390,26 +1244,20 @@ def g711_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     formulas are stateless per sample, so every decoded PCM value is
     SQL-derivable from (id, k) while a real RIFF walk + companded
     expansion runs."""
-    import numpy as np
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, laws, payloads = [], [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                n = 64 + did % 16
-                codes = (did * 7 + 13 * np.arange(n)) % 256
-                for law in ("mulaw", "alaw"):
-                    ids.append(did)
-                    laws.append(law)
-                    payloads.append(encode_wav_g711(codes, 8000, law))
-            yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype="int64"),
-                 "law": laws, "payload": payloads}
-            )
+    def row(did):
+        did = int(did)
+        codes = (did * 7 + 13 * np.arange(64 + did % 16)) % 256
+        return [
+            (did, law, encode_wav_g711(codes, 8000, law))
+            for law in ("mulaw", "alaw")
+        ]
 
-    return _spread_ids(df, id_col).mapInPandas(
-        op, f"{id_col} long, law string, payload binary"
+    return _map_rows(
+        _spread_ids(df, id_col),
+        (id_col,),
+        row,
+        f"{id_col} long, law string, payload binary",
     )
 
 
@@ -1418,35 +1266,20 @@ def g711_stats(binary_df: DataFrame) -> DataFrame:
     chunk walk: (law, sample_rate, n_samples, peak, sum_pcm,
     mean_pcm) per payload — sums are exact integers, so the oracle
     compares on the integer grid."""
-    import numpy as np
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rates, ns, peak, s, mean = [], [], [], [], []
-            for raw in pdf["payload"]:
-                rate, pcm = decode_wav(bytes(raw))
-                x = pcm.astype(np.int64)
-                rates.append(rate)
-                ns.append(len(pcm))
-                peak.append(int(np.abs(x).max()))
-                s.append(int(x.sum()))
-                mean.append(
-                    round(float(x.sum()) / len(pcm) + 1e-9, 3)
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "law": pdf["law"],
-                    "sample_rate": pd.Series(rates, dtype="int32"),
-                    "n_samples": pd.Series(ns, dtype="int64"),
-                    "peak": pd.Series(peak, dtype="int64"),
-                    "sum_pcm": pd.Series(s, dtype="int64"),
-                    "mean_pcm": pd.Series(mean, dtype="float64"),
-                }
-            )
+    def row(did, law, raw):
+        rate, pcm = decode_wav(bytes(raw))
+        x = pcm.astype(np.int64)
+        total = int(x.sum())
+        return [(
+            did, law, rate, len(pcm), int(np.abs(x).max()), total,
+            _round3(float(total) / len(pcm)),
+        )]
 
-    return binary_df.mapInPandas(
-        op,
+    return _map_rows(
+        binary_df,
+        ("doc_id", "law", "payload"),
+        row,
         "doc_id long, law string, sample_rate int, n_samples long,"
         " peak long, sum_pcm long, mean_pcm double",
     )
@@ -1461,76 +1294,45 @@ def gif_animation_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     so every composited snapshot is SQL-derivable (latest covering
     patch wins per pixel) while real GCE parsing, sub-rect compositing,
     and per-frame LZW decode run."""
-    import numpy as np
-
     from n2khab_mhq_data_spark.llmdata.gif import encode_gif_frames
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                nf = 2 + did % 3
-                i = np.arange(8)[:, None]
-                j = np.arange(16)[None, :]
-                base = ((did * 17 + 5 * i + 9 * j) % 256).astype(np.uint8)
-                frames = [base]
-                offsets = [(0, 0)]
-                for g in range(1, nf):
-                    v = (did * 29 + 31 * g) % 256
-                    frames.append(np.full((4, 6), v, dtype=np.uint8))
-                    offsets.append((2 * (g % 2), 4 * (g % 3)))
-                payloads.append(
-                    encode_gif_frames(
-                        frames,
-                        [3 + 2 * f for f in range(nf)],
-                        canvas=(8, 16),
-                        offsets=offsets,
-                    )
-                )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads}
-            )
+    def encode(did: int) -> bytes:
+        nf = 2 + did % 3
+        i = np.arange(8)[:, None]
+        j = np.arange(16)[None, :]
+        frames = [((did * 17 + 5 * i + 9 * j) % 256).astype(np.uint8)]
+        offsets = [(0, 0)]
+        for g in range(1, nf):
+            v = (did * 29 + 31 * g) % 256
+            frames.append(np.full((4, 6), v, dtype=np.uint8))
+            offsets.append((2 * (g % 2), 4 * (g % 3)))
+        return encode_gif_frames(
+            frames,
+            [3 + 2 * f for f in range(nf)],
+            canvas=(8, 16),
+            offsets=offsets,
+        )
 
-    idt = df.schema[id_col].dataType.simpleString()
-    return _spread_ids(df, id_col).mapInPandas(
-        op, f"{id_col} {idt}, payload binary"
-    )
+    return _payloads(df, id_col, encode)
 
 
 def gif_animation_stats(binary_df: DataFrame) -> DataFrame:
     """REAL animated-GIF frame extraction: demux the 89a block stream,
     honor GCE delays/disposal, composite each frame onto the canvas,
     and emit per-frame statistics."""
-    import numpy as np
-
     from n2khab_mhq_data_spark.llmdata.gif import decode_gif_frames
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fidx, nfs, dls, means, mxs = [], [], [], [], [], []
-            for did, raw in zip(pdf["doc_id"], pdf["payload"]):
-                delays, frames = decode_gif_frames(bytes(raw))
-                for f, (d, img) in enumerate(zip(delays, frames)):
-                    ids.append(did)
-                    fidx.append(f)
-                    nfs.append(len(frames))
-                    dls.append(d)
-                    means.append(round(float(np.mean(img)) + 1e-9, 3))
-                    mxs.append(int(img.max()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(fidx, dtype="int32"),
-                    "n_frames": pd.Series(nfs, dtype="int32"),
-                    "delay_cs": pd.Series(dls, dtype="int32"),
-                    "mean_v": pd.Series(means, dtype="float64"),
-                    "max_v": pd.Series(mxs, dtype="int32"),
-                }
-            )
+    def row(did, raw):
+        delays, frames = decode_gif_frames(bytes(raw))
+        return [
+            (did, f, len(frames), d, *_luma(img))
+            for f, (d, img) in enumerate(zip(delays, frames))
+        ]
 
-    return binary_df.mapInPandas(
-        op,
+    return _map_rows(
+        binary_df,
+        ("doc_id", "payload"),
+        row,
         "doc_id long, frame_idx int, n_frames int, delay_cs int,"
         " mean_v double, max_v int",
     )
@@ -1541,44 +1343,18 @@ def color_jpeg_stats(binary_df: DataFrame) -> DataFrame:
     Huffman decode with per-component predictors, replication chroma
     upsample, JFIF YCbCr->RGB — per-channel means a SQL oracle can
     re-derive from the generative block arithmetic."""
-    import numpy as np
-
     from n2khab_mhq_data_spark.llmdata.jpeg import decode_jpeg, ycbcr_to_rgb
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols: dict[str, list] = {
-            k: []
-            for k in ("width", "height", "mean_y", "mean_cb", "mean_cr",
-                      "mean_r", "mean_g", "mean_b")
-        }
-        for pdf in batches:
-            for k in cols:
-                cols[k].clear()
-            for raw in pdf["payload"]:
-                y, cb, cr = decode_jpeg(bytes(raw))
-                r, g, b = ycbcr_to_rgb(y, cb, cr)
-                h, w = y.shape
-                cols["width"].append(w)
-                cols["height"].append(h)
-                for k, p in (("mean_y", y), ("mean_cb", cb),
-                             ("mean_cr", cr), ("mean_r", r),
-                             ("mean_g", g), ("mean_b", b)):
-                    cols[k].append(round(float(np.mean(p)) + 1e-9, 3))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": pd.Series(cols["width"], dtype="int32"),
-                    "height": pd.Series(cols["height"], dtype="int32"),
-                    **{
-                        k: pd.Series(cols[k], dtype="float64")
-                        for k in ("mean_y", "mean_cb", "mean_cr",
-                                  "mean_r", "mean_g", "mean_b")
-                    },
-                }
-            )
+    def row(did, raw):
+        y, cb, cr = decode_jpeg(bytes(raw))
+        h, w = y.shape
+        planes = (y, cb, cr, *ycbcr_to_rgb(y, cb, cr))
+        return [(did, w, h, *(_round3(np.mean(p)) for p in planes))]
 
-    return binary_df.mapInPandas(
-        op,
+    return _map_rows(
+        binary_df,
+        ("doc_id", "payload"),
+        row,
         "doc_id long, width int, height int, mean_y double,"
         " mean_cb double, mean_cr double, mean_r double,"
         " mean_g double, mean_b double",
@@ -1592,36 +1368,7 @@ def video_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (id*11 + 19*f + 7*bi + 3*bj) mod 256 — exact under the all-ones
     JPEG quantization, so every sampled frame's statistics stay
     SQL-derivable while a real RIFF demux + entropy decode runs."""
-    import numpy as np
-
-    from n2khab_mhq_data_spark.llmdata.jpeg import (
-        encode_avi_mjpeg,
-        encode_jpeg,
-    )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                frames = []
-                for f in range(3 + did % 4):
-                    bi = np.arange(2)[:, None]
-                    bj = np.arange(2)[None, :]
-                    vals = (did * 11 + 19 * f + 7 * bi + 3 * bj) % 256
-                    img = np.kron(vals, np.ones((8, 8), dtype=np.int64))
-                    frames.append(encode_jpeg(img.astype(np.uint8)))
-                payloads.append(
-                    encode_avi_mjpeg(frames, fps=10, width=16, height=16)
-                )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads}
-            )
-
-    idt = df.schema[id_col].dataType.simpleString()
-    return _spread_ids(df, id_col).mapInPandas(
-        op, f"{id_col} {idt}, payload binary"
-    )
+    return _payloads(df, id_col, _avi_clip)
 
 
 def video_frame_stats(binary_df: DataFrame, stride: int = 2) -> DataFrame:
@@ -1630,46 +1377,22 @@ def video_frame_stats(binary_df: DataFrame, stride: int = 2) -> DataFrame:
     one row per sampled frame — the frame-sample primitive with real
     bytes instead of the fake decoder. Bounded fan-out (n_frames /
     stride rows per clip), one Arrow pass, no shuffle."""
-    import numpy as np
-
     from n2khab_mhq_data_spark.llmdata.jpeg import (
         decode_avi_mjpeg,
         decode_jpeg,
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "frame_idx": [], "n_frames": [],
-                "fps": [], "mean_luma": [], "max_luma": [],
-            }
-            for did, raw in zip(pdf["doc_id"], pdf["payload"]):
-                fps, frames = decode_avi_mjpeg(bytes(raw))
-                for f in range(0, len(frames), stride):
-                    img = decode_jpeg(frames[f])
-                    rows["doc_id"].append(int(did))
-                    rows["frame_idx"].append(f)
-                    rows["n_frames"].append(len(frames))
-                    rows["fps"].append(fps)
-                    rows["mean_luma"].append(
-                        round(float(np.mean(img)) + 1e-9, 3)
-                    )
-                    rows["max_luma"].append(int(img.max()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "frame_idx": pd.Series(rows["frame_idx"], dtype="int32"),
-                    "n_frames": pd.Series(rows["n_frames"], dtype="int32"),
-                    "fps": pd.Series(rows["fps"], dtype="int32"),
-                    "mean_luma": pd.Series(
-                        rows["mean_luma"], dtype="float64"
-                    ),
-                    "max_luma": pd.Series(rows["max_luma"], dtype="int32"),
-                }
-            )
+    def row(did, raw):
+        fps, frames = decode_avi_mjpeg(bytes(raw))
+        return [
+            (did, f, len(frames), fps, *_luma(decode_jpeg(frames[f])))
+            for f in range(0, len(frames), stride)
+        ]
 
-    return binary_df.mapInPandas(
-        op,
+    return _map_rows(
+        binary_df,
+        ("doc_id", "payload"),
+        row,
         "doc_id long, frame_idx int, n_frames int, fps int,"
         " mean_luma double, max_luma int",
     )
@@ -1678,58 +1401,18 @@ def video_frame_stats(binary_df: DataFrame, stride: int = 2) -> DataFrame:
 def mixed_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """One REAL payload per row in a format chosen by id mod 5 — PNG /
     WAV / JPEG / MJPEG-AVI / GIF — with the same deterministic content
-    formulas as the per-format generators, so the format-dispatch query
-    has an arithmetic oracle for every decoded field."""
-    import numpy as np
-
+    as the per-format generators, so the format-dispatch query has an
+    arithmetic oracle for every decoded field."""
     from n2khab_mhq_data_spark.llmdata.gif import encode_gif
-    from n2khab_mhq_data_spark.llmdata.jpeg import (
-        encode_avi_mjpeg,
-        encode_jpeg,
+
+    by_kind = (
+        lambda did: encode_png(_gradient(did)),
+        _wav_clip,
+        _gray_jpeg,
+        _avi_clip,
+        lambda did: encode_gif(_gradient(did)),
     )
-
-    def build(did: int) -> bytes:
-        kind = did % 5
-        if kind in (0, 4):  # PNG / GIF: the gradient image
-            w, h = 8 + did % 5, 8 + did % 3
-            r = np.arange(h)[:, None]
-            c = np.arange(w)[None, :]
-            img = ((did + 7 * r + 13 * c) % 256).astype(np.uint8)
-            return encode_png(img) if kind == 0 else encode_gif(img)
-        if kind == 1:  # WAV
-            n = 64 + did % 32
-            i = np.arange(n, dtype=np.int64)
-            s = ((did * 31 + i * 17) % 4096) - 2048
-            return encode_wav(s.astype(np.int16), 8000)
-        if kind == 2:  # JPEG: block-constant
-            wb, hb = 2 + did % 3, 2 + did % 2
-            bi = np.arange(hb)[:, None]
-            bj = np.arange(wb)[None, :]
-            vals = (did * 13 + 7 * bi + 3 * bj) % 256
-            img = np.kron(vals, np.ones((8, 8), dtype=np.int64))
-            return encode_jpeg(img.astype(np.uint8))
-        frames = []  # AVI
-        for f in range(3 + did % 4):
-            bi = np.arange(2)[:, None]
-            bj = np.arange(2)[None, :]
-            vals = (did * 11 + 19 * f + 7 * bi + 3 * bj) % 256
-            img = np.kron(vals, np.ones((8, 8), dtype=np.int64))
-            frames.append(encode_jpeg(img.astype(np.uint8)))
-        return encode_avi_mjpeg(frames, fps=10, width=16, height=16)
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "payload": [build(int(d)) for d in pdf[id_col]],
-                }
-            )
-
-    idt = df.schema[id_col].dataType.simpleString()
-    return _spread_ids(df, id_col).mapInPandas(
-        op, f"{id_col} {idt}, payload binary"
-    )
+    return _payloads(df, id_col, lambda did: by_kind[did % 5](did))
 
 
 def format_dispatch(binary_df: DataFrame) -> DataFrame:
@@ -1739,28 +1422,15 @@ def format_dispatch(binary_df: DataFrame) -> DataFrame:
     triage a multimodal pipeline runs before modality-specific
     processing. One Arrow pass, no shuffle."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [
-                decode_image(bytes(b), fake=False) for b in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "format": pd.Series(
-                        [m["format"] for m in metas], dtype="object"
-                    ),
-                    "n_frames": pd.Series(
-                        [m["n_frames"] for m in metas], dtype="int64"
-                    ),
-                    "first_byte": pd.Series(
-                        [m["first_byte"] for m in metas], dtype="int32"
-                    ),
-                }
-            )
+    def row(did, raw):
+        m = decode_image(bytes(raw), fake=False)
+        return [(did, m["format"], m["n_frames"], m["first_byte"])]
 
-    return binary_df.mapInPandas(
-        op, "doc_id long, format string, n_frames long, first_byte int"
+    return _map_rows(
+        binary_df,
+        ("doc_id", "payload"),
+        row,
+        "doc_id long, format string, n_frames long, first_byte int",
     )
 
 
@@ -1775,52 +1445,31 @@ def gif_interlace_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     override both run for real. 181 is odd, so p is a permutation and
     a skipped palette lookup (or a wrong row scatter, via the
     position-weighted checksum) breaks the hash."""
-    import numpy as np
-
     from n2khab_mhq_data_spark.llmdata.gif import encode_gif
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                h, w = 5 + did % 8, 7 + did % 9
-                i = np.arange(h)[:, None]
-                j = np.arange(w)[None, :]
-                idx = ((did * 23 + 11 * i + 5 * j) % 256).astype(np.uint8)
-                pal = [(181 * k + did) % 256 for k in range(256)]
-                payloads.append(
-                    encode_gif(idx, interlace=True, local_palette=pal)
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+    def encode(did: int) -> bytes:
+        i = np.arange(5 + did % 8)[:, None]
+        j = np.arange(7 + did % 9)[None, :]
+        idx = ((did * 23 + 11 * i + 5 * j) % 256).astype(np.uint8)
+        pal = [(181 * k + did) % 256 for k in range(256)]
+        return encode_gif(idx, interlace=True, local_palette=pal)
 
-    idt = df.schema[id_col].dataType.simpleString()
-    return _spread_ids(df, id_col).mapInPandas(
-        op, f"{id_col} {idt}, payload binary"
-    )
+    return _payloads(df, id_col, encode)
 
 
 def _lum_frame_stats(img) -> tuple:
     """(width, height, mean, max, position-weighted checksum) of one
-    decoded luminance frame — the ONE definition shared by every r10
-    stats extractor: the rounding epsilon and the wsum formula
+    decoded luminance frame — the ONE definition shared by every
+    luminance stats extractor: the rounding epsilon and the wsum formula
     sum(v * (i*w + j + 1)) must match the SQL oracles verbatim, and a
-    single helper keeps the three queries from drifting apart. wsum is
+    single helper keeps the queries from drifting apart. wsum is
     the statistic that SEES row placement (mean/max are row-order
     invariant, so a missed deinterlace scatter, bottom-up flip, or
     wrong-rect disposal restore only breaks wsum)."""
-    import numpy as np
-
     h, w = img.shape
     v = img.astype(np.int64)
     pos = np.arange(1, h * w + 1, dtype=np.int64).reshape(h, w)
-    return (
-        w,
-        h,
-        round(float(v.mean()) + 1e-9, 3),
-        int(v.max()),
-        int((v * pos).sum()),
-    )
+    return (w, h, *_luma(v), int((v * pos).sum()))
 
 
 def gif_interlace_stats(
@@ -1832,26 +1481,11 @@ def gif_interlace_stats(
     belongs (see :func:`_lum_frame_stats`)."""
     from n2khab_mhq_data_spark.llmdata.gif import decode_gif
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            stats = [decode_gif(bytes(r)) for r in pdf["payload"]]
-            ws, hs, means, mxs, wsums = zip(
-                *(_lum_frame_stats(img) for img in stats)
-            ) if stats else ((),) * 5
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "mean_v": pd.Series(means, dtype="float64"),
-                    "max_v": pd.Series(mxs, dtype="int32"),
-                    "wsum": pd.Series(wsums, dtype="int64"),
-                }
-            )
-
     idt = binary_df.schema[id_col].dataType.simpleString()
-    return binary_df.mapInPandas(
-        op,
+    return _map_rows(
+        binary_df,
+        (id_col, "payload"),
+        lambda did, raw: [(did, *_lum_frame_stats(decode_gif(bytes(raw))))],
         f"{id_col} {idt}, width int, height int, mean_v double,"
         " max_v int, wsum long",
     )
@@ -1868,45 +1502,33 @@ def bmp_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     b = (id*11 + i + 9j) mod 256 — so both pixel depths, both row
     orders, the 4-byte row padding, and the color-table lookup are all
     exercised with SQL-derivable luminance."""
-    import numpy as np
-
     from n2khab_mhq_data_spark.llmdata.bmp import encode_bmp
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, kinds, payloads = [], [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                h, w = 3 + did % 5, 5 + did % 6
-                i = np.arange(h)[:, None]
-                j = np.arange(w)[None, :]
-                idx = ((did * 19 + 7 * i + 3 * j) % 256).astype(np.uint8)
-                pal = [(149 * k + did) % 256 for k in range(256)]
-                ids.append(did)
-                kinds.append("pal8")
-                payloads.append(encode_bmp(idx, palette=pal))
-                # i (h,1) x j (1,w) broadcasting already yields (h, w)
-                rgb = np.stack(
-                    [
-                        (did * 3 + 7 * i + j) % 256,
-                        (did * 5 + 2 * i + 3 * j) % 256,
-                        (did * 11 + i + 9 * j) % 256,
-                    ],
-                    axis=2,
-                ).astype(np.uint8)
-                ids.append(did)
-                kinds.append("bgr24")
-                payloads.append(encode_bmp(rgb, top_down=True))
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "kind": kinds,
-                    "payload": payloads,
-                }
-            )
+    def row(did):
+        did = int(did)
+        i = np.arange(3 + did % 5)[:, None]
+        j = np.arange(5 + did % 6)[None, :]
+        idx = ((did * 19 + 7 * i + 3 * j) % 256).astype(np.uint8)
+        pal = [(149 * k + did) % 256 for k in range(256)]
+        # i (h,1) x j (1,w) broadcasting already yields (h, w)
+        rgb = np.stack(
+            [
+                (did * 3 + 7 * i + j) % 256,
+                (did * 5 + 2 * i + 3 * j) % 256,
+                (did * 11 + i + 9 * j) % 256,
+            ],
+            axis=2,
+        ).astype(np.uint8)
+        return [
+            (did, "pal8", encode_bmp(idx, palette=pal)),
+            (did, "bgr24", encode_bmp(rgb, top_down=True)),
+        ]
 
-    return _spread_ids(df, id_col).mapInPandas(
-        op, f"{id_col} long, kind string, payload binary"
+    return _map_rows(
+        _spread_ids(df, id_col),
+        (id_col,),
+        row,
+        f"{id_col} long, kind string, payload binary",
     )
 
 
@@ -1917,27 +1539,13 @@ def bmp_stats(binary_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (see :func:`_lum_frame_stats`)."""
     from n2khab_mhq_data_spark.llmdata.bmp import decode_bmp
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            stats = [decode_bmp(bytes(r)) for r in pdf["payload"]]
-            ws, hs, means, mxs, wsums = zip(
-                *(_lum_frame_stats(img) for img in stats)
-            ) if stats else ((),) * 5
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "kind": pdf["kind"],
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "mean_lum": pd.Series(means, dtype="float64"),
-                    "max_lum": pd.Series(mxs, dtype="int32"),
-                    "wsum": pd.Series(wsums, dtype="int64"),
-                }
-            )
-
     idt = binary_df.schema[id_col].dataType.simpleString()
-    return binary_df.mapInPandas(
-        op,
+    return _map_rows(
+        binary_df,
+        (id_col, "kind", "payload"),
+        lambda did, kind, raw: [
+            (did, kind, *_lum_frame_stats(decode_bmp(bytes(raw))))
+        ],
         f"{id_col} {idt}, kind string, width int, height int,"
         " mean_lum double, max_lum int, wsum long",
     )
@@ -1956,42 +1564,29 @@ def gif_disposal_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     a past disposal-3 patch contributes NOTHING, and the current frame
     always draws — so the full GCE disposal state machine is
     oracle-checked, not just pytest-pinned."""
-    import numpy as np
-
     from n2khab_mhq_data_spark.llmdata.gif import encode_gif_frames
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                np_ = 3 + did % 2
-                i = np.arange(8)[:, None]
-                j = np.arange(12)[None, :]
-                base = ((did * 17 + 5 * i + 9 * j) % 256).astype(np.uint8)
-                frames = [base]
-                offsets = [(0, 0)]
-                disposals = [1]
-                for g in range(1, np_ + 1):
-                    v = (did * 29 + 31 * g) % 256
-                    frames.append(np.full((3, 4), v, dtype=np.uint8))
-                    offsets.append((2 * (g % 2), 4 * (g % 3)))
-                    disposals.append(1 + (g - 1) % 3)
-                payloads.append(
-                    encode_gif_frames(
-                        frames,
-                        [2 + f for f in range(np_ + 1)],
-                        canvas=(8, 12),
-                        offsets=offsets,
-                        disposals=disposals,
-                    )
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+    def encode(did: int) -> bytes:
+        n_patches = 3 + did % 2
+        i = np.arange(8)[:, None]
+        j = np.arange(12)[None, :]
+        frames = [((did * 17 + 5 * i + 9 * j) % 256).astype(np.uint8)]
+        offsets = [(0, 0)]
+        disposals = [1]
+        for g in range(1, n_patches + 1):
+            v = (did * 29 + 31 * g) % 256
+            frames.append(np.full((3, 4), v, dtype=np.uint8))
+            offsets.append((2 * (g % 2), 4 * (g % 3)))
+            disposals.append(1 + (g - 1) % 3)
+        return encode_gif_frames(
+            frames,
+            [2 + f for f in range(n_patches + 1)],
+            canvas=(8, 12),
+            offsets=offsets,
+            disposals=disposals,
+        )
 
-    idt = df.schema[id_col].dataType.simpleString()
-    return _spread_ids(df, id_col).mapInPandas(
-        op, f"{id_col} {idt}, payload binary"
-    )
+    return _payloads(df, id_col, encode)
 
 
 def gif_disposal_stats(
@@ -2003,36 +1598,17 @@ def gif_disposal_stats(
     :func:`_lum_frame_stats`)."""
     from n2khab_mhq_data_spark.llmdata.gif import decode_gif_frames
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fidx, nfs, dls, means, mxs, wsums = (
-                [], [], [], [], [], [], [],
-            )
-            for did, raw in zip(pdf[id_col], pdf["payload"]):
-                delays, frames = decode_gif_frames(bytes(raw))
-                for f, (d, img) in enumerate(zip(delays, frames)):
-                    _w, _h, mean, mx, wsum = _lum_frame_stats(img)
-                    ids.append(did)
-                    fidx.append(f)
-                    nfs.append(len(frames))
-                    dls.append(d)
-                    means.append(mean)
-                    mxs.append(mx)
-                    wsums.append(wsum)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(fidx, dtype="int32"),
-                    "n_frames": pd.Series(nfs, dtype="int32"),
-                    "delay_cs": pd.Series(dls, dtype="int32"),
-                    "mean_v": pd.Series(means, dtype="float64"),
-                    "max_v": pd.Series(mxs, dtype="int32"),
-                    "wsum": pd.Series(wsums, dtype="int64"),
-                }
-            )
+    def row(did, raw):
+        delays, frames = decode_gif_frames(bytes(raw))
+        return [
+            (did, f, len(frames), d, *_lum_frame_stats(img)[2:])
+            for f, (d, img) in enumerate(zip(delays, frames))
+        ]
 
-    return binary_df.mapInPandas(
-        op,
+    return _map_rows(
+        binary_df,
+        (id_col, "payload"),
+        row,
         f"{id_col} long, frame_idx int, n_frames int, delay_cs int,"
         " mean_v double, max_v int, wsum long",
     )
@@ -2049,39 +1625,25 @@ def bmp_rle_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     packing all round-trip with SQL-derivable luminance (absolute mode
     and delta skips are decoder-side features pinned by hand-built
     streams in tests)."""
-    import numpy as np
-
     from n2khab_mhq_data_spark.llmdata.bmp import encode_bmp_rle
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, kinds, payloads = [], [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                h, w = 4 + did % 4, 6 + did % 5
-                i = np.arange(h)[:, None]
-                j = np.arange(w)[None, :]
-                pal = [(149 * k + did) % 256 for k in range(256)]
-                idx8 = ((did * 13 + 5 * i + 3 * (j // 3)) % 256).astype(
-                    np.uint8
-                )
-                ids.append(did)
-                kinds.append("rle8")
-                payloads.append(encode_bmp_rle(idx8, pal, bits=8))
-                idx4 = ((did + 2 * i + j // 2) % 16).astype(np.uint8)
-                ids.append(did)
-                kinds.append("rle4")
-                payloads.append(encode_bmp_rle(idx4, pal, bits=4))
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "kind": kinds,
-                    "payload": payloads,
-                }
-            )
+    def row(did):
+        did = int(did)
+        i = np.arange(4 + did % 4)[:, None]
+        j = np.arange(6 + did % 5)[None, :]
+        pal = [(149 * k + did) % 256 for k in range(256)]
+        idx8 = ((did * 13 + 5 * i + 3 * (j // 3)) % 256).astype(np.uint8)
+        idx4 = ((did + 2 * i + j // 2) % 16).astype(np.uint8)
+        return [
+            (did, "rle8", encode_bmp_rle(idx8, pal, bits=8)),
+            (did, "rle4", encode_bmp_rle(idx4, pal, bits=4)),
+        ]
 
-    return _spread_ids(df, id_col).mapInPandas(
-        op, f"{id_col} long, kind string, payload binary"
+    return _map_rows(
+        _spread_ids(df, id_col),
+        (id_col,),
+        row,
+        f"{id_col} long, kind string, payload binary",
     )
 
 
@@ -2093,24 +1655,14 @@ def adpcm_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     stateful IMA recursion, which the DuckDB oracle does with a
     recursive CTE (the first genuinely sequential-decode oracle in the
     suite)."""
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                n = 32 + 2 * (did % 8)
-                nibs = [(did * 7 + 3 * k) % 16 for k in range(n)]
-                payloads.append(
-                    encode_wav_adpcm(
-                        nibs, ((did * 97) % 4096) - 2048, did % 89, 8000
-                    )
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
 
-    idt = df.schema[id_col].dataType.simpleString()
-    return _spread_ids(df, id_col).mapInPandas(
-        op, f"{id_col} {idt}, payload binary"
-    )
+    def encode(did: int) -> bytes:
+        nibs = [(did * 7 + 3 * k) % 16 for k in range(32 + 2 * (did % 8))]
+        return encode_wav_adpcm(
+            nibs, ((did * 97) % 4096) - 2048, did % 89, 8000
+        )
+
+    return _payloads(df, id_col, encode)
 
 
 def adpcm_stats(binary_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2119,63 +1671,45 @@ def adpcm_stats(binary_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     payload — last_pcm is the maximally state-sensitive statistic (one
     wrong step anywhere in the recursion lands on a different final
     predictor), sums compare on the exact integer grid."""
-    import numpy as np
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rates, ns, peak, s, last = [], [], [], [], []
-            for raw in pdf["payload"]:
-                rate, pcm = decode_wav(bytes(raw))
-                x = pcm.astype(np.int64)
-                rates.append(rate)
-                ns.append(len(pcm))
-                peak.append(int(np.abs(x).max()))
-                s.append(int(x.sum()))
-                last.append(int(x[-1]))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "sample_rate": pd.Series(rates, dtype="int32"),
-                    "n_samples": pd.Series(ns, dtype="int64"),
-                    "peak": pd.Series(peak, dtype="int64"),
-                    "sum_pcm": pd.Series(s, dtype="int64"),
-                    "last_pcm": pd.Series(last, dtype="int64"),
-                }
-            )
+    def row(did, raw):
+        rate, pcm = decode_wav(bytes(raw))
+        x = pcm.astype(np.int64)
+        return [(
+            did, rate, len(pcm), int(np.abs(x).max()), int(x.sum()),
+            int(x[-1]),
+        )]
 
     idt = binary_df.schema[id_col].dataType.simpleString()
-    return binary_df.mapInPandas(
-        op,
+    return _map_rows(
+        binary_df,
+        (id_col, "payload"),
+        row,
         f"{id_col} {idt}, sample_rate int, n_samples long, peak long,"
         " sum_pcm long, last_pcm long",
     )
 
 
 def png_interlace_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """REAL Adam7-interlaced PNG payloads (r11): per document one
+    """REAL Adam7-interlaced PNG payloads: per document one
     grayscale PNG on a (9 + id%8) x (11 + id%9) grid — large enough
     that all SEVEN passes transmit rows — with
     v(i, j) = (id*13 + 7i + 3j) mod 256. Interlace scatters pixels
     across passes, so only the position-weighted checksum proves the
     de-interlace reassembly (mean/max are placement-invariant)."""
-    import numpy as np
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                h, w = 9 + did % 8, 11 + did % 9
-                i = np.arange(h)[:, None]
-                j = np.arange(w)[None, :]
-                img = ((did * 13 + 7 * i + 3 * j) % 256).astype(np.uint8)
-                payloads.append(encode_png(img, interlace=True))
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads}
-            )
+    def row(did):
+        k = int(did)
+        i = np.arange(9 + k % 8)[:, None]
+        j = np.arange(11 + k % 9)[None, :]
+        img = ((k * 13 + 7 * i + 3 * j) % 256).astype(np.uint8)
+        return [(did, encode_png(img, interlace=True))]
 
-    return _spread_ids(df, id_col).mapInPandas(
-        op, f"{id_col} long, payload binary"
+    return _map_rows(
+        _spread_ids(df, id_col),
+        (id_col,),
+        row,
+        f"{id_col} long, payload binary",
     )
 
 
@@ -2184,27 +1718,11 @@ def png_interlace_stats(
 ) -> DataFrame:
     """Decode Adam7 PNGs through the real decoder and emit the shared
     luminance stats (see :func:`_lum_frame_stats`)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            imgs = [decode_png(bytes(r)) for r in pdf["payload"]]
-            ws, hs, means, mxs, wsums = zip(
-                *(_lum_frame_stats(img) for img in imgs)
-            ) if imgs else ((),) * 5
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "mean_lum": pd.Series(means, dtype="float64"),
-                    "max_lum": pd.Series(mxs, dtype="int32"),
-                    "wsum": pd.Series(wsums, dtype="int64"),
-                }
-            )
-
     idt = binary_df.schema[id_col].dataType.simpleString()
-    return binary_df.mapInPandas(
-        op,
+    return _map_rows(
+        binary_df,
+        (id_col, "payload"),
+        lambda did, raw: [(did, *_lum_frame_stats(decode_png(bytes(raw))))],
         f"{id_col} {idt}, width int, height int,"
         " mean_lum double, max_lum int, wsum long",
     )
@@ -2213,7 +1731,7 @@ def png_interlace_stats(
 def tiff_payloads(
     df: DataFrame, id_col: str = "doc_id", packbits: bool = False
 ) -> DataFrame:
-    """REAL baseline-TIFF payloads (llmdata/tiff.py, r11): per document
+    """REAL baseline-TIFF payloads (llmdata/tiff.py): per document
     TWO files on a (3 + id%5) x (5 + id%6) grid. Uncompressed mode:
     kind 'ii_strips' is little-endian with rows_per_strip=2
     (multi-strip walk) and kind 'mm_single' is big-endian in one strip,
@@ -2221,49 +1739,31 @@ def tiff_payloads(
     two kinds but run-friendly content v(i, j) = (id*19 + 3i + j div 3)
     mod 256 (runs of 3 along each row) compressed per strip with the
     TIFF 6.0 PackBits RLE."""
-    import numpy as np
-
     from n2khab_mhq_data_spark.llmdata.tiff import encode_tiff
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, kinds, payloads = [], [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                h, w = 3 + did % 5, 5 + did % 6
-                i = np.arange(h)[:, None]
-                j = np.arange(w)[None, :]
-                if packbits:
-                    img = ((did * 19 + 3 * i + j // 3) % 256).astype(
-                        np.uint8
-                    )
-                else:
-                    img = ((did * 7 + 5 * i + 11 * j) % 256).astype(
-                        np.uint8
-                    )
-                ids.append(did)
-                kinds.append("ii_strips")
-                payloads.append(
-                    encode_tiff(
-                        img, byte_order="<", rows_per_strip=2,
-                        packbits=packbits,
-                    )
-                )
-                ids.append(did)
-                kinds.append("mm_single")
-                payloads.append(
-                    encode_tiff(img, byte_order=">", packbits=packbits)
-                )
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "kind": kinds,
-                    "payload": payloads,
-                }
-            )
+    def row(did):
+        did = int(did)
+        i = np.arange(3 + did % 5)[:, None]
+        j = np.arange(5 + did % 6)[None, :]
+        if packbits:
+            img = (did * 19 + 3 * i + j // 3) % 256
+        else:
+            img = (did * 7 + 5 * i + 11 * j) % 256
+        img = img.astype(np.uint8)
+        return [
+            (did, "ii_strips", encode_tiff(
+                img, byte_order="<", rows_per_strip=2, packbits=packbits
+            )),
+            (did, "mm_single", encode_tiff(
+                img, byte_order=">", packbits=packbits
+            )),
+        ]
 
-    return _spread_ids(df, id_col).mapInPandas(
-        op, f"{id_col} long, kind string, payload binary"
+    return _map_rows(
+        _spread_ids(df, id_col),
+        (id_col,),
+        row,
+        f"{id_col} long, kind string, payload binary",
     )
 
 
@@ -2273,27 +1773,13 @@ def tiff_stats(binary_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     sample value, no luminance transform)."""
     from n2khab_mhq_data_spark.llmdata.tiff import decode_tiff
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            imgs = [decode_tiff(bytes(r)) for r in pdf["payload"]]
-            ws, hs, means, mxs, wsums = zip(
-                *(_lum_frame_stats(img) for img in imgs)
-            ) if imgs else ((),) * 5
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "kind": pdf["kind"],
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "mean_lum": pd.Series(means, dtype="float64"),
-                    "max_lum": pd.Series(mxs, dtype="int32"),
-                    "wsum": pd.Series(wsums, dtype="int64"),
-                }
-            )
-
     idt = binary_df.schema[id_col].dataType.simpleString()
-    return binary_df.mapInPandas(
-        op,
+    return _map_rows(
+        binary_df,
+        (id_col, "kind", "payload"),
+        lambda did, kind, raw: [
+            (did, kind, *_lum_frame_stats(decode_tiff(bytes(raw))))
+        ],
         f"{id_col} {idt}, kind string, width int, height int,"
         " mean_lum double, max_lum int, wsum long",
     )

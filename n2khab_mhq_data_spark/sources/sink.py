@@ -353,27 +353,6 @@ def read_vc_meta(yml_path: str) -> TableSpec:
     return TableSpec(name, cols, sorting=sorting)
 
 
-def write_published(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str],
-    sort_keys: list[str] | None = None,
-) -> None:
-    """Partitioned parquet store for published tables — the 100 TB layout.
-
-    The reference's published tables are keyed by lineage dimensions
-    (``db``, ``mon_cycle``, survey; SURVEY.md §4 'partition pruning'):
-    writing them hive-partitioned means any downstream filter on those
-    columns prunes whole directories at plan time (PartitionFilters in the
-    scan) instead of reading 100 TB to discard 99%. Within each partition,
-    rows are sorted by ``sort_keys`` so parquet min/max row-group stats
-    also prune within files."""
-    out = df.repartition(*[F.col(c) for c in partition_by])
-    if sort_keys:
-        out = out.sortWithinPartitions(*partition_by, *sort_keys)
-    out.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-
-
 def write_csv2(
     df: DataFrame,
     name: str,
@@ -400,135 +379,3 @@ def write_csv2(
     data_hash = _merge_parts(ordered, root, name, header, ";", "csv")
     return {"name": name, "data_hash": data_hash, "sorting": keys}
 
-
-def compact_published(
-    spark,
-    path: str,
-    partition_by: list[str],
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_keys: list[str] | None = None,
-) -> dict:
-    """Small-files compaction for the published store — the maintenance
-    op every incremental-append layout (K10 merge) eventually needs:
-    repeated appends leave hundreds of tiny parquet files per partition,
-    and at 100 TB the scan's task-per-file overhead and NameNode/listing
-    pressure dominate.
-
-    Reads the store, re-buckets EACH hive partition to
-    ``ceil(partition_bytes / target_file_bytes)`` output files from its
-    OWN on-disk footprint (a broadcast per-partition bucket-count dim,
-    so a fat partition splits across writers while small partitions
-    collapse to one file — a single global bucket count would fragment
-    every small partition by the fattest one's count), restores the
-    in-file sort (row-group min/max pruning survives compaction), and
-    swaps the directory (write to sibling tmp, two renames).
-
-    Crash-safe to RE-RUN, including from a crash BETWEEN the two
-    renames: on entry, if the live path is missing but the ``.old``
-    sibling exists, the old store is RESTORED (renamed back) before
-    anything else — never deleted — and only then are stale tmp/old
-    dirs cleared. All directory walking and swapping goes through the
-    Hadoop FileSystem API, so the op works against HDFS/S3A stores, not
-    just the driver's local disk. Returns before/after file counts so
-    operators can alert on ineffective runs."""
-    import math
-    import urllib.parse
-
-    from pyspark.sql import functions as F  # noqa: F811
-
-    hpath = spark._jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    live_p = hpath(path.rstrip("/"))
-    tmp_p = hpath(path.rstrip("/") + ".__compact_tmp__")
-    old_p = hpath(path.rstrip("/") + ".__compact_old__")
-    # recover a crash between the renames FIRST: old holds the only
-    # surviving copy of the data — restore it, never delete it
-    if not fs.exists(live_p) and fs.exists(old_p):
-        fs.rename(old_p, live_p)
-    for stale in (tmp_p, old_p):
-        if fs.exists(stale):
-            fs.delete(stale, True)
-
-    base = fs.makeQualified(live_p).toString().rstrip("/")
-
-    def parquet_files() -> list[tuple[str, int]]:
-        # (parent dir relative to the store root, bytes) per data file
-        out = []
-        it = fs.listFiles(live_p, True)
-        while it.hasNext():
-            st = it.next()
-            name = st.getPath().getName()
-            if name.endswith(".parquet") and not name.startswith("."):
-                parent = st.getPath().getParent().toString()
-                rel = parent[len(base):].strip("/")
-                out.append((rel, int(st.getLen())))
-        return out
-
-    files = parquet_files()
-    before = len(files)
-    df = spark.read.parquet(path)
-    # per-partition bucket counts from the hive dir sizes (keys parsed
-    # from the "col=value" path segments; hive-escaped values unquoted)
-    sizes: dict[str, int] = {}
-    for rel, b in files:
-        sizes[rel] = sizes.get(rel, 0) + b
-    dim_rows = []
-    for rel, b in sizes.items():
-        kv = dict(
-            seg.split("=", 1) for seg in rel.split("/") if "=" in seg
-        )
-        if len(kv) != len(partition_by):
-            continue
-        dim_rows.append(
-            tuple(urllib.parse.unquote(kv[c]) for c in partition_by)
-            + (max(1, math.ceil(b / target_file_bytes)),)
-        )
-    key_cols = [f"__k_{c}" for c in partition_by]
-    bdf = spark.createDataFrame(
-        dim_rows or [tuple("" for _ in partition_by) + (1,)],
-        ", ".join(f"{k} string" for k in key_cols) + ", __nb int",
-    )
-    # NULL partition values land on disk as __HIVE_DEFAULT_PARTITION__;
-    # match them explicitly or a fat null partition silently falls back
-    # to 1 bucket (one giant file / straggler task)
-    cond = [
-        F.coalesce(df[c].cast("string"),
-                   F.lit("__HIVE_DEFAULT_PARTITION__")) == bdf[k]
-        for c, k in zip(partition_by, key_cols)
-    ]
-    joined = df.join(F.broadcast(bdf), cond, "left")
-    bucket = F.pmod(
-        F.xxhash64(*[df[c] for c in df.columns]),
-        F.coalesce(F.col("__nb"), F.lit(1)),
-    )
-    out = joined.select(
-        *[df[c] for c in df.columns], bucket.alias("__b")
-    ).repartition(*[F.col(c) for c in partition_by], F.col("__b"))
-    if sort_keys:
-        out = out.sortWithinPartitions(*partition_by, *sort_keys)
-    # AQE partition coalescing would merge the buckets right back (it
-    # targets the advisory size, not ours) — this op IS the sizing
-    # policy, so pin the exact bucket layout for the write only
-    coalesce_conf = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = spark.conf.get(coalesce_conf, "true")
-    spark.conf.set(coalesce_conf, "false")
-    try:
-        out.drop("__b").write.mode("overwrite").partitionBy(
-            *partition_by
-        ).parquet(tmp_p.toString())
-    finally:
-        spark.conf.set(coalesce_conf, prev)
-    # Hadoop FileSystem.rename signals failure by returning False (unlike
-    # os.rename) — check each step and never delete old_p unless the new
-    # live directory verifiably exists, or a failed swap would destroy the
-    # only surviving copy of the published data.
-    if not fs.rename(live_p, old_p):
-        raise IOError(f"compact_published: rename {live_p} -> {old_p} failed")
-    if not fs.rename(tmp_p, live_p):
-        # roll back so the table stays readable at its published path
-        fs.rename(old_p, live_p)
-        raise IOError(f"compact_published: rename {tmp_p} -> {live_p} failed")
-    if fs.exists(live_p):
-        fs.delete(old_p, True)
-    after = len(parquet_files())
-    return {"files_before": before, "files_after": after}

@@ -687,6 +687,69 @@ def test_grouped_payload_memo_is_byte_identical(spark):
         assert got[did] == encode_png(img), did
 
 
+def test_codec_wrappers_keep_schema_and_fanout(spark):
+    """Every codec wrapper maps rows through one mapInPandas primitive:
+    an empty input still yields the declared DDL schema (Arrow casts the
+    plain row values, no per-column pandas dtypes), and a fan-out
+    generator emits one row per returned tuple."""
+    from n2khab_mhq_data_spark.llmdata.multimodal import (
+        bmp_payloads,
+        bmp_stats,
+        image_stats,
+        png_payloads,
+    )
+
+    docs = spark.range(6).select(F.col("id").alias("doc_id"))
+    empty = docs.filter("doc_id < 0")
+    payloads = png_payloads(empty)
+    stats = image_stats(payloads)
+    assert payloads.collect() == [] and stats.collect() == []
+    assert payloads.schema.simpleString() == (
+        "struct<doc_id:bigint,payload:binary>"
+    )
+    assert stats.schema.simpleString() == (
+        "struct<doc_id:bigint,width:int,height:int,n_px:bigint,"
+        "mean_luma:double,max_luma:int>"
+    )
+
+    fanned = bmp_payloads(docs)
+    assert fanned.schema.simpleString() == (
+        "struct<doc_id:bigint,kind:string,payload:binary>"
+    )
+    assert sorted((r.doc_id, r.kind) for r in fanned.collect()) == [
+        (i, k) for i in range(6) for k in ("bgr24", "pal8")
+    ]
+    assert len(bmp_stats(fanned).collect()) == 12
+
+
+def test_truncated_payloads_fail_the_spark_action(spark):
+    """A malformed binary payload must fail the Spark action with the
+    decoder's own ValueError: no row comes back and nothing is
+    swallowed, even when the batch also holds a valid payload."""
+    from pyspark.errors import PythonException
+
+    from n2khab_mhq_data_spark.llmdata.jpeg import encode_jpeg
+    from n2khab_mhq_data_spark.llmdata.multimodal import (
+        encode_png,
+        image_stats,
+        jpeg_stats,
+    )
+
+    img = (np.arange(256).reshape(16, 16) % 256).astype(np.uint8)
+    jpg, png = encode_jpeg(img), encode_png(img)
+    cases = [
+        (jpeg_stats, jpg, jpg[:-3], "JPEG entropy stream truncated"),
+        (image_stats, png, png[:12], "PNG missing IHDR"),
+    ]
+    for stats, good, truncated, message in cases:
+        df = spark.createDataFrame(
+            [(1, good), (2, truncated)], "doc_id long, payload binary"
+        )
+        with pytest.raises(PythonException) as err:
+            stats(df).collect()
+        assert f"ValueError: {message}" in str(err.value)
+
+
 def test_audio_fingerprint_groups_planted_duplicates(spark):
     from pyspark.sql import functions as F
 

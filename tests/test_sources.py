@@ -116,37 +116,6 @@ def test_read_csv2_malformed_yields_na(spark, tmp_path):
     assert out["z"] == (None, 3.5)      # malformed int -> NA
 
 
-def test_write_published_partition_pruning(spark, tmp_path):
-    """The partitioned store must let Catalyst prune partitions at plan
-    time — asserted on the scan's PartitionFilters, not just the result."""
-    from n2khab_mhq_data_spark.sources.sink import write_published
-
-    df = spark.createDataFrame(
-        [(1, 1, "a"), (2, 1, "b"), (3, 2, "c"), (4, 2, "d")],
-        "plot_id int, mon_cycle int, v string",
-    )
-    path = str(tmp_path / "pub")
-    write_published(df, path, ["mon_cycle"], ["plot_id"])
-
-    back = spark.read.parquet(path).filter(F.col("mon_cycle") == 2)
-    assert {r.plot_id for r in back.collect()} == {3, 4}
-
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        back.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan
-    # the pruning predicate must reach the scan node
-    assert any(
-        "mon_cycle" in line
-        for line in plan.splitlines()
-        if "PartitionFilters" in line
-    )
-
-
 def _derby_seed(spark, db_path: str) -> None:
     """Create an embedded Derby DB (the JDBC stand-in for the reference's
     Firebird/Access/SQL Server sources — same java.sql surface) with a
@@ -461,135 +430,6 @@ def test_write_csv2_parallel_deterministic(spark, tmp_path):
     assert lines[0] == "id;v;s"
     assert lines[1] == "1;1,25;x"
     assert lines[3] == "3;NA;NA"
-
-
-def test_compact_published_reduces_files(spark, tmp_path):
-    """Compaction: a store fragmented by many tiny appends collapses to
-    ~1 file per partition, preserves every row, keeps the hive layout
-    (partition pruning still works), and swaps atomically."""
-    from n2khab_mhq_data_spark.sources.sink import (
-        compact_published,
-        write_published,
-    )
-
-    store = str(tmp_path / "store")
-    df = spark.createDataFrame(
-        [(c, i, float(i)) for c in (1, 2) for i in range(50)],
-        "mon_cycle int, plot_id int, v double",
-    )
-    write_published(df, store, ["mon_cycle"], sort_keys=["plot_id"])
-    # fragment it: 5 tiny appends per cycle (the K10/streaming pattern)
-    for k in range(5):
-        spark.createDataFrame(
-            [(c, 100 + k * 10 + i, 1.0) for c in (1, 2) for i in range(3)],
-            "mon_cycle int, plot_id int, v double",
-        ).repartition(4).write.mode("append").partitionBy(
-            "mon_cycle"
-        ).parquet(store)
-
-    before_rows = spark.read.parquet(store).count()
-    stats = compact_published(
-        spark, store, ["mon_cycle"], target_file_bytes=1 << 30,
-        sort_keys=["plot_id"],
-    )
-    assert stats["files_after"] < stats["files_before"]
-    assert stats["files_after"] <= 2  # one per mon_cycle at this size
-    after = spark.read.parquet(store)
-    assert after.count() == before_rows
-
-    # per-partition bucketing: with a target small enough to split the
-    # fat partition, the small partition must STILL collapse to one file
-    # (a global bucket count would fragment it by the fat one's count)
-    store2 = str(tmp_path / "store2")
-    fat = [(1, i, "x" * 200) for i in range(4000)]
-    thin = [(2, i, "y") for i in range(5)]
-    spark.createDataFrame(
-        fat + thin, "mon_cycle int, plot_id int, v string"
-    ).repartition(8).write.partitionBy("mon_cycle").parquet(store2)
-    fat_bytes = sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _, fs in os.walk(os.path.join(store2, "mon_cycle=1"))
-        for f in fs if f.endswith(".parquet")
-    )
-    compact_published(
-        spark, store2, ["mon_cycle"], target_file_bytes=fat_bytes // 3
-    )
-    n_files = lambda d: sum(  # noqa: E731
-        1 for _r, _d, fs in os.walk(os.path.join(store2, d))
-        for f in fs if f.endswith(".parquet")
-    )
-    assert n_files("mon_cycle=2") == 1
-    assert n_files("mon_cycle=1") >= 2
-    assert spark.read.parquet(store2).count() == len(fat) + len(thin)
-    # partition pruning still applies on the compacted layout
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        after.filter(F.col("mon_cycle") == 1).explain()
-    assert "PartitionFilters" in buf.getvalue()
-
-
-def test_compact_published_recovers_crash_between_renames(
-    spark, tmp_path
-):
-    """A crash after `path -> .old` but before `.tmp -> path` leaves the
-    ONLY copy of the data in .old; a documented re-run must RESTORE it,
-    not delete it (the old cleanup-up-front rmtree'd both copies)."""
-    import shutil
-
-    from n2khab_mhq_data_spark.sources.sink import (
-        compact_published,
-        write_published,
-    )
-
-    store = str(tmp_path / "store")
-    df = spark.createDataFrame(
-        [(c, i, float(i)) for c in (1, 2) for i in range(20)],
-        "mon_cycle int, plot_id int, v double",
-    )
-    write_published(df, store, ["mon_cycle"], sort_keys=["plot_id"])
-    # simulate the crash window: live dir moved aside, tmp half-written
-    os.rename(store, store + ".__compact_old__")
-    os.makedirs(store + ".__compact_tmp__")
-    stats = compact_published(spark, store, ["mon_cycle"])
-    assert spark.read.parquet(store).count() == 40  # data survived
-    assert stats["files_after"] >= 1
-    assert not os.path.exists(store + ".__compact_old__")
-    assert not os.path.exists(store + ".__compact_tmp__")
-    shutil.rmtree(store)
-
-
-def test_compact_published_null_partition_buckets(spark, tmp_path):
-    """NULL partition values land as __HIVE_DEFAULT_PARTITION__ on disk;
-    the bucket-count join must match them so the null partition is
-    sized from its own footprint (split when fat), not defaulted to
-    one bucket."""
-    from n2khab_mhq_data_spark.sources.sink import compact_published
-
-    store = str(tmp_path / "store")
-    rows = [(None, i, "x" * 200) for i in range(4000)] + [
-        (2, i, "y") for i in range(5)
-    ]
-    spark.createDataFrame(
-        rows, "mon_cycle int, plot_id int, v string"
-    ).repartition(8).write.partitionBy("mon_cycle").parquet(store)
-    null_dir = os.path.join(store, "mon_cycle=__HIVE_DEFAULT_PARTITION__")
-    null_bytes = sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _, fs in os.walk(null_dir)
-        for f in fs if f.endswith(".parquet")
-    )
-    compact_published(
-        spark, store, ["mon_cycle"], target_file_bytes=null_bytes // 3
-    )
-    n = sum(
-        1 for _r, _d, fs in os.walk(null_dir)
-        for f in fs if f.endswith(".parquet")
-    )
-    assert n >= 2, f"null partition collapsed to {n} file(s)"
-    assert spark.read.parquet(store).count() == 4005
 
 
 def test_snapshot_store_time_travel_and_isolation(spark, tmp_path):

@@ -7,6 +7,12 @@ order-insensitive value comparison (columns sorted by name, rows sorted,
 floats compared exactly after both engines' own rounding — mirroring a
 value-hash check as closely as we can locally).
 
+The value comparison stringifies, so it cannot see a type mismatch — yet
+the driver's value-hash is type-sensitive (DuckDB integer ``sum()`` returns
+HUGEINT where Spark returns BIGINT: identical values, different hash). Each
+output column's type pairing is therefore checked too, and a hash-risky
+one fails the query (see ``risky``).
+
 Usage: python tools/check.py [sf_dir] [query_name ...]
 """
 
@@ -36,6 +42,39 @@ def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
             path = f"{path}/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     return con
+
+
+# DuckDB type name -> the Spark dtypes the driver's hash agrees with
+_EQUIV = {
+    "BIGINT": {"bigint"},
+    "INTEGER": {"int", "bigint"},
+    "SMALLINT": {"smallint", "int", "bigint"},
+    "TINYINT": {"tinyint", "smallint", "int", "bigint"},
+    "DOUBLE": {"double"},
+    "FLOAT": {"float", "double"},
+    "VARCHAR": {"string"},
+    "BOOLEAN": {"boolean"},
+    "DATE": {"date"},
+    "TIMESTAMP": {"timestamp", "timestamp_ntz"},
+    "TIMESTAMP WITH TIME ZONE": {"timestamp"},
+    "BLOB": {"binary"},
+}
+
+
+def risky(duck_type: str, spark_type: str) -> bool:
+    """True when the driver's type-sensitive hash may reject the pairing:
+    DuckDB HUGEINT / INT128 / DECIMAL against anything (CAST the oracle),
+    scalar against array, or a pairing outside ``_EQUIV``."""
+    d = duck_type.upper()
+    if d.startswith(("DECIMAL", "HUGEINT", "INT128", "UHUGEINT")):
+        return True
+    d_is_arr = d.endswith("[]")
+    s_is_arr = spark_type.startswith("array<") and spark_type.endswith(">")
+    if d_is_arr != s_is_arr:
+        return True  # scalar vs array can never hash-match
+    if d_is_arr:
+        return risky(d[:-2], spark_type[len("array<") : -1])
+    return spark_type not in _EQUIV.get(d, {spark_type})
 
 
 def normalize(rows: list[tuple], colnames: list[str]) -> list[tuple]:
@@ -99,6 +138,7 @@ def main() -> int:
         try:
             sdf = qs[name](spark, sf_dir)
             scols = sdf.columns
+            stypes = dict(sdf.dtypes)
             srows = [tuple(r) for r in sdf.collect()]
         except Exception:
             print(f"FAIL  {name}: spark error")
@@ -112,6 +152,7 @@ def main() -> int:
         try:
             rel = con.sql(oracles[name])
             dcols = [c for c in rel.columns]
+            dtypes = [str(t) for t in rel.types]
             drows = rel.fetchall()
         except Exception:
             print(f"FAIL  {name}: duckdb error")
@@ -129,6 +170,13 @@ def main() -> int:
             if a != b:
                 diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
                 problems.append(f"values differ; first: {diff}")
+        bad_types = [
+            f"{c}: duck={d} spark={stypes[c]}"
+            for c, d in zip(dcols, dtypes)
+            if c in stypes and risky(d, stypes[c])
+        ]
+        if bad_types:
+            problems.append("types " + " | ".join(bad_types))
         if problems:
             print(f"FAIL  {name}: " + " | ".join(problems))
             failures.append(name)
