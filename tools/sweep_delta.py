@@ -14,7 +14,8 @@ still register) and diffs against the committed baseline
         # changed + a deterministic 12-query rotating sample for round 9
     python tools/sweep_delta.py --run [sf_dir]   # and sweep them via check.py
 
-Plan build only — no execution — so the fingerprint pass costs ~1 min.
+Plan build plus the shared steps and checkpoints each build runs (at
+sf0.001), so the fingerprint pass costs ~2 min.
 The rotating sample guards against drift the fingerprint can't see
 (engine version, data regen, conf changes): over ~25 rounds the rotation
 covers the whole registry.
@@ -42,8 +43,11 @@ SF1_DIR = "/root/repo/.scale/sf1.0"
 
 def _normalize(plan: str) -> str:
     """Renumber exprIds (#123 -> #e0, #e1, ... in first-appearance order)
-    so the fingerprint survives session-dependent id allocation. The RAW
-    analyzed plan is used, NOT Spark's canonicalized() form: canonical-
+    and lambda variables (x_17 -> x_l0, ...: Spark names them from a
+    JVM-wide counter, so the suffix counts the lambdas of every earlier
+    build) so the fingerprint survives session-dependent id allocation
+    and the order the queries are built in. The RAW analyzed plan is
+    used, NOT Spark's canonicalized() form: canonical-
     ization reorders commutative operand chains (multicommutativeop) by
     expression hashCode, which is NOT stable across JVM launches — the
     unrolled 64-term dot products of the ann_* family fingerprinted
@@ -51,31 +55,61 @@ def _normalize(plan: str) -> str:
     import re
 
     ids: dict[str, str] = {}
+    lambdas: dict[str, str] = {}
 
     def sub(m: "re.Match[str]") -> str:
         return ids.setdefault(m.group(0), f"#e{len(ids)}")
 
+    def sub_lambda(m: "re.Match[str]") -> str:
+        return lambdas.setdefault(
+            m.group(0), f"{m.group(1)}_l{len(lambdas)}"
+        )
+
+    plan = re.sub(r"(?<=lambda )(\w+?)_\d+(?=#)", sub_lambda, plan)
     return re.sub(r"#\d+", sub, plan)
 
 
+def _analyzed(df) -> str:
+    return _normalize(df._jdf.queryExecution().analyzed().toString())
+
+
 def fingerprints() -> dict[str, str]:
+    """{query: md5 of its analyzed plan, schema and the analyzed plan of
+    every frame its build checkpoints}. A checkpointed frame shows up
+    downstream only as a ``LogicalRDD``, so without the recorded plans
+    an edit above a checkpoint would leave the fingerprint unchanged.
+    The shared build steps are rebuilt for every query, so each query
+    records its own inputs whatever ran before it."""
+    from n2khab_mhq_data_spark import plans
     from n2khab_mhq_data_spark.session import get_spark
 
     import __spark_entry__ as entry
 
     spark = get_spark(cpus=FP_CPUS)
+    frame_cls = type(spark.range(1))  # the session's concrete DataFrame
+    checkpointed: list[str] = []
+    local_checkpoint = frame_cls.localCheckpoint
+
+    def recording_checkpoint(self, *args, **kwargs):
+        checkpointed.append(_analyzed(self))
+        return local_checkpoint(self, *args, **kwargs)
+
+    frame_cls.localCheckpoint = recording_checkpoint
     fps = {}
-    for name, fn in sorted(entry.queries().items()):
-        try:
-            df = fn(spark, FP_SF_DIR)
-            plan = _normalize(
-                df._jdf.queryExecution().analyzed().toString()
-            )
-            fps[name] = hashlib.md5(
-                (plan + df.schema.json()).encode()
-            ).hexdigest()
-        except Exception as exc:  # a broken build must surface, not vanish
-            fps[name] = f"BUILD_ERROR:{type(exc).__name__}"
+    try:
+        for name, fn in sorted(entry.queries().items()):
+            plans._SHARED_VALUES.clear()
+            checkpointed.clear()
+            try:
+                df = fn(spark, FP_SF_DIR)
+                parts = [_analyzed(df), df.schema.json(), *checkpointed]
+                fps[name] = hashlib.md5(
+                    "\n".join(parts).encode()
+                ).hexdigest()
+            except Exception as exc:  # a broken build must surface
+                fps[name] = f"BUILD_ERROR:{type(exc).__name__}"
+    finally:
+        frame_cls.localCheckpoint = local_checkpoint
     return fps
 
 
