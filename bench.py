@@ -49,12 +49,12 @@ sys.path.insert(0, str(ROOT))
 
 from n2khab_mhq_data_spark.session import get_spark  # noqa: E402
 from perfbench.spans import Tracer, event_log_totals  # noqa: E402
+from tools.make_sf1 import DST as SF1_DIR  # noqa: E402
 from tools.timing import last_span_s, sample, settle  # noqa: E402
 
-# sf1.0 scratch tier (tools/make_sf1.py output): when present, the top-N
-# most expensive sf0.1 queries are re-timed at 10x data so cross-round
-# regressions are caught at the scale where they matter
-SF1_DIR = "/root/repo/.scale/sf1.0"
+# when the sf1.0 scratch tier (tools/make_sf1.py output) is present, the
+# top-N most expensive sf0.1 queries are re-timed at 10x data so
+# cross-round regressions are caught at the scale where they matter
 SF1_TOP_N = 20
 # sf1.0 stand-ins (r7 VERDICT item 6): queries whose sf1.0 cost is
 # measured OUTPUT materialization, not plan waste, are re-timed through
@@ -99,7 +99,8 @@ def _prebuild_memos(
     """Build each registered shared intermediate (``plans.SHARED``) under
     a ``build`` phase and return {name: seconds}. Queries then all run
     against warm values. Every value is materialized as it is built
-    (``localCheckpoint`` or a driver-side collect), so there is no
+    (``localCheckpoint``, a driver-side collect, or a store directory
+    written under the session's Spark temp root), so there is no
     ``exec`` phase to time."""
     from n2khab_mhq_data_spark.plans import SHARED
 

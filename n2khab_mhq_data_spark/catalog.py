@@ -226,9 +226,9 @@ def _nanos_cols(path: str) -> list[str]:
 def parquet_fingerprint(sf_dir: str, table: str) -> tuple:
     """(path, mtime_ns, size) tuple over a source table's parquet
     file(s) — the ONE memo-invalidation key recipe (the schema memo in
-    load(), the ``plans.shared`` build steps and the names of the
-    fingerprinted scratch stores); regenerated data at the same sf_dir
-    must invalidate every one. Tolerates a file vanishing between glob
+    load() and the ``plans.shared`` build steps, including the ones
+    that write a store); regenerated data at the same sf_dir must
+    invalidate every one. Tolerates a file vanishing between glob
     and stat (TOCTOU) by skipping it — the changed listing itself
     already invalidates the key."""
     import glob

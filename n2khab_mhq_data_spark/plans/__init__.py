@@ -71,6 +71,19 @@ def shared(name: str, *tables: str):
     return deco
 
 
+def store_dir(name: str) -> str:
+    """A fresh directory for a ``shared`` step that writes files. It lies
+    under the Spark temp root of the running context, which
+    ``spark.stop()`` deletes, so a store lives no longer than the
+    session that owns its value."""
+    import tempfile
+
+    from pyspark import SparkFiles
+
+    root = SparkFiles.getRootDirectory()
+    return tempfile.mkdtemp(prefix=f"{name}_", dir=root)
+
+
 def _load_modules() -> None:
     # import for registration side effects
     from n2khab_mhq_data_spark.plans import (  # noqa: F401

@@ -6,13 +6,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from n2khab_mhq_data_spark.catalog import load, parquet_fingerprint
+from n2khab_mhq_data_spark.catalog import load
 from n2khab_mhq_data_spark.llmdata.pipeline import (
     hash_split,
     pack_sequences,
     tfidf_topk,
 )
-from n2khab_mhq_data_spark.plans import query, shared
+from n2khab_mhq_data_spark.plans import query, shared, store_dir
 
 
 @query(
@@ -351,82 +351,16 @@ def pipeline_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.select("doc_id", "shuffle_pos")
 
 
-def _table_fingerprint(sf_dir: str, table: str) -> str:
-    """md5 prefix of the table's parquet_fingerprint — the name suffix of
-    every fingerprinted scratch store (regenerated source data
-    invalidates)."""
-    import hashlib
-
-    fp = repr(parquet_fingerprint(sf_dir, table))
-    return hashlib.md5(fp.encode()).hexdigest()[:16]
-
-
-def _scratch_build(path: str, build, require: str | None = None) -> str:
-    """Crash-safe completion semantics for fingerprinted scratch stores:
-    ``build(tmp)`` writes into a sibling tmp dir which is RENAMED into
-    place only when the build function returns — the final directory's
-    existence IS the completion marker. Building directly into ``path``
-    let a mid-build crash (between a snapshot store's two publishes, or
-    mid-Spark-write) cache a half-built store forever under an unchanged
-    fingerprint.
-
-    ``require`` names a relative path that must exist inside a COMPLETE
-    store (snapshot stores pass ``"_manifests"``): a torn directory left
-    by the pre-rename era of this helper — dir exists, no manifest —
-    is detected and rebuilt instead of being treated as complete
-    forever under an unchanged fingerprint.
-
-    Concurrency: the tmp dir carries the builder's pid, so two
-    concurrent builders never rmtree each other's half-built tree, and
-    a lost rename race (``path`` appeared between our check and our
-    rename) is tolerated — the loser discards its tmp and returns the
-    winner's store, which is equivalent by construction (same
-    fingerprint => same deterministic build).
-    """
-    import os
-    import shutil
-
-    def complete(p: str) -> bool:
-        return os.path.isdir(p) and (
-            require is None or os.path.exists(os.path.join(p, require))
-        )
-
-    if complete(path):
-        return path
-    if os.path.isdir(path):
-        shutil.rmtree(path)  # torn legacy dir (pre-rename builds): redo
-    tmp = f"{path}.__building__.{os.getpid()}"
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)  # our own leftover (pid reuse): rebuild
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    try:
-        build(tmp)
-        os.rename(tmp, path)
-    except OSError:
-        if not complete(path):  # not a lost race: surface the failure
-            raise
-    finally:
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp, ignore_errors=True)
-    return path
-
-
+@shared("jsonl_store", "documents")
 def _jsonl_store(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprinted scratch JSONL export of the documents table —
-    rebuilt only when the source parquet changes."""
-    fp = _table_fingerprint(sf_dir, "documents")
+    """JSONL export of the documents table."""
+    from n2khab_mhq_data_spark.sources.jsonl import write_jsonl
 
-    def build(tmp: str) -> None:
-        from n2khab_mhq_data_spark.sources.jsonl import write_jsonl
-
-        write_jsonl(
-            load(spark, sf_dir, "documents"),
-            tmp,
-            order_by=["doc_id"],
-            n_shards=8,
-        )
-
-    return _scratch_build(f"/root/repo/.scale/jsonl/documents_{fp}", build)
+    path = store_dir("jsonl_store")
+    write_jsonl(
+        load(spark, sf_dir, "documents"), path, order_by=["doc_id"], n_shards=8
+    )
+    return path
 
 
 @query(
@@ -1106,26 +1040,18 @@ def pipeline_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@shared("snapshot_store", "customer")
 def _snapshot_store(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per customer-parquet fingerprint) a two-version
-    snapshot store so the AS-OF query has deterministic history:
-    v1 = customers with c_custkey % 3 = 0; v2 = c_custkey % 3 <= 1 —
-    both derivable arithmetically by the oracle."""
+    """A two-version snapshot store so the AS-OF query has deterministic
+    history: v1 = customers with c_custkey % 3 = 0; v2 = c_custkey % 3
+    <= 1 — both derivable arithmetically by the oracle."""
     from n2khab_mhq_data_spark.sources.snapshots import write_snapshot
 
-    fp = _table_fingerprint(sf_dir, "customer")
-
-    def build(tmp: str) -> None:
-        base = load(spark, sf_dir, "customer").select(
-            "c_custkey", "c_nationkey"
-        )
-        write_snapshot(base.filter(F.col("c_custkey") % 3 == 0), tmp)
-        write_snapshot(base.filter(F.col("c_custkey") % 3 <= 1), tmp)
-
-    return _scratch_build(
-        f"/root/repo/.scale/snapshots/customers_{fp}", build,
-        require="_manifests",
-    )
+    path = store_dir("snapshot_store")
+    base = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    write_snapshot(base.filter(F.col("c_custkey") % 3 == 0), path)
+    write_snapshot(base.filter(F.col("c_custkey") % 3 <= 1), path)
+    return path
 
 
 @query(
@@ -1175,6 +1101,7 @@ def s8_snapshot_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     return outs[0].unionByName(outs[1])
 
 
+@shared("merge_store", "customer")
 def _merge_store(spark: SparkSession, sf_dir: str) -> str:
     """Two-version store built with MERGE-publish: v1 = customers with
     c_custkey % 3 = 0 (rev 1); v2 = v1 upserted with a delta that
@@ -1185,35 +1112,22 @@ def _merge_store(spark: SparkSession, sf_dir: str) -> str:
         write_snapshot,
     )
 
-    fp = _table_fingerprint(sf_dir, "customer")
-
-    def build(tmp: str) -> None:
-        base = load(spark, sf_dir, "customer").select(
-            "c_custkey", "c_nationkey"
-        )
-        v1 = base.filter(F.col("c_custkey") % 3 == 0).withColumn(
-            "rev", F.lit(1)
-        )
-        write_snapshot(v1, tmp)
-        updates = base.filter(F.col("c_custkey") % 6 == 0).select(
-            "c_custkey",
-            (F.col("c_nationkey") + 100).alias("c_nationkey"),
-            F.lit(2).alias("rev"),
-        )
-        inserts = base.filter(F.col("c_custkey") % 3 == 1).withColumn(
-            "rev", F.lit(2)
-        )
-        merge_snapshot(
-            tmp,
-            updates.unionByName(inserts),
-            ["c_custkey"],
-            ["rev DESC"],
-        )
-
-    return _scratch_build(
-        f"/root/repo/.scale/snapshots/customers_merge_{fp}", build,
-        require="_manifests",
+    path = store_dir("merge_store")
+    base = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    v1 = base.filter(F.col("c_custkey") % 3 == 0).withColumn("rev", F.lit(1))
+    write_snapshot(v1, path)
+    updates = base.filter(F.col("c_custkey") % 6 == 0).select(
+        "c_custkey",
+        (F.col("c_nationkey") + 100).alias("c_nationkey"),
+        F.lit(2).alias("rev"),
     )
+    inserts = base.filter(F.col("c_custkey") % 3 == 1).withColumn(
+        "rev", F.lit(2)
+    )
+    merge_snapshot(
+        path, updates.unionByName(inserts), ["c_custkey"], ["rev DESC"]
+    )
+    return path
 
 
 @query(
@@ -1280,33 +1194,27 @@ def s8_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return snapshot_diff(spark, path, 1, 2, ["c_custkey"])
 
 
+@shared("optimize_store", "customer")
 def _optimize_store(spark: SparkSession, sf_dir: str) -> str:
     """One-version store (customers with c_custkey % 4 = 0 over many
-    small files) plus its OPTIMIZE/ZORDER-compacted child — built once
-    per customer fingerprint so the version log stays deterministic."""
+    small files) plus its OPTIMIZE/ZORDER-compacted child."""
     from n2khab_mhq_data_spark.sources.snapshots import (
         optimize_snapshot,
         write_snapshot,
     )
 
-    fp = _table_fingerprint(sf_dir, "customer")
-
-    def build(tmp: str) -> None:
-        base = (
-            load(spark, sf_dir, "customer")
-            .filter(F.col("c_custkey") % 4 == 0)
-            .select("c_custkey", "c_nationkey", "c_acctbal")
-            .repartition(16)  # deliberately fragmented pre-compaction
-        )
-        write_snapshot(base, tmp)
-        optimize_snapshot(
-            spark, tmp, n_files=2, zorder_cols=["c_nationkey", "c_custkey"]
-        )
-
-    return _scratch_build(
-        f"/root/repo/.scale/snapshots/customers_opt_{fp}", build,
-        require="_manifests",
+    path = store_dir("optimize_store")
+    base = (
+        load(spark, sf_dir, "customer")
+        .filter(F.col("c_custkey") % 4 == 0)
+        .select("c_custkey", "c_nationkey", "c_acctbal")
+        .repartition(16)  # deliberately fragmented pre-compaction
     )
+    write_snapshot(base, path)
+    optimize_snapshot(
+        spark, path, n_files=2, zorder_cols=["c_nationkey", "c_custkey"]
+    )
+    return path
 
 
 @query(
@@ -1350,23 +1258,19 @@ def s8_snapshot_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return outs[0].unionByName(outs[1])
 
 
+@shared("orc_store", "documents")
 def _orc_store(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprinted scratch ORC export of the documents table —
-    rebuilt only when the source parquet changes (same contract as
-    ``_jsonl_store``)."""
-    fp = _table_fingerprint(sf_dir, "documents")
-
-    def build(tmp: str) -> None:
-        (
-            load(spark, sf_dir, "documents")
-            .repartition(8, "doc_id")
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .option("compression", "zstd")
-            .orc(tmp)
-        )
-
-    return _scratch_build(f"/root/repo/.scale/orc/documents_{fp}", build)
+    """ORC export of the documents table."""
+    path = store_dir("orc_store")
+    (
+        load(spark, sf_dir, "documents")
+        .repartition(8, "doc_id")
+        .sortWithinPartitions("doc_id")
+        .write.mode("overwrite")
+        .option("compression", "zstd")
+        .orc(path)
+    )
+    return path
 
 
 @query(
@@ -1467,24 +1371,20 @@ def s8_snapshot_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@shared("hive_store", "orders")
 def _hive_partitioned_store(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprinted scratch copy of orders hive-partitioned by order
-    month — rebuilt only when the source parquet changes (the
-    _jsonl_store lifecycle)."""
-    fp = _table_fingerprint(sf_dir, "orders")
-
-    def build(tmp: str) -> None:
-        o = load(spark, sf_dir, "orders").withColumn(
-            "o_month", F.date_format("o_orderdate", "yyyy-MM")
-        )
-        (
-            o.repartition("o_month")
-            .write.partitionBy("o_month")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-
-    return _scratch_build(f"/root/repo/.scale/hive/orders_{fp}", build)
+    """A copy of orders hive-partitioned by order month."""
+    path = store_dir("hive_store")
+    o = load(spark, sf_dir, "orders").withColumn(
+        "o_month", F.date_format("o_orderdate", "yyyy-MM")
+    )
+    (
+        o.repartition("o_month")
+        .write.partitionBy("o_month")
+        .mode("overwrite")
+        .parquet(path)
+    )
+    return path
 
 
 @query(
@@ -1605,8 +1505,9 @@ def s15_parquet_footer_stats(
     )
 
 
+@shared("drift_csv_store", "orders")
 def _drift_csv_store(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprinted scratch store simulating SCHEMA DRIFT across CSV
+    """A CSV store simulating SCHEMA DRIFT across CSV
     ingestion batches: batch_a (legacy) carries (o_orderkey,
     o_totalprice) for pre-1995 orders; batch_b adds the
     o_orderpriority column for 1995+ orders — the additive-column
@@ -1615,42 +1516,32 @@ def _drift_csv_store(spark: SparkSession, sf_dir: str) -> str:
     import csv as _csv
     import os
 
-    fp = _table_fingerprint(sf_dir, "orders")
-
-    def build(tmp: str) -> None:
-        rows = (
-            load(spark, sf_dir, "orders")
-            .select(
-                "o_orderkey",
-                F.year("o_orderdate").alias("y"),
-                F.col("o_totalprice").cast("decimal(18,2)").alias("p"),
-                "o_orderpriority",
-            )
-            .orderBy("o_orderkey")
-            .collect()
+    path = store_dir("drift_csv_store")
+    rows = (
+        load(spark, sf_dir, "orders")
+        .select(
+            "o_orderkey",
+            F.year("o_orderdate").alias("y"),
+            F.col("o_totalprice").cast("decimal(18,2)").alias("p"),
+            "o_orderpriority",
         )
-        os.makedirs(tmp, exist_ok=True)
-        with open(os.path.join(tmp, "batch_a.csv"), "w", newline="") as fa:
-            wa = _csv.writer(fa)
-            wa.writerow(["o_orderkey", "o_totalprice"])
-            with open(
-                os.path.join(tmp, "batch_b.csv"), "w", newline=""
-            ) as fb:
-                wb = _csv.writer(fb)
-                wb.writerow(
-                    ["o_orderkey", "o_totalprice", "o_orderpriority"]
-                )
-                for r in rows:
-                    if r["y"] < 1995:
-                        wa.writerow([r["o_orderkey"], r["p"]])
-                    else:
-                        wb.writerow(
-                            [r["o_orderkey"], r["p"], r["o_orderpriority"]]
-                        )
-
-    return _scratch_build(
-        f"/root/repo/.scale/csv_drift/orders_{fp}", build
+        .orderBy("o_orderkey")
+        .collect()
     )
+    with open(os.path.join(path, "batch_a.csv"), "w", newline="") as fa:
+        wa = _csv.writer(fa)
+        wa.writerow(["o_orderkey", "o_totalprice"])
+        with open(os.path.join(path, "batch_b.csv"), "w", newline="") as fb:
+            wb = _csv.writer(fb)
+            wb.writerow(["o_orderkey", "o_totalprice", "o_orderpriority"])
+            for r in rows:
+                if r["y"] < 1995:
+                    wa.writerow([r["o_orderkey"], r["p"]])
+                else:
+                    wb.writerow(
+                        [r["o_orderkey"], r["p"], r["o_orderpriority"]]
+                    )
+    return path
 
 
 @query(
@@ -1766,8 +1657,9 @@ def s17_partition_skew_report(
     )
 
 
+@shared("quarantine_csv_store", "orders")
 def _quarantine_csv_store(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprinted scratch CSV feed with DETERMINISTIC corruption:
+    """A CSV feed with DETERMINISTIC corruption:
     every order whose key is divisible by 97 is written with garbage
     in the price field (unparseable under the declared schema) — the
     malformed-row population a quarantine pipeline must isolate
@@ -1775,31 +1667,25 @@ def _quarantine_csv_store(spark: SparkSession, sf_dir: str) -> str:
     import csv as _csv
     import os
 
-    fp = _table_fingerprint(sf_dir, "orders")
-
-    def build(tmp: str) -> None:
-        rows = (
-            load(spark, sf_dir, "orders")
-            .select(
-                "o_orderkey",
-                F.col("o_totalprice").cast("decimal(18,2)").alias("p"),
-            )
-            .orderBy("o_orderkey")
-            .collect()
+    path = store_dir("quarantine_csv_store")
+    rows = (
+        load(spark, sf_dir, "orders")
+        .select(
+            "o_orderkey",
+            F.col("o_totalprice").cast("decimal(18,2)").alias("p"),
         )
-        os.makedirs(tmp, exist_ok=True)
-        with open(os.path.join(tmp, "feed.csv"), "w", newline="") as f:
-            w = _csv.writer(f)
-            w.writerow(["o_orderkey", "o_totalprice"])
-            for r in rows:
-                if r["o_orderkey"] % 97 == 0:
-                    w.writerow([r["o_orderkey"], "#ERR#"])
-                else:
-                    w.writerow([r["o_orderkey"], r["p"]])
-
-    return _scratch_build(
-        f"/root/repo/.scale/csv_quarantine/orders_{fp}", build
+        .orderBy("o_orderkey")
+        .collect()
     )
+    with open(os.path.join(path, "feed.csv"), "w", newline="") as f:
+        w = _csv.writer(f)
+        w.writerow(["o_orderkey", "o_totalprice"])
+        for r in rows:
+            if r["o_orderkey"] % 97 == 0:
+                w.writerow([r["o_orderkey"], "#ERR#"])
+            else:
+                w.writerow([r["o_orderkey"], r["p"]])
+    return path
 
 
 @query(

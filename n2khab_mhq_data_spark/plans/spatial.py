@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from n2khab_mhq_data_spark.catalog import load
-from n2khab_mhq_data_spark.plans import query
+from n2khab_mhq_data_spark.plans import query, shared, store_dir
 from n2khab_mhq_data_spark.spatial import crs
 from n2khab_mhq_data_spark.spatial.join import (
     point_in_polygon_join,
@@ -551,26 +551,19 @@ def spatial_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@shared("demo_gpkg", "customer")
 def _demo_gpkg(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per customer-parquet fingerprint) a GeoPackage layer
-    with one square-polygon feature per customer — the driver-checkable
-    stand-in for the reference's .gpkg inputs
+    """A GeoPackage layer with one square-polygon feature per customer —
+    the driver-checkable stand-in for the reference's .gpkg inputs
     (data_heide_groot_schietveld.Rmd:32) at a size that forces multiple
     rowid-window tasks. Geometry is integer-arithmetic-exact so the
     DuckDB oracle re-derives the areas from the customer view alone."""
     import os
 
-    from n2khab_mhq_data_spark.plans.pipeline import _table_fingerprint
     from n2khab_mhq_data_spark.spatial.geopackage import (
         write_geopackage_layer,
     )
 
-    fp = _table_fingerprint(sf_dir, "customer")
-    scratch = "/root/repo/.scale/gpkg"
-    os.makedirs(scratch, exist_ok=True)
-    path = os.path.join(scratch, f"plots_{fp}.gpkg")
-    if os.path.exists(path):
-        return path
     keys = [
         int(r.c_custkey)
         for r in load(spark, sf_dir, "customer").select("c_custkey").collect()
@@ -591,13 +584,10 @@ def _demo_gpkg(spark: SparkSession, sf_dir: str) -> str:
         else:
             wkt = f"POLYGON ({sq(cx, cy, s)})"
         rows.append((k, f"c{k % 7}", wkt))
-    tmp = path + ".tmp"
-    if os.path.exists(tmp):
-        os.unlink(tmp)
+    path = os.path.join(store_dir("demo_gpkg"), "plots.gpkg")
     write_geopackage_layer(
-        tmp, "plots", rows, [("fid", "INTEGER"), ("tag", "TEXT")]
+        path, "plots", rows, [("fid", "INTEGER"), ("tag", "TEXT")]
     )
-    os.replace(tmp, path)
     return path
 
 

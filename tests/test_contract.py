@@ -168,3 +168,24 @@ def test_registry_order_leads_with_unchecked_queries():
     assert set(qs[: len(failed)]) == failed
     assert set(qs[len(failed) : head]) == unchecked
     assert set(qs[head:]) == green
+
+
+def test_no_code_names_the_checkout_path():
+    """Code addresses the repository's own files relative to itself: a
+    hard-coded absolute checkout path makes every copy of the repository
+    read and write the one checkout it names."""
+    from pathlib import Path
+
+    root = Path(entrymod.__file__).resolve().parent
+    files = [
+        *(root / "n2khab_mhq_data_spark").rglob("*.py"),
+        *(root / "tools").glob("*.py"),
+        root / "bench.py",
+    ]
+    hits = [
+        f"{p.relative_to(root)}:{i}"
+        for p in files
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if str(root) in line
+    ]
+    assert not hits, hits

@@ -1,7 +1,8 @@
 """plans.shared: one value per (sf_dir, source-table fingerprints) and
 session — a second lookup reuses it, rewritten source data or a lookup
-from another session rebuilds it — and the registry names the build
-steps bench.py reports as ``build_seconds``."""
+from another session rebuilds it — the registry names the build steps
+bench.py reports as ``build_seconds``, and a step that writes files
+writes them under the session's Spark temp root."""
 
 from __future__ import annotations
 
@@ -75,4 +76,43 @@ def test_registry_names_the_bench_build_steps():
         "bm25_index",
         "copurchase_edges",
         "lsvi_levels",
+        "jsonl_store",
+        "snapshot_store",
+        "merge_store",
+        "optimize_store",
+        "orc_store",
+        "hive_store",
+        "drift_csv_store",
+        "quarantine_csv_store",
+        "demo_gpkg",
     }
+
+
+def test_store_is_written_under_the_session_temp_root(
+    spark, sf_dir, monkeypatch
+):
+    """A store step writes into a fresh directory under the running
+    context's SparkFiles root (deleted by ``spark.stop()``), and a
+    second lookup returns the same path without writing again."""
+    from pathlib import Path
+
+    from pyspark import SparkFiles
+
+    from n2khab_mhq_data_spark.plans import pipeline
+
+    entrymod.queries()
+    made = []
+
+    def counting_store_dir(name):
+        made.append(name)
+        return plans.store_dir(name)
+
+    monkeypatch.setattr(plans, "_SHARED_VALUES", {})  # build afresh
+    monkeypatch.setattr(pipeline, "store_dir", counting_store_dir)
+    get = plans.SHARED["quarantine_csv_store"]
+    path = get(spark, sf_dir)
+    root = Path(SparkFiles.getRootDirectory()).resolve()
+    assert Path(path).resolve().parent == root
+    assert (Path(path) / "feed.csv").is_file()
+    assert get(spark, sf_dir) == path
+    assert made == ["quarantine_csv_store"]

@@ -36,8 +36,9 @@ def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
         path = f"{sf_dir}/{t}.parquet"
-        # Spark-written tables are DIRECTORIES of part files (the
-        # .scale/sf1.0 tier); the driver's testdata is single files
+        # Spark-written tables are DIRECTORIES of part files (the sf1.0
+        # tier, tools/make_sf1.py's DST); the driver's testdata is single
+        # files
         if os.path.isdir(path):
             path = f"{path}/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")

@@ -18,7 +18,9 @@ manufacturing artificial quadratic blowups:
 
 region/nation stay fixed (TPC-H semantics: 5/25 rows at every SF).
 
-Output: /root/repo/.scale/sf1.0/*.parquet (gitignored scratch).
+Output: ``.scale/sf1.0/*.parquet`` under the repository root (``DST``,
+gitignored scratch); bench.py, tools/scale_probe.py and
+tools/sweep_delta.py read the tier from there.
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from n2khab_mhq_data_spark.session import get_spark  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
-DST = "/root/repo/.scale/sf1.0"
+DST = str(Path(__file__).resolve().parent.parent / ".scale" / "sf1.0")
 SHIFT = 100_000_000
 REPLICAS = 10
 

@@ -30,6 +30,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from n2khab_mhq_data_spark.session import get_spark  # noqa: E402
 from perfbench.spans import Tracer  # noqa: E402
+from tools.make_sf1 import DST as SF1  # noqa: E402
 from tools.timing import sample  # noqa: E402
 
 # one representative per family, biased toward the shapes with
@@ -114,9 +115,6 @@ HEADLINE = [
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01",
        "/root/testdata/sf0.1"]
-# optional 4th tier: the 0.1 -> 1.0 leg (tools/make_sf1.py output) —
-# the slope where a hidden quadratic would first dominate real work
-SF1 = "/root/repo/.scale/sf1.0"
 
 
 def main() -> int:
@@ -136,6 +134,8 @@ def main() -> int:
            lambda: qs["p1_select_rename"](spark, SFS[0]))
 
     sfs = list(SFS)
+    # optional 4th tier: the 0.1 -> 1.0 leg (tools/make_sf1.py output) —
+    # the slope where a hidden quadratic would first dominate real work
     if Path(SF1).is_dir():
         sfs.append(SF1)
         print("sf1.0 tier found — probing the 0.1 -> 1.0 leg too")

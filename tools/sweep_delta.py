@@ -32,13 +32,14 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from tools.make_sf1 import DST as SF1_DIR  # noqa: E402
+
 BASELINE = Path(__file__).resolve().parent / "plan_fingerprints.json"
 FP_SF_DIR = "/root/testdata/sf0.001"  # fingerprints only need a schema-true dir
 # The core count is part of many plans (shuffle.partitions, repartition by
 # defaultParallelism), so fingerprints are taken on a fixed one: a baseline
 # made on another machine would otherwise differ in dozens of queries.
 FP_CPUS = 4
-SF1_DIR = "/root/repo/.scale/sf1.0"
 
 
 def _normalize(plan: str) -> str:
